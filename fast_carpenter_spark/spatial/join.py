@@ -121,6 +121,30 @@ def polygon_covers(
     return spark.createDataFrame(pdf)
 
 
+def polygons_frame(spark, polys: list[dict]) -> DataFrame:
+    """The polygon layer (list of dicts) as the Spark table
+    ``spatial_join`` refines against: (poly_id, region, weight, ring_lon,
+    ring_lat)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("poly_id", T.StringType(), False),
+            T.StructField("region", T.StringType(), False),
+            T.StructField("weight", T.DoubleType(), False),
+            T.StructField("ring_lon", T.ArrayType(T.DoubleType(), False), False),
+            T.StructField("ring_lat", T.ArrayType(T.DoubleType(), False), False),
+        ]
+    )
+    # float() admits hand-written layers with integer coordinates/weights
+    rows = [
+        (d["poly_id"], d["region"], float(d["weight"]),
+         [float(v) for v in d["ring_lon"]], [float(v) for v in d["ring_lat"]])
+        for d in polys
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
 def spatial_join(
     points: DataFrame,
     polys_df: DataFrame,
@@ -234,14 +258,11 @@ class SpatialJoinStage:
     refine: str = "sql"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        from ..synth import polygons_df as _polys_df
-
         spark = df.sparkSession
         covers_pd, resolutions = polygon_covers_local(self.polygons, self.max_cells)
         covers = spark.createDataFrame(covers_pd)
-        pdf = _polys_df(spark, len(self.polygons))
         return spatial_join(
-            df, pdf, covers,
+            df, polygons_frame(spark, self.polygons), covers,
             lon_col=self.lon_col, lat_col=self.lat_col,
             strategy=self.strategy, nsalt=self.nsalt, refine=self.refine,
             resolutions=resolutions,

@@ -1,27 +1,34 @@
-"""kNN neighbor lists via cell-ring expansion.
+"""kNN neighbour lists: cell-ring join forms and the halo-exchange kernel.
 
 Per-document nearest neighbours: each document is represented by its first
-span's point; candidates are documents whose cell lies within Chebyshev
-radius ``ring`` of the query's cell at resolution ``res``; the top-k by
-(squared planar distance, neighbor doc_id) win — a deterministic tie-break
-so the DuckDB oracle reproduces the exact rows (SURVEY.md §7 risk 5).
+span's point; the top-k win by (distance, neighbour doc_id) — a
+deterministic tie-break so the DuckDB oracle reproduces the exact rows
+(SURVEY.md §7 risk 5).  Two executions of the same contract:
 
-Implementation is pure DataFrame algebra:
-* explode each point over its (2R+1)^2 ring cells (a tiny constant-size
-  ``sequence`` cross — codegen'd, no UDF);
-* hash equi-join ring cells against the points-by-cell table — the only
-  shuffle, keyed by BIGINT cell;
-* window ``row_number() over (partition by doc order by dist2, nbr)`` <= k.
-
-The bounded ring radius makes the operator a single join round — the
-scale-out path (vs. iterative expansion which needs unbounded rounds;
-documented trade-off in SURVEY.md §2.4).
+* **join forms** (``knn_bounded`` planar, ``knn_geo`` geodesic): pure
+  DataFrame algebra — explode each point over its ring cells, hash
+  equi-join them against the points-by-cell table (the only shuffle, keyed
+  by BIGINT cell), window ``row_number()`` <= k.  The bounded ring makes
+  this a single join round (vs. iterative expansion, SURVEY.md §2.4), but
+  every candidate pair is a shuffled join row: quadratic in any point mass.
+* **halo-exchange kernel** (``knn_local`` planar, ``knn_geo_local``
+  geodesic): one shared implementation, ``_halo_knn``.  Points shuffle once
+  to parent blocks of grid cells (plus a ghost copy to each block their
+  ring reaches), and one numpy function per block, ``_knn_block``,
+  evaluates the ring candidates as dense SIMD distance blocks.  Planar and
+  geodesic differ only in the point embedding (2-D (lon, lat) or the
+  unit-sphere chord space), the ring enumeration (constant and clamped, or
+  latitude-dependent and wrapped at the antimeridian) and an optional
+  radius cutoff.
 """
 
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
+from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import grid
@@ -65,12 +72,8 @@ def _topk_row_idx(d2, kk):
     3.7x on the pure blob, 3.7x blob+halo, 20x on few-distinct-value ties;
     exact-equality property-tested in ``tests/test_knn_topk_idx.py``.
     """
-    import os
-
-    import numpy as np
-
     rows, n = d2.shape
-    if kk >= n or n <= 64 or os.environ.get("SPARK_KNN_TOPK") == "argsort":
+    if kk >= n or n <= 64:
         return np.argsort(d2, axis=1, kind="stable")[:, :kk]
     mn = d2.min(axis=1, keepdims=True)
     eq0 = d2 == mn
@@ -177,49 +180,224 @@ def knn_bounded(
     return out
 
 
-def knn_local(
+# --- halo-exchange kernel (shared by knn_local and knn_geo_local) -----------
+
+# distance-matrix entries per dense block: bounds the kernel's temporaries
+# (the salted point-mass blocks are chunked to budget / n_candidates rows)
+_CHUNK_BUDGET = 3_000_000
+
+
+@dataclass(frozen=True)
+class _Ring:
+    """Ring enumeration of the halo kernel at grid ``res``: a query in
+    cell (cx, cy) sees the columns cx - rx .. cx + rx and the rows
+    cy - ry .. cy + ry.  Rows clamp at the grid edge; columns wrap modulo
+    the grid when ``wrap`` (the antimeridian) and clamp otherwise.
+    ``rx_sql`` (Spark SQL over ``_lat``) is a point's replication
+    half-width: the widest rx of any query that can see it.  ``rx_cells``
+    maps query-cell rows to their rx inside the kernel."""
+
+    res: int
+    ry: int
+    wrap: bool
+    rx_sql: str
+    rx_cells: Callable[[np.ndarray], np.ndarray]
+
+
+def _planar_ring(res: int, ring: int) -> _Ring:
+    return _Ring(res, ring, False, str(ring), lambda qcy: np.full_like(qcy, ring))
+
+
+def _geo_ring(res: int, radius_km: float) -> _Ring:
+    """Geodesic ring: longitude half-widths follow the true geodesic-disk
+    bounding box (delta_lon = asin(sin r / cos lat), Matuschek), widening
+    with |lat| up to the FULL circle where a disk can cross the pole.  The
+    latitude window needs no pole case: |dlat| <= r_arc holds along any
+    geodesic of length r even across the pole, so the clamped
+    [cy - ry, cy + ry] is already a superset."""
+    r_ang = radius_km / EARTH_KM
+    deg_lat = math.degrees(r_ang)
+    sin_r = math.sin(r_ang)
+    n = 1 << res
+    cell_w, cell_h = 360.0 / n, 180.0 / n
+    # a candidate replicates as far as the widest query that can see it
+    # (one at |lat| + r_arc); full circle when that query's disk can
+    # cross the pole
+    rx_sql = (
+        f"CASE WHEN ABS(_lat) + {2.0 * deg_lat!r} >= 90.0 "
+        f"THEN CAST({n // 2} AS BIGINT) "
+        f"ELSE LEAST(CAST({n // 2} AS BIGINT), GREATEST(CAST(1 AS BIGINT), "
+        f"CAST(CEIL(DEGREES(ASIN(LEAST(1.0, {sin_r!r} / "
+        f"COS(RADIANS(ABS(_lat) + {deg_lat!r}))))) / {cell_w!r}) AS BIGINT))) "
+        f"END"
+    )
+
+    def rx_cells(qcy: np.ndarray) -> np.ndarray:
+        # ring half-width from the query cell's polemost edge; a cell whose
+        # queries can cross the pole rings the full circle
+        edge = np.maximum(np.abs(qcy * cell_h - 90.0),
+                          np.abs((qcy + 1) * cell_h - 90.0))
+        fullring = edge >= 90.0 - deg_lat
+        cos_edge = np.cos(np.radians(np.where(fullring, 0.0, edge)))
+        dl = np.degrees(np.arcsin(np.minimum(1.0, sin_r / cos_edge)))
+        return np.where(
+            fullring, n // 2, np.ceil(dl / cell_w).astype(np.int64)
+        ).clip(1, n // 2).astype(np.int64)
+
+    return _Ring(res, max(1, math.ceil(deg_lat / cell_h)), True, rx_sql, rx_cells)
+
+
+def _plane(lon: np.ndarray, lat: np.ndarray) -> tuple:
+    return lon, lat
+
+
+def _sphere(lon: np.ndarray, lat: np.ndarray) -> tuple:
+    """Unit-sphere embedding: |p - q|^2 is the chord^2 = 4 * hav(p, q) —
+    3 trig per point, zero per pair, and wrap-exact at the antimeridian
+    and the poles."""
+    rlon = np.radians(lon)
+    rlat = np.radians(lat)
+    cl = np.cos(rlat)
+    return cl * np.cos(rlon), cl * np.sin(rlon), np.sin(rlat)
+
+
+def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None,
+               k: int) -> tuple:
+    """Top-k of every query point of ONE halo block — the numpy body of the
+    halo kernel, a plain function of a pandas group.
+
+    ``pdf`` holds the block's members (``_id, _lon, _lat, _cell, _core``):
+    every member is a candidate, ``_core`` marks the queries.  Per query,
+    the k nearest ring candidates other than itself by (squared distance
+    in the ``embed`` space, neighbour id), minus those beyond ``cut2``
+    when given.  Returns (query id, neighbour id, rank, squared distance)
+    arrays."""
+    # rows sorted by (cell, id): packed cells order by x then y, so each
+    # ring column's y-window is one contiguous slice
+    cell = pdf["_cell"].to_numpy()
+    order = np.lexsort((pdf["_id"].to_numpy(), cell))
+    cell = cell[order]
+    ids = pdf["_id"].to_numpy()[order]
+    core = pdf["_core"].to_numpy()[order]
+    if not core.any() or len(ids) < 2:
+        return (np.empty(0, np.int64),) * 3 + (np.empty(0),)
+    xyz = embed(pdf["_lon"].to_numpy()[order], pdf["_lat"].to_numpy()[order])
+    res, n = ring.res, 1 << ring.res
+    # query rows grouped by cell: the queries of qcells[ci] are
+    # qrows[qoff[ci]:qoff[ci + 1]]
+    qrows = np.nonzero(core)[0]
+    qcells, qoff = np.unique(cell[qrows], return_index=True)
+    qoff = np.append(qoff, len(qrows))
+    _, qcx, qcy = grid.unpack_cells(qcells)
+    ylo = np.maximum(qcy - ring.ry, 0)
+    yhi = np.minimum(qcy + ring.ry, n - 1)
+    # ragged ring-column table: per query cell, cnt distinct columns from
+    # x0; one vectorized searchsorted over every (cell, column)
+    rx = ring.rx_cells(qcy)
+    if ring.wrap:
+        x0 = qcx - np.minimum(rx, n // 2)
+        cnt = np.minimum(2 * rx + 1, n)
+    else:
+        x0 = np.maximum(qcx - rx, 0)
+        cnt = np.minimum(qcx + rx, n - 1) - x0 + 1
+    off = np.concatenate(([0], np.cumsum(cnt)))
+    rep = np.repeat(np.arange(len(qcells)), cnt)
+    tx = (x0[rep] + np.arange(off[-1], dtype=np.int64) - off[rep]) % n
+    col_s = np.searchsorted(cell, grid.pack_cells(res, tx, ylo[rep]), side="left")
+    # +1 on the packed value of the last ring row = exclusive end
+    col_e = np.searchsorted(cell, grid.pack_cells(res, tx, yhi[rep]) + 1, side="left")
+    # flatten all candidate row indices (ragged arange over the column
+    # slices), so each query cell's candidates are one O(1) slice
+    ln = col_e - col_s
+    cum = np.concatenate(([0], np.cumsum(ln)))
+    flat = (
+        np.arange(cum[-1], dtype=np.int64)
+        - np.repeat(cum[:-1], ln)
+        + np.repeat(col_s, ln)
+    )
+    acc: list = []
+    for ci in range(len(qcells)):
+        q_rows = qrows[qoff[ci]:qoff[ci + 1]]
+        cand = flat[cum[off[ci]]:cum[off[ci + 1]]]
+        if len(cand) < 2:
+            continue
+        # candidates id-sorted, so column order is the id tie order —
+        # exact even for degenerate point masses (the synthetic hot cell
+        # collapses 24k docs onto ONE position, a 24k-deep tie class)
+        cand = cand[np.argsort(ids[cand], kind="stable")]
+        c_ids, c_xyz = ids[cand], [a[cand] for a in xyz]
+        q_ids, q_xyz = ids[q_rows], [a[q_rows] for a in xyz]
+        # top k+1 INCLUDING self, which is dropped from the small selected
+        # matrix afterwards — cheaper than masking self in the dense block
+        kk = min(k + 1, len(cand))
+        chunk = max(1, _CHUNK_BUDGET // len(cand))
+        for s0 in range(0, len(q_rows), chunk):
+            rows = slice(s0, s0 + chunk)
+            # chunked dense blocks: distance evals are the Theta(sum of
+            # density^2) bulk of kNN — keep them SIMD matrix ops; in-place
+            # square/add halves the temporaries
+            d2 = q_xyz[0][rows][:, None] - c_xyz[0][None, :]
+            np.multiply(d2, d2, out=d2)
+            for qa, ca in zip(q_xyz[1:], c_xyz[1:]):
+                t = qa[rows][:, None] - ca[None, :]
+                np.multiply(t, t, out=t)
+                d2 += t
+            idx = _topk_row_idx(d2, kk)
+            vals = np.take_along_axis(d2, idx, axis=1)
+            sel_ids = c_ids[idx]
+            keep = sel_ids != q_ids[rows][:, None]
+            if cut2 is not None:
+                # out-of-range tails sort last, so the top-kk stays
+                # complete for the bounded result
+                keep &= vals <= cut2
+            rank = np.cumsum(keep, axis=1, dtype=np.int64)
+            keep &= rank <= k
+            m = keep.ravel()
+            if m.any():
+                acc.append((np.repeat(q_ids[rows], kk)[m], sel_ids.ravel()[m],
+                            rank.ravel()[m], vals.ravel()[m]))
+    if not acc:
+        return (np.empty(0, np.int64),) * 3 + (np.empty(0),)
+    return tuple(np.concatenate(a) for a in zip(*acc))
+
+
+def _halo_knn(
     points: DataFrame,
     *,
-    id_col: str = "doc_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = 5,
-    ring: int = 1,
-    k: int = 3,
-    hot_threshold: int = 20000,
-    nsalt: int = 16,
-    group_offset: int = 5,
+    id_col: str,
+    lon_col: str,
+    lat_col: str,
+    ring: _Ring,
+    embed: Callable[..., tuple],
+    cut2: float | None,
+    k: int,
+    schema: str,
+    hot_threshold: int,
+    nsalt: int,
+    group_offset: int,
 ) -> DataFrame:
-    """Scale-path kNN: identical semantics to ``knn_bounded`` (ring
-    candidates, (dist2, id) tie-break) executed as HALO-EXCHANGE local
-    search — the ghost-zone pattern of distributed spatial codes.
-
-    Shape: the grid is tiled into parent blocks of 2^offset x 2^offset
-    cells; every point shuffles ONCE to its home block, plus a copy to
-    each adjacent block its ring bounding box touches (only the ~12%% of
-    points within ``ring`` cells of a block edge replicate at all, to at
-    most 4 blocks — measured ~1.2x total vs the 9x of replicating every
-    point to all (2R+1)^2 ring cells).  At 100 TB the shuffle + Arrow
-    transfer IS the cost, so the replication factor is the number that
-    matters.  Inside each block an ``applyInPandas`` kernel builds the
-    genuine ring candidate pairs with sorted-segment algebra (searchsorted
-    over packed cells, 9 constant ring offsets — no per-cell Python loop,
-    no dense all-pairs waste) and ranks them with one lexsort.
+    """HALO-EXCHANGE local kNN — the ghost-zone pattern of distributed
+    spatial codes.  The grid is tiled into parent blocks of 2^offset x
+    2^offset cells; every point shuffles ONCE to its home block (where it
+    is a query) plus a copy to every other block its ring bounding box
+    touches (where it is only a candidate).  Interior points — the vast
+    majority — land in one block; the shuffle + Arrow transfer is the cost
+    at scale, so that replication factor is the number that matters.
+    Inside each block ``_knn_block`` ranks the ring candidates.
 
     Hot-block skew: a block with > ``hot_threshold`` home points would be
     one straggler task, so hot blocks are SALTED — their queries split
-    over ``nsalt`` sub-groups (salt = hash(id) %% nsalt) while every
+    over ``nsalt`` sub-groups (salt = hash(id) % nsalt) while every
     candidate is replicated to all salts.  Same results, nsalt-way
-    parallel.
-    """
-    import numpy as np
+    parallel.  ``schema`` names the first 3 or 4 of the block's
+    (id, neighbor_id, rank, dist2) outputs."""
     import pandas as pd
 
-    if ring >= (1 << group_offset):
-        raise ValueError("ring must be smaller than the parent block size")
+    res = ring.res
     n = 1 << res
-    shift = res - max(res - group_offset, 0)
+    shift = min(res, group_offset)
     group_res = res - shift
+    nbx = max(1, n >> shift)
     pts = points.select(
         F.col(id_col).alias("_id"),
         F.col(lon_col).alias("_lon"),
@@ -227,40 +405,48 @@ def knn_local(
         F.expr(grid.cell_x_sql(lon_col, res, "spark")).alias("_cx"),
         F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
     )
-    # parent blocks of the ring bounding-box corners: with ring < block
-    # size the box spans <= 2 block columns and <= 2 block rows, so the
-    # (deduplicated) corner parents are exactly the blocks this point can
-    # serve as a candidate in; interior points (the vast majority) yield a
-    # single block and are NOT replicated
-    corners = (
-        f"array_distinct(array("
-        f"struct(shiftright(greatest(_cx - {ring}, 0), {shift}) AS px, "
-        f"       shiftright(greatest(_cy - {ring}, 0), {shift}) AS py), "
-        f"struct(shiftright(least(_cx + {ring}, {n - 1}), {shift}) AS px, "
-        f"       shiftright(greatest(_cy - {ring}, 0), {shift}) AS py), "
-        f"struct(shiftright(greatest(_cx - {ring}, 0), {shift}) AS px, "
-        f"       shiftright(least(_cy + {ring}, {n - 1}), {shift}) AS py), "
-        f"struct(shiftright(least(_cx + {ring}, {n - 1}), {shift}) AS px, "
-        f"       shiftright(least(_cy + {ring}, {n - 1}), {shift}) AS py)))"
+    rx = ring.rx_sql
+    if ring.wrap:
+        xlo, xhi = f"_cx - {rx}", f"_cx + {rx}"
+    else:
+        xlo, xhi = f"greatest(_cx - {rx}, 0)", f"least(_cx + {rx}, {n - 1})"
+    # ALL parent blocks the ring bbox touches — a wide ring can span many
+    # block columns, all of them at the pole.  Arithmetic shiftright floors
+    # negative cell offsets, pmod wraps block columns across the
+    # antimeridian (a no-op on a clamped range), and at most nbx
+    # consecutive columns keep the wrapped ones distinct.  Two explodes of
+    # plain sequences stay in generated code; the same enumeration as
+    # transform()/array_distinct lambdas runs interpreted (measured
+    # +0.3 s per 400k points at local[4]).
+    bx0 = f"shiftright({xlo}, {shift})"
+    bxs = f"sequence({bx0}, least(shiftright({xhi}, {shift}), {bx0} + {nbx - 1}))"
+    bys = (
+        f"sequence(shiftright(greatest(_cy - {ring.ry}, 0), {shift}), "
+        f"shiftright(least(_cy + {ring.ry}, {n - 1}), {shift}))"
     )
-    members = pts.select(
-        "_id", "_lon", "_lat",
-        F.expr(grid.pack_sql(res, "_cx", "_cy")).alias("_cell"),
-        F.expr(grid.pack_sql(group_res, f"shiftright(_cx, {shift})",
-                             f"shiftright(_cy, {shift})")).alias("_home_g"),
-        F.explode(F.expr(corners)).alias("_pc"),
-    ).select(
-        "_id", "_lon", "_lat", "_cell",
-        F.expr(grid.pack_sql(group_res, "_pc.px", "_pc.py")).alias("_gcell"),
-        (F.col("_home_g") == F.expr(grid.pack_sql(group_res, "_pc.px", "_pc.py"))).alias("_core"),
+    home = grid.pack_sql(group_res, f"shiftright(_cx, {shift})", f"shiftright(_cy, {shift})")
+    gcell = F.expr(grid.pack_sql(group_res, f"pmod(_bx, {nbx})", "_by"))
+    members = (
+        pts.select(
+            "_id", "_lon", "_lat", "_cy",
+            F.expr(grid.pack_sql(res, "_cx", "_cy")).alias("_cell"),
+            F.expr(home).alias("_home_g"),
+            F.explode(F.expr(bxs)).alias("_bx"),
+        )
+        .select(
+            "_id", "_lon", "_lat", "_cell", "_home_g", "_bx",
+            F.explode(F.expr(bys)).alias("_by"),
+        )
+        .select(
+            "_id", "_lon", "_lat", "_cell",
+            gcell.alias("_gcell"),
+            (F.col("_home_g") == gcell).alias("_core"),
+        )
     )
 
     # hot-BLOCK detection: tiny aggregate over home blocks, broadcast back
     hot = (
-        pts.groupBy(
-            F.expr(grid.pack_sql(group_res, f"shiftright(_cx, {shift})",
-                                 f"shiftright(_cy, {shift})")).alias("_gcell")
-        )
+        pts.groupBy(F.expr(home).alias("_gcell"))
         .count()
         .filter(F.col("count") > hot_threshold)
         .select("_gcell")
@@ -283,111 +469,45 @@ def knn_local(
         )
         # a point is a QUERY only in its own salt sub-group of its home block
         .withColumn("_core", F.col("_core") & (F.col("_salt") == F.col("_my_salt")))
-        .drop("_hot", "_my_salt", "_home_g")
+        .drop("_hot", "_my_salt")
     )
 
-    out_schema = f"{id_col} long, neighbor_id long, rank int, dist2 double"
-    empty = pd.DataFrame(
-        {id_col: [], "neighbor_id": [], "rank": [], "dist2": []}
-    ).astype(
-        {id_col: "int64", "neighbor_id": "int64", "rank": "int32", "dist2": "float64"}
-    )
+    names = [f.split()[0] for f in schema.split(",")]
 
     def local_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows sorted by (cell, id): packed ids order columns by x then y,
-        # so each x-column is one contiguous run ordered by y — a 3x3 ring
-        # neighborhood is (2R+1) contiguous slices, one per column
-        cell = pdf["_cell"].to_numpy()
-        order = np.lexsort((pdf["_id"].to_numpy(), cell))
-        cell = cell[order]
-        ids = pdf["_id"].to_numpy()[order]
-        lon = pdf["_lon"].to_numpy()[order]
-        lat = pdf["_lat"].to_numpy()[order]
-        core = pdf["_core"].to_numpy()[order]
-        if not core.any() or len(ids) < 2:
-            return empty.copy()
-        # occupied QUERY cells and their segment bounds
-        qcells = np.unique(cell[core])
-        _, qcx, qcy = grid.unpack_cells(qcells)
-        qseg_s = np.searchsorted(cell, qcells, side="left")
-        qseg_e = np.searchsorted(cell, qcells, side="right")
-        # per query cell, one candidate slice per ring column — all bounds
-        # found with vectorized searchsorted over packed (x', y +- ring)
-        ncols = 2 * ring + 1
-        col_s = np.empty((ncols, len(qcells)), dtype=np.int64)
-        col_e = np.empty((ncols, len(qcells)), dtype=np.int64)
-        ylo = np.maximum(qcy - ring, 0)
-        yhi = np.minimum(qcy + ring, n - 1)
-        for j, dx in enumerate(range(-ring, ring + 1)):
-            tx = qcx + dx
-            lo = grid.pack_cells(res, tx, ylo)
-            # +1 on the packed value of the last ring row = exclusive end
-            hi = grid.pack_cells(res, tx, yhi) + 1
-            s = np.searchsorted(cell, lo, side="left")
-            e = np.searchsorted(cell, hi, side="left")
-            oob = (tx < 0) | (tx >= n)
-            s[oob] = 0
-            e[oob] = 0
-            col_s[j] = s
-            col_e[j] = e
-        acc: list = []
-        for ci in range(len(qcells)):
-            q_rows = np.arange(qseg_s[ci], qseg_e[ci])
-            q_rows = q_rows[core[qseg_s[ci]:qseg_e[ci]]]
-            if len(q_rows) == 0:
-                continue
-            cand = np.concatenate(
-                [np.arange(col_s[j, ci], col_e[j, ci]) for j in range(ncols)]
-            )
-            if len(cand) < 2:
-                continue
-            # candidates id-sorted so the stable argsort's tie order is id
-            cand = cand[np.argsort(ids[cand], kind="stable")]
-            c_ids, c_lon, c_lat = ids[cand], lon[cand], lat[cand]
-            q_ids, q_lon, q_lat = ids[q_rows], lon[q_rows], lat[q_rows]
-            # top k+1 INCLUDING self, which is dropped from the small
-            # selected matrix afterwards — cheaper than masking self with a
-            # dense eq matrix + inf assignment (two full passes saved)
-            kk = min(k + 1, len(cand))
-            # chunked dense blocks: distance evals are the Theta(sum of
-            # density^2) bulk of kNN — keep them as SIMD matrix ops; in-place
-            # square/add halves the temporaries
-            chunk = max(1, int(4_000_000 // len(cand)))
-            for s0 in range(0, len(q_rows), chunk):
-                d2 = q_lon[s0:s0 + chunk][:, None] - c_lon[None, :]
-                np.multiply(d2, d2, out=d2)
-                t = q_lat[s0:s0 + chunk][:, None] - c_lat[None, :]
-                np.multiply(t, t, out=t)
-                d2 += t
-                # exact (dist2, id) top-kk on id-ordered candidates —
-                # argpartition fast path, see _topk_row_idx
-                idx = _topk_row_idx(d2, kk)
-                vals = np.take_along_axis(d2, idx, axis=1)
-                sel_ids = c_ids[idx]
-                keep = sel_ids != q_ids[s0:s0 + chunk][:, None]
-                rank = np.cumsum(keep, axis=1, dtype=np.int32)
-                keep &= rank <= k
-                m = keep.ravel()
-                acc.append(
-                    (
-                        np.repeat(q_ids[s0:s0 + chunk], kk)[m],
-                        sel_ids.ravel()[m],
-                        rank.ravel()[m],
-                        vals.ravel()[m],
-                    )
-                )
-        if not acc:
-            return empty.copy()
-        return pd.DataFrame(
-            {
-                id_col: np.concatenate([a[0] for a in acc]),
-                "neighbor_id": np.concatenate([a[1] for a in acc]),
-                "rank": np.concatenate([a[2] for a in acc]),
-                "dist2": np.concatenate([a[3] for a in acc]),
-            }
-        )
+        # Arrow casts to the declared schema types (rank int / long)
+        return pd.DataFrame(dict(zip(names, _knn_block(pdf, ring, embed, cut2, k))))
 
-    return members.groupBy("_gcell", "_salt").applyInPandas(local_topk, schema=out_schema)
+    return members.groupBy("_gcell", "_salt").applyInPandas(local_topk, schema=schema)
+
+
+def knn_local(
+    points: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res: int = 5,
+    ring: int = 1,
+    k: int = 3,
+    hot_threshold: int = 20000,
+    nsalt: int = 16,
+    group_offset: int = 5,
+) -> DataFrame:
+    """Scale-path kNN: identical semantics to ``knn_bounded`` (ring
+    candidates, (dist2, id) tie-break) executed as the halo-exchange
+    kernel (``_halo_knn``) on the planar (lon, lat) embedding.  The ring
+    clamps at the grid edge (no antimeridian wrap), like the join form.
+    With ``ring`` below the block size a point replicates to at most 4
+    blocks (measured ~1.2x total vs the 9x of replicating every point to
+    all (2R+1)^2 ring cells); wider rings are enumerated in full.  Hot
+    blocks (> ``hot_threshold`` points) salt over ``nsalt`` tasks."""
+    return _halo_knn(
+        points, id_col=id_col, lon_col=lon_col, lat_col=lat_col,
+        ring=_planar_ring(res, ring), embed=_plane, cut2=None, k=k,
+        schema=f"{id_col} long, neighbor_id long, rank int, dist2 double",
+        hot_threshold=hot_threshold, nsalt=nsalt, group_offset=group_offset,
+    )
 
 
 def knn_oracle_sql(points_sql: str, *, res: int, ring: int, k: int) -> str:
@@ -669,12 +789,12 @@ def knn_geo(
     exploded JOIN ROWS, so its size is Theta(sum over cells of
     n_cell * n_ring) — a point-mass denser than ``radius_km`` makes this
     quadratic in the mass (h points within the radius -> h^2 join rows,
-    at ANY radius).  That regime belongs to the dense-block local kernel
-    (``knn_local``), whose per-cell distance evaluations are SIMD matrix
-    ops and whose hot blocks salt across tasks; a geodesic caller facing
-    point-masses should pre-split: mass cells -> knn_local (planar is
-    exact at sub-km extents), sparse remainder -> this ring join.
-    bench.py q7 encodes exactly that split."""
+    at ANY radius).  That regime belongs to the halo-exchange kernel
+    (``knn_geo_local``, same contract), whose per-block distance
+    evaluations are SIMD matrix ops and whose hot blocks salt across
+    tasks; bench.py q7 runs it on the full table, point mass included.
+    This join form stays the registered reference the kernel is tested
+    against."""
     cand = _geo_ring_candidates(
         points, radius_km=radius_km, id_col=id_col,
         lon_col=lon_col, lat_col=lat_col, res=res,
@@ -743,59 +863,33 @@ def knn_geo_local(
     """Scale-path geodesic bounded kNN: identical output contract to
     :func:`knn_geo` ((id, neighbor_id, rank), k nearest by great-circle
     distance within ``radius_km``, ties by neighbour id) executed as the
-    HALO-EXCHANGE local search of :func:`knn_local` instead of a
-    corpus-sized candidate join.
+    halo-exchange kernel (``_halo_knn``) instead of a corpus-sized
+    candidate join.
 
     Why: at realistic densities most ring candidates are genuine
     within-radius pairs (measured 56M true / 61M candidates at the bench
     grain), so the ring JOIN's cost floor is materializing every pair as
-    a shuffled join row.  The local kernel evaluates the same pairs as
-    SIMD matrix blocks inside ``applyInPandas`` — the only shuffle is the
+    a shuffled join row.  The kernel evaluates the same pairs as SIMD
+    matrix blocks inside ``applyInPandas`` — the only shuffle is the
     ~1.1x halo replication of the points themselves.
 
-    The geodesic metric reduces EXACTLY to the planar kernel's squared-
-    Euclidean form via the unit-sphere CHORD: with p = (cos lat cos lon,
-    cos lat sin lon, sin lat), |p - q|^2 = 4 * hav(p, q) = (2 sin(d/2R))^2
-    — strictly monotone in great-circle d, so ``rank by chord^2`` is rank
-    by distance and ``chord^2 <= (2 sin(r/2R))^2`` is the exact radius
-    filter, with zero per-pair trig (3 trig per POINT, inside the
-    kernel).  Chord distances are wrap-exact, so neither the antimeridian
-    nor the poles need a metric special case — only the GRID wraps:
+    The geodesic metric is the planar kernel's squared-Euclidean form in
+    the unit-sphere embedding (``_sphere``): |p - q|^2 = 4 * hav(p, q) =
+    (2 sin(d/2R))^2 is strictly monotone in great-circle d, so ``rank by
+    chord^2`` is rank by distance and ``chord^2 <= (2 sin(r/2R))^2`` is
+    the exact radius cutoff, with zero per-pair trig.  Chord distances are
+    wrap-exact, so only the GRID wraps (``_geo_ring``): latitude-dependent
+    ring widths up to the full circle near the poles, block columns
+    wrapped across the antimeridian.
 
-    * longitude ring half-widths follow the true geodesic-disk bounding
-      box (delta_lon = asin(sin r / cos lat), Matuschek), widening with
-      |lat| up to the FULL circle where a disk can cross the pole; a
-      candidate replicates as far as the widest query that can see it
-      (its rx is evaluated at |lat| + r_arc);
-    * parent blocks are enumerated with a wrapped ``sequence`` (arithmetic
-      shiftright floors negative cells, pmod wraps block columns), so a
-      ring spanning many block columns — up to all of them at the pole —
-      replicates to each, while interior points still land in one block;
-    * the latitude window needs no pole case at all: |dlat| <= r_arc
-      holds along any geodesic of length r even when it crosses the pole,
-      so the [cy - ry, cy + ry] clamp is already a superset.
-
-    Top-k inside the kernel is knn_local's stable argsort over id-sorted
-    candidates (exact (chord^2, id) tie order) with the radius mask
-    applied to the selected slice.  A tie-complete threshold select was
-    tried and rejected: a degenerate point mass (the synthetic hot cell
-    is 24k docs at ONE position) is a tie class the size of the cell, so
-    "keep everything <= the k-th value" materializes the full pair
-    matrix, while stable argsort stays O(n log n) per row regardless of
-    tie depth.
-
-    Hot-block skew is salted exactly as in knn_local (queries split over
-    ``nsalt`` sub-groups, candidates replicated to all salts).
+    Top-k inside the kernel is ``_topk_row_idx`` (exact argpartition
+    selection, same indices as a stable argsort) over id-sorted
+    candidates, with the radius cutoff applied to the selected slice.
+    Hot-block skew is salted as in knn_local.
 
     Like knn_geo, chord^2 values never reach the output (trig ulps differ
     between numpy / Spark / DuckDB): (id, neighbor_id, rank) only.
     """
-    import numpy as np
-    import pandas as pd
-
-    r_ang = radius_km / EARTH_KM
-    deg_lat = math.degrees(r_ang)
-    sin_r = math.sin(r_ang)
     if res is None:
         # radius-derived res makes the cell ~ the radius (rings stay 3x3);
         # when the caller supplies the point count, coarsen toward the
@@ -807,215 +901,20 @@ def knn_geo_local(
         # bench grain, 2.4M pts / 5 km: res 10 is 1.16x faster than res 11;
         # res 8 is 4x SLOWER).  Never finer than the radius res: rings
         # must still span the radius, so finer cells only widen rx.
+        deg_lat = math.degrees(radius_km / EARTH_KM)
         r_res = max(1, min(20, int(math.floor(math.log2(180.0 / deg_lat)))))
         if n_points is None:
             res = r_res
         else:
             res = min(r_res, max(r_res - 2, auto_res(n_points)))
-    n = 1 << res
-    shift = min(res, group_offset)
-    group_res = res - shift
-    nbx = max(1, n >> shift)
-    cell_w, cell_h = 360.0 / n, 180.0 / n
-    ry = max(1, math.ceil(deg_lat / cell_h))
-    chord2_max = 4.0 * hav_threshold(radius_km)
-
-    kpts = points.select(
-        F.col(id_col).alias("_id"),
-        F.col(lon_col).alias("_lon"),
-        F.col(lat_col).alias("_lat"),
-        F.expr(grid.cell_x_sql(lon_col, res, "spark")).alias("_cx"),
-        F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
-    )
-    # per-point replication half-width in cells: wide enough for the
-    # widest query that can see this point (one at |lat| + r_arc); full
-    # circle when such a query's disk can cross the pole
-    rx_pt = (
-        f"CASE WHEN ABS(_lat) + {2.0 * deg_lat!r} >= 90.0 "
-        f"THEN CAST({n // 2} AS BIGINT) "
-        f"ELSE LEAST(CAST({n // 2} AS BIGINT), GREATEST(CAST(1 AS BIGINT), "
-        f"CAST(CEIL(DEGREES(ASIN(LEAST(1.0, {sin_r!r} / "
-        f"COS(RADIANS(ABS(_lat) + {deg_lat!r}))))) / {cell_w!r}) AS BIGINT))) "
-        f"END"
-    )
-    # ALL parent blocks the ring bbox touches (a wide ring can span many
-    # block columns — all of them at the pole — so corner shortcuts would
-    # miss middle columns): arithmetic shiftright floors negative cell
-    # offsets, pmod wraps block columns across the antimeridian, latitude
-    # rows clamp.  Interior points still yield a single block.
-    blocks = (
-        f"array_distinct(flatten(transform("
-        f"sequence(shiftright(_cx - {rx_pt}, {shift}), "
-        f"         shiftright(_cx + {rx_pt}, {shift})), bx -> "
-        f"transform(sequence(shiftright(greatest(_cy - {ry}, 0), {shift}), "
-        f"                   shiftright(least(_cy + {ry}, {n - 1}), {shift})), "
-        f"by -> struct(pmod(bx, {nbx}) AS px, by AS py)))))"
-    )
-    members = kpts.select(
-        "_id", "_lon", "_lat",
-        F.expr(grid.pack_sql(res, "_cx", "_cy")).alias("_cell"),
-        F.expr(grid.pack_sql(group_res, f"shiftright(_cx, {shift})",
-                             f"shiftright(_cy, {shift})")).alias("_home_g"),
-        F.explode(F.expr(blocks)).alias("_pc"),
-    ).select(
-        "_id", "_lon", "_lat", "_cell",
-        F.expr(grid.pack_sql(group_res, "_pc.px", "_pc.py")).alias("_gcell"),
-        (F.col("_home_g") == F.expr(grid.pack_sql(group_res, "_pc.px", "_pc.py"))).alias("_core"),
+    return _halo_knn(
+        points, id_col=id_col, lon_col=lon_col, lat_col=lat_col,
+        ring=_geo_ring(res, radius_km), embed=_sphere,
+        cut2=4.0 * hav_threshold(radius_km), k=k,
+        schema=f"{id_col} long, neighbor_id long, rank long",
+        hot_threshold=hot_threshold, nsalt=nsalt, group_offset=group_offset,
     )
 
-    # hot-BLOCK detection + salting: identical to knn_local
-    hot = (
-        kpts.groupBy(
-            F.expr(grid.pack_sql(group_res, f"shiftright(_cx, {shift})",
-                                 f"shiftright(_cy, {shift})")).alias("_gcell")
-        )
-        .count()
-        .filter(F.col("count") > hot_threshold)
-        .select("_gcell")
-    )
-    members = members.join(
-        F.broadcast(hot.withColumn("_hot", F.lit(True))), "_gcell", "left"
-    ).withColumn("_hot", F.coalesce("_hot", F.lit(False)))
-    members = (
-        members.withColumn(
-            "_my_salt",
-            F.when(F.col("_hot"), F.pmod(F.xxhash64("_id"), F.lit(nsalt)).cast("int"))
-            .otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.when(F.col("_hot"), F.expr(f"sequence(0, {nsalt - 1})"))
-                .otherwise(F.expr("array(0)"))
-            ),
-        )
-        .withColumn("_core", F.col("_core") & (F.col("_salt") == F.col("_my_salt")))
-        .drop("_hot", "_my_salt", "_home_g")
-    )
-
-    out_schema = f"{id_col} long, neighbor_id long, rank long"
-    empty = pd.DataFrame({id_col: [], "neighbor_id": [], "rank": []}).astype(
-        {id_col: "int64", "neighbor_id": "int64", "rank": "int64"}
-    )
-
-    def local_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        cell = pdf["_cell"].to_numpy()
-        order = np.lexsort((pdf["_id"].to_numpy(), cell))
-        cell = cell[order]
-        ids = pdf["_id"].to_numpy()[order]
-        lon = pdf["_lon"].to_numpy()[order]
-        lat = pdf["_lat"].to_numpy()[order]
-        core = pdf["_core"].to_numpy()[order]
-        if not core.any() or len(ids) < 2:
-            return empty.copy()
-        # unit-sphere chord coordinates: 3 trig per point, zero per pair
-        rlon = np.radians(lon)
-        rlat = np.radians(lat)
-        cl = np.cos(rlat)
-        X = cl * np.cos(rlon)
-        Y = cl * np.sin(rlon)
-        Z = np.sin(rlat)
-        qcells = np.unique(cell[core])
-        _, qcx, qcy = grid.unpack_cells(qcells)
-        qseg_s = np.searchsorted(cell, qcells, side="left")
-        qseg_e = np.searchsorted(cell, qcells, side="right")
-        ylo = np.maximum(qcy - ry, 0)
-        yhi = np.minimum(qcy + ry, n - 1)
-        # per-qcell ring half-width from the cell's polemost edge; a cell
-        # whose queries can cross the pole rings the full circle
-        edge = np.maximum(np.abs(qcy * cell_h - 90.0),
-                          np.abs((qcy + 1) * cell_h - 90.0))
-        fullring = edge >= 90.0 - deg_lat
-        cos_edge = np.cos(np.radians(np.where(fullring, 0.0, edge)))
-        dl = np.degrees(np.arcsin(np.minimum(1.0, sin_r / cos_edge)))
-        rx_ci = np.where(
-            fullring, n // 2,
-            np.ceil(dl / cell_w).astype(np.int64),
-        ).clip(1, n // 2).astype(np.int64)
-        # ragged ring-column table: per qcell, cnt distinct wrapped
-        # columns; one vectorized searchsorted over every (cell, column)
-        cnt = np.minimum(2 * rx_ci + 1, n)
-        off = np.concatenate(([0], np.cumsum(cnt)))
-        rep = np.repeat(np.arange(len(qcells)), cnt)
-        dx = (np.arange(off[-1], dtype=np.int64) - off[rep]) - np.minimum(
-            rx_ci, n // 2
-        )[rep]
-        tx = (qcx[rep] + dx) % n
-        col_s = np.searchsorted(cell, grid.pack_cells(res, tx, ylo[rep]), side="left")
-        col_e = np.searchsorted(
-            cell, grid.pack_cells(res, tx, yhi[rep]) + 1, side="left"
-        )
-        # flatten all candidate row indices (ragged arange over the column
-        # slices), so each qcell's candidates are one O(1) slice
-        ln = col_e - col_s
-        cum = np.concatenate(([0], np.cumsum(ln)))
-        flat = (
-            np.arange(cum[-1], dtype=np.int64)
-            - np.repeat(cum[:-1], ln)
-            + np.repeat(col_s, ln)
-        )
-        acc: list = []
-        for ci in range(len(qcells)):
-            q_rows = np.arange(qseg_s[ci], qseg_e[ci])
-            q_rows = q_rows[core[qseg_s[ci]:qseg_e[ci]]]
-            if len(q_rows) == 0:
-                continue
-            cand = flat[cum[off[ci]]:cum[off[ci + 1]]]
-            if len(cand) < 2:
-                continue
-            # candidates id-sorted so the stable argsort's tie order is id
-            # — exact even for degenerate point masses (the synthetic hot
-            # cell collapses 24k docs onto ONE position, a 24k-deep tie
-            # class at chord^2 = 0)
-            cand = cand[np.argsort(ids[cand], kind="stable")]
-            c_ids = ids[cand]
-            cX, cY, cZ = X[cand], Y[cand], Z[cand]
-            q_ids = ids[q_rows]
-            qX, qY, qZ = X[q_rows], Y[q_rows], Z[q_rows]
-            kk = min(k + 1, len(cand))
-            chunk = max(1, int(3_000_000 // len(cand)))
-            for s0 in range(0, len(q_rows), chunk):
-                d2 = qX[s0:s0 + chunk][:, None] - cX[None, :]
-                np.multiply(d2, d2, out=d2)
-                t = qY[s0:s0 + chunk][:, None] - cY[None, :]
-                np.multiply(t, t, out=t)
-                d2 += t
-                t = qZ[s0:s0 + chunk][:, None] - cZ[None, :]
-                np.multiply(t, t, out=t)
-                d2 += t
-                # top k+1 INCLUDING self by (chord^2, id), as in knn_local;
-                # the radius mask drops out-of-range tails (they sort last,
-                # so top-kk is still complete for the bounded result)
-                idx = _topk_row_idx(d2, kk)
-                vals = np.take_along_axis(d2, idx, axis=1)
-                sel_ids = c_ids[idx]
-                keep = (sel_ids != q_ids[s0:s0 + chunk][:, None]) & (
-                    vals <= chord2_max
-                )
-                rank = np.cumsum(keep, axis=1, dtype=np.int64)
-                keep &= rank <= k
-                m = keep.ravel()
-                if m.any():
-                    acc.append(
-                        (
-                            np.repeat(q_ids[s0:s0 + chunk], kk)[m],
-                            sel_ids.ravel()[m],
-                            rank.ravel()[m],
-                        )
-                    )
-        if not acc:
-            return empty.copy()
-        return pd.DataFrame(
-            {
-                id_col: np.concatenate([a[0] for a in acc]),
-                "neighbor_id": np.concatenate([a[1] for a in acc]),
-                "rank": np.concatenate([a[2] for a in acc]).astype("int64"),
-            }
-        )
-
-    return members.groupBy("_gcell", "_salt").applyInPandas(
-        local_topk, schema=out_schema
-    )
 
 def radius_join_geo_oracle_sql(points_sql: str, *, radius_km: float) -> str:
     """DuckDB ground truth: brute-force all pairs, exact haversine filter

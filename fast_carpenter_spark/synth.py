@@ -216,18 +216,9 @@ def polygons(n: int = N_POLYGONS) -> list[dict]:
 
 
 def polygons_df(spark, n: int = N_POLYGONS):
-    from pyspark.sql import types as T
+    from .spatial.join import polygons_frame
 
-    schema = T.StructType(
-        [
-            T.StructField("poly_id", T.StringType(), False),
-            T.StructField("region", T.StringType(), False),
-            T.StructField("weight", T.DoubleType(), False),
-            T.StructField("ring_lon", T.ArrayType(T.DoubleType(), False), False),
-            T.StructField("ring_lat", T.ArrayType(T.DoubleType(), False), False),
-        ]
-    )
-    return spark.createDataFrame([tuple(d.values()) for d in polygons(n)], schema=schema)
+    return polygons_frame(spark, polygons(n))
 
 
 def _dbl(v: float, dialect: str) -> str:

@@ -4,10 +4,10 @@ The local kernel (halo-exchange blocks + unit-sphere chord SIMD) must be
 output-identical to the ring-join reference implementation — same bounded
 kNN contract, same (distance, neighbor_id) tie order — across the shapes
 that break naive grid kernels: antimeridian-straddling clusters (wrapped
-block columns), polar clusters (cap split + full-circle rings), exact
-duplicate positions (tie-complete threshold selection), hot-cell salting,
-multi-block-column rings (the >2-column replication case), and the
-fallback guard for over-fine resolutions.
+block columns), polar clusters (full-circle rings), exact duplicate
+positions (deep tie classes broken by neighbour id), hot-cell salting,
+multi-block-column rings (the >2-column replication case), and over-fine
+resolutions whose rings span several block rows.
 """
 
 import sys
