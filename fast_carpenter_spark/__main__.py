@@ -11,6 +11,10 @@ stage sequence (ref: docs/processing_config.rst:23-33).  Outputs land under
 selection/stage.py:46), per-dataset cutflow counter CSVs, and a run
 manifest (ref: bookkeeping.py:71-77).
 
+Each dataset is scanned once: writing ``result.parquet`` is the only Spark
+action; the other formats are written from that parquet read back, and
+``cutflow.csv`` holds the counters the CutFlow stages observed in that write.
+
 Differences from the reference, by design:
 * each dataset is one DataFrame, not a chunk loop — Catalyst plans the
   whole sequence; per-dataset results are unioned with a ``dataset``
@@ -29,6 +33,8 @@ import re
 import sys
 import time
 
+import pandas as pd
+import pyarrow.parquet as pq
 import yaml
 
 from pyspark.sql import functions as F
@@ -106,19 +112,14 @@ def main(argv=None) -> int:
     t0 = time.time()
 
     results = []
-    counter_frames = []
+    pipes = []
     if not datasets:
         sys.exit("config error: 'datasets' list is empty — nothing to process")
     for i, ds in enumerate(datasets):
         is_mc = ds.get("eventtype", "mc") == "mc"
         pipe = specialize(pipeline, is_mc)
-        out = pipe.apply(load_dataset(spark, ds, input_table, i))
-        results.append(out)
-        for stage_name, ctr in pipe.metrics().items():
-            counter_frames.append(
-                ctr.withColumn("dataset", F.lit(ds["name"]))
-                .withColumn("stage", F.lit(stage_name))
-            )
+        results.append(pipe.apply(load_dataset(spark, ds, input_table, i)))
+        pipes.append((ds["name"], pipe))
 
     final = results[0]
     for r in results[1:]:
@@ -154,18 +155,19 @@ def main(argv=None) -> int:
     if unknown_formats:
         sys.exit(f"config error: unsupported output_formats {sorted(unknown_formats)}"
                  f" (supported: {sorted(sink_writers)}; parquet is always written)")
-    final.write.mode("overwrite").parquet(os.path.join(args.outdir, "result.parquet"))
-    pdf = final.toPandas()
+    result_dir = os.path.join(args.outdir, "result.parquet")
+    final.write.mode("overwrite").parquet(result_dir)
+    pdf = pq.read_table(result_dir).to_pandas()  # part files in name order
     for fmt in formats:
         sink_writers[fmt](pdf, os.path.join(args.outdir, "result"))
-    n_counter_rows = 0
-    if counter_frames:
-        ctr = counter_frames[0]
-        for c in counter_frames[1:]:
-            ctr = ctr.unionByName(c)
-        cpdf = ctr.toPandas()
-        n_counter_rows = len(cpdf)
-        cpdf.to_csv(
+    cutflow = [
+        {**row, "dataset": name, "stage": stage_name}
+        for name, pipe in pipes
+        for stage_name, rows in pipe.metrics().items()
+        for row in rows
+    ]
+    if cutflow:
+        pd.DataFrame(cutflow).to_csv(
             os.path.join(args.outdir, "cutflow.csv"), index=False, float_format="%.17g"
         )
 
@@ -173,13 +175,13 @@ def main(argv=None) -> int:
         "datasets": datasets,
         "processing": processing,
         "rows": len(pdf),
-        "cutflow_rows": n_counter_rows,
+        "cutflow_rows": len(cutflow),
         "versions": {"python": sys.version.split()[0], "pyspark": spark.version},
         "wall_s": round(time.time() - t0, 2),
     }
     with open(os.path.join(args.outdir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
-    print(json.dumps({"rows": len(pdf), "cutflow_rows": n_counter_rows,
+    print(json.dumps({"rows": len(pdf), "cutflow_rows": len(cutflow),
                       "outdir": args.outdir, "wall_s": manifest["wall_s"]}))
     spark.stop()
     return 0

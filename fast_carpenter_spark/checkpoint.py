@@ -22,6 +22,8 @@ Spark-first design:
       metrics**: rows processed, wall seconds, and the cutflow counters
       (per-cut pass/fail, the reference's Counter protocol, ref:
       selection/filters.py:28-63).
+  The partial write is the unit's only Spark action; the metrics are
+  observed (``DataFrame.observe``) by that write.
   The ledger line is appended only after the partial parquet is fully
   written (write-ahead partial): a crash between the two just redoes the
   unit, and overwrite keeps it exact.
@@ -75,15 +77,16 @@ def merge_metrics(a: dict, b: dict) -> dict:
 class CheckpointedRun:
     """Resumable execution of ``job`` over independent file-group units.
 
-    ``job(df_unit) -> (partial_df, metrics)`` must return an associative
-    partial (pre-aggregated) plus a JSON-able metrics dict (cutflow
-    counters etc.).  ``merge`` collapses the union of partials to the final
-    table (default: sum BinnedDataframe measures).
+    ``job(df_unit) -> (partial_df, fetch_metrics)`` must return an
+    associative partial (pre-aggregated) plus a callable that, once the
+    partial has been written, returns a JSON-able metrics dict (cutflow
+    counters etc., observed by that write).  ``merge`` collapses the union
+    of partials to the final table (default: sum BinnedDataframe measures).
     """
 
     run_dir: str
     units: dict[str, list[str]]  # unit_id -> parquet file paths
-    job: Callable[[DataFrame], tuple[DataFrame, dict]]
+    job: Callable[[DataFrame], tuple[DataFrame, Callable[[], dict]]]
     merge: Callable[[DataFrame], DataFrame] = field(default=merge_binned_partials)
     description: dict = field(default_factory=dict)
 
@@ -167,10 +170,11 @@ class CheckpointedRun:
                 break
             t0 = time.time()
             df_unit = spark.read.parquet(*paths)
-            partial, metrics = self.job(df_unit)
+            partial, fetch_metrics = self.job(df_unit)
             # write-ahead partial, then ledger append: crash between the two
             # redoes the unit (overwrite), never double-counts it
             partial.write.mode("overwrite").parquet(self._partial_dir(unit_id))
+            metrics = fetch_metrics()
             entry = {
                 "unit_id": unit_id,
                 "files": paths,

@@ -35,7 +35,7 @@ import math
 import re
 import struct
 import zipfile
-from xml.sax.saxutils import escape
+from xml.sax.saxutils import escape, quoteattr
 
 import numpy as np
 import pandas as pd
@@ -178,7 +178,7 @@ def write_xlsx(pdf: pd.DataFrame, path: str, sheet_name: str = "binned") -> None
     )
     workbook = _XML_DECL + (
         f'<workbook xmlns="{_NS_MAIN}" xmlns:r="{_NS_DOC_REL}"><sheets>'
-        f'<sheet name="{escape(sheet_name)}" sheetId="1" r:id="rId1"/>'
+        f'<sheet name={quoteattr(sheet_name)} sheetId="1" r:id="rId1"/>'
         "</sheets></workbook>"
     )
     members = [
@@ -374,6 +374,10 @@ def write_msgpack(pdf: pd.DataFrame, path: str) -> None:
     dtypes, and per-column value arrays (column-major, like the engine's
     parquet output).  Readable by any standard msgpack decoder; NaN and
     +-inf survive as IEEE float64 payloads."""
+    names = [str(c) for c in pdf.columns]
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    if dupes:
+        raise ValueError(f"msgpack sink needs unique column names; duplicated: {dupes}")
     payload = {
         "format": _MSG_FORMAT,
         "columns": [

@@ -14,21 +14,25 @@ Faithful semantics:
   rows (ref: filters.py:196-205 OuterCounterIncrementer);
 * weighted counts per named weight column (ref: weights.py:13-36).
 
-Spark-first execution: the whole tree compiles to boolean SQL fragments;
-ALL counters for ALL nodes are computed in ONE aggregation pass
-(sum(CASE WHEN mask THEN w END) per node x type x weight) — the Spark
-analogue of the reference's single sweep per chunk — then unpivoted into
-the long cutflow table  (dataset?, cut_id, depth, cut, count_type,
-weight_name, value).  Filtering uses the root mask; events are dropped
-(CutFlow, ref: stage.py:219-222) or kept with a named bool column
-(SelectPhaseSpace, ref: stage.py:228-250).
+Spark-first execution: the whole tree compiles to boolean SQL fragments,
+and ALL counters for ALL nodes are one set of aggregates
+(sum(CASE WHEN mask THEN w END) per node x type x weight).  Pipelines
+(``CutFlowStage.apply``) attach them with ``DataFrame.observe``, so the
+action that consumes the stage output also counts — the analogue of the
+reference's single sweep per chunk, one scan of the input.
+``counters_table`` runs them as a standalone aggregation unpivoted into the
+long cutflow table (cut_id, depth, cut, count_type, weight_name, value):
+the path of the registered counter queries, and the tests' reference.
+Filtering uses the root mask; events are dropped (CutFlow, ref:
+stage.py:219-222) or kept with a named bool column (SelectPhaseSpace,
+ref: stage.py:228-250).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..expressions import compile_expression
 from .define import Variable, compile_variable
@@ -205,34 +209,29 @@ def spark_leaf_sql(df: DataFrame):
 # ---------------------------------------------------------------------------
 
 COUNT_TYPES = ("passed_only_cut", "passed_incl", "totals_incl")
+_ROW_KEYS = ("cut_id", "depth", "cut", "count_type", "weight_name")
+
+
+def _counters(specs, weights):
+    """(spec, count_type, mask or None, weight name, weight SQL) for every
+    counter, in cutflow-table row order (None mask = count everything)."""
+    weight_items = [("unweighted", "1.0")] + list((weights or {}).items())
+    for spec in specs:
+        masks = (spec.excl_sql, spec.after_sql, spec.before_sql)
+        for ctype, mask in zip(COUNT_TYPES, masks):
+            for wname, wsql in weight_items:
+                yield spec, ctype, mask, wname, f"CAST({wsql} AS DOUBLE)"
 
 
 def counter_agg_exprs(specs, weights: dict[str, str] | None = None):
-    """(agg Columns, meta rows) for the 3-counter protocol — shared by the
-    standalone aggregation (counters_table) and the observe() path."""
-    weights = weights or {}
-    weight_items = [("unweighted", "1.0")] + list(weights.items())
-    aggs = []
-    meta = []  # (colname, cut_id, depth, cut, count_type, weight_name)
-    for spec in specs:
-        masks = {
-            "passed_only_cut": spec.excl_sql,
-            "passed_incl": spec.after_sql,
-            "totals_incl": spec.before_sql,
-        }
-        for ctype in COUNT_TYPES:
-            mask = masks[ctype]
-            for wname, wsql in weight_items:
-                col = f"_c{len(meta)}"
-                if mask is None:
-                    agg_sql = f"sum(CAST({wsql} AS DOUBLE))"
-                else:
-                    agg_sql = (
-                        f"sum(CASE WHEN {mask} THEN CAST({wsql} AS DOUBLE) "
-                        f"ELSE 0.0 END)"
-                    )
-                aggs.append(F.expr(agg_sql).alias(col))
-                meta.append((col, spec.cut_id, spec.depth, spec.name, ctype, wname))
+    """(agg Columns, meta rows (colname, *_ROW_KEYS)) for the 3-counter
+    protocol — shared by counters_table and observe_counters."""
+    aggs, meta = [], []
+    for spec, ctype, mask, wname, w in _counters(specs, weights):
+        col = f"_c{len(meta)}"
+        agg = f"sum({w})" if mask is None else f"sum(CASE WHEN {mask} THEN {w} ELSE 0.0 END)"
+        aggs.append(F.expr(agg).alias(col))
+        meta.append((col, spec.cut_id, spec.depth, spec.name, ctype, wname))
     return aggs, meta
 
 
@@ -240,69 +239,72 @@ def counters_table(
     df: DataFrame,
     specs: list[CounterSpec],
     weights: dict[str, str] | None = None,
-    dataset_col: str | None = None,
 ) -> DataFrame:
     """Long-format cutflow table in a single aggregation.
 
-    Output schema: (dataset?, cut_id, depth, cut, count_type, weight_name,
+    Output schema: (cut_id, depth, cut, count_type, weight_name,
     value: double) — the flat equivalent of the reference's MultiIndex CSV
     (ref: filters.py:92-105 columns/to_dataframe).
     """
-    weights = weights or {}
     aggs, meta = counter_agg_exprs(specs, weights)
-    grouped = df.groupBy(dataset_col) if dataset_col else df.groupBy()
-    wide = grouped.agg(*aggs)
-
-    ids = [dataset_col] if dataset_col else []
-    long = wide.unpivot(
-        ids=ids, values=[m[0] for m in meta],
+    long = df.groupBy().agg(*aggs).unpivot(
+        ids=[], values=[m[0] for m in meta],
         variableColumnName="_key", valueColumnName="value",
     )
-    spark = df.sparkSession
-    meta_df = spark.createDataFrame(
-        [(m[0], m[1], m[2], m[3], m[4], m[5]) for m in meta],
+    meta_df = df.sparkSession.createDataFrame(
+        meta,
         schema="_key string, cut_id string, depth int, cut string, "
                "count_type string, weight_name string",
     )
-    out = long.join(F.broadcast(meta_df), "_key").drop("_key")
-    cols = ids + ["cut_id", "depth", "cut", "count_type", "weight_name", "value"]
-    return out.select(*cols).withColumn("value", F.coalesce("value", F.lit(0.0)))
+    out = long.join(F.broadcast(meta_df), "_key")
+    return out.select(*_ROW_KEYS, F.coalesce("value", F.lit(0.0)).alias("value"))
+
+
+def observe_counters(df: DataFrame, specs: list[CounterSpec], weights=None):
+    """Attach the counter aggregates to ``df`` through an unnamed
+    ``Observation``, so same-named stages of two datasets can share one
+    plan.  Returns (observed_df, fetch): ``fetch()`` gives counters_table's
+    rows as dicts once an action that consumed observed_df has finished,
+    and raises ValueError before that."""
+    aggs, meta = counter_agg_exprs(specs, weights)
+    obs = Observation()
+    observed = df.observe(obs, *aggs)
+    bus = df.sparkSession.sparkContext._jsc.sc().listenerBus()
+
+    def fetch() -> list[dict]:
+        done = obs._jo.future().isCompleted
+        if not done():
+            # completed by the listener event posted as the action ends:
+            # drain the bus so an action that has finished is always seen
+            bus.waitUntilEmpty()
+        if not done():
+            raise ValueError(
+                "cutflow counters come from the action that consumes the "
+                "stage output; run one (e.g. a write) before reading them"
+            )
+        got = obs.get
+        return [dict(zip(_ROW_KEYS, m[1:]), value=float(got[m[0]] or 0.0)) for m in meta]
+
+    return observed, fetch
 
 
 def oracle_counters_sql(
     specs: list[CounterSpec],
     input_sql: str,
     weights: dict[str, str] | None = None,
-    dataset_col: str | None = None,
 ) -> str:
     """DuckDB oracle: the same table as UNION ALL of SUM(CASE...) selects.
     ``specs`` must be compiled with duck-dialect leaf SQL."""
-    weights = weights or {}
-    weight_items = [("unweighted", "1.0")] + list(weights.items())
     selects = []
-    ds = f"{dataset_col}, " if dataset_col else ""
-    group = f" GROUP BY {dataset_col}" if dataset_col else ""
-    for spec in specs:
-        masks = {
-            "passed_only_cut": spec.excl_sql,
-            "passed_incl": spec.after_sql,
-            "totals_incl": spec.before_sql,
-        }
-        for ctype in COUNT_TYPES:
-            mask = masks[ctype]
-            for wname, wsql in weight_items:
-                agg = (
-                    f"SUM(CAST({wsql} AS DOUBLE))"
-                    if mask is None
-                    else f"SUM(CASE WHEN {mask} THEN CAST({wsql} AS DOUBLE) ELSE 0.0 END)"
-                )
-                name_lit = spec.name.replace("'", "''")
-                selects.append(
-                    f"SELECT {ds}'{spec.cut_id}' AS cut_id, "
-                    f"CAST({spec.depth} AS INT) AS depth, '{name_lit}' AS cut, "
-                    f"'{ctype}' AS count_type, '{wname}' AS weight_name, "
-                    f"COALESCE({agg}, 0.0) AS value FROM ({input_sql}){group}"
-                )
+    for spec, ctype, mask, wname, w in _counters(specs, weights):
+        agg = f"SUM({w})" if mask is None else f"SUM(CASE WHEN {mask} THEN {w} ELSE 0.0 END)"
+        name_lit = spec.name.replace("'", "''")
+        selects.append(
+            f"SELECT '{spec.cut_id}' AS cut_id, "
+            f"CAST({spec.depth} AS INT) AS depth, '{name_lit}' AS cut, "
+            f"'{ctype}' AS count_type, '{wname}' AS weight_name, "
+            f"COALESCE({agg}, 0.0) AS value FROM ({input_sql})"
+        )
     return "\nUNION ALL\n".join(selects)
 
 
@@ -319,12 +321,11 @@ class CutFlowStage:
     name: str
     selection: object
     weights: dict[str, str] = field(default_factory=dict)
-    dataset_col: str | None = None
     is_mc: bool = True
 
     def __post_init__(self):
         self.tree = parse_selection(self.selection)
-        self._last_counters: DataFrame | None = None
+        self._fetch_counters = None  # set by apply(); see observe_counters
 
     def _weights(self) -> dict[str, str]:
         # weights apply to MC only; data datasets count unweighted (the
@@ -339,41 +340,15 @@ class CutFlowStage:
 
     def counters(self, df: DataFrame) -> DataFrame:
         _, specs = self.compile(df)
-        return counters_table(df, specs, self._weights(), self.dataset_col)
+        return counters_table(df, specs, self._weights())
 
     def apply(self, df: DataFrame) -> DataFrame:
+        """Filter on the root mask.  The counters are observed on the input,
+        BEFORE the filter (masked-not-dropped totals, ref:
+        tree_adapter.py:574-600), by whichever action consumes the output."""
         root_mask, specs = self.compile(df)
-        self._last_counters = counters_table(df, specs, self._weights(), self.dataset_col)
-        return df.filter(F.expr(root_mask))
-
-    def apply_observed(self, df: DataFrame):
-        """Single-pass variant (SURVEY.md §7 risk 6): counters piggyback on
-        the SAME action that consumes the filtered data via df.observe() —
-        no second scan of the input.  Returns (filtered_df, fetch) where
-        ``fetch()`` (call AFTER an action on filtered_df) yields the same
-        long-format rows as counters().  Counters are computed BEFORE the
-        filter, preserving the masked-not-dropped totals semantics
-        (ref: tree_adapter.py:574-600)."""
-        from pyspark.sql import Observation
-
-        root_mask, specs = self.compile(df)
-        aggs, meta = counter_agg_exprs(specs, self._weights())
-        obs = Observation(f"cutflow_{self.name}")
-        observed = df.observe(obs, *aggs)
-        filtered = observed.filter(F.expr(root_mask))
-
-        def fetch() -> list[dict]:
-            got = obs.get
-            return [
-                {
-                    "cut_id": m[1], "depth": m[2], "cut": m[3],
-                    "count_type": m[4], "weight_name": m[5],
-                    "value": float(got[m[0]] or 0.0),
-                }
-                for m in meta
-            ]
-
-        return filtered, fetch
+        observed, self._fetch_counters = observe_counters(df, specs, self._weights())
+        return observed.filter(F.expr(root_mask))
 
 
 @dataclass
@@ -394,6 +369,3 @@ class SelectPhaseSpaceStage:
         root_mask, _ = compile_tree(self.tree, spark_leaf_sql(df))
         return df.withColumn(self.region_name, F.expr(root_mask))
 
-
-def build_selection(stage_name: str, config, weights: dict[str, str] | None = None) -> CutFlowStage:
-    return CutFlowStage(name=stage_name, selection=config, weights=weights or {})

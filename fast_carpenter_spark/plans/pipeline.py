@@ -313,11 +313,11 @@ class Pipeline:
             df = stage.apply(df)
         return df
 
-    def metrics(self) -> dict[str, DataFrame]:
-        """Post-run lineage metrics (cutflow counters) per stage."""
-        out = {}
-        for stage in self.stages:
-            counters = getattr(stage, "_last_counters", None)
-            if counters is not None:
-                out[stage.name] = counters
-        return out
+    def metrics(self) -> dict[str, list[dict]]:
+        """Cutflow counter rows per CutFlow stage, observed by the action
+        that consumed ``apply``'s output (ValueError before that action)."""
+        return {
+            st.name: st._fetch_counters()
+            for st in self.stages
+            if getattr(st, "_fetch_counters", None) is not None
+        }

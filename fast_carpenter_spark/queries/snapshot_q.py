@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from pyspark.sql import Observation
+
+from ..operators.selection import observe_counters
 from ._common import (
     BinnedDataframeStage,
     CutFlowStage,
@@ -31,14 +34,19 @@ from .core_q import (
 
 def flagship_unit_job(spark):
     """Per-work-unit flagship pipeline for CheckpointedRun: documents-unit ->
-    (partial (region, cell) aggregate, lineage metrics incl. cutflow
-    counters).  Counter lineage mirrors the reference's per-chunk Counter
-    protocol (ref: fast_carpenter/selection/filters.py:28-63)."""
+    (partial (region, cell) aggregate, fetch of the lineage metrics incl.
+    cutflow counters, observed by the partial's write).  Counter lineage
+    mirrors the reference's per-chunk Counter protocol (ref:
+    fast_carpenter/selection/filters.py:28-63)."""
     polys = synth.polygons()
+    cutflow = CutFlowStage(name="cf", selection=CUTFLOW_SELECTION, weights=CUTFLOW_WEIGHTS)
 
     def job(df_unit):
-        df_unit.createOrReplaceTempView("ckpt_unit_docs")
+        docs = Observation()
+        df_unit.observe(docs, F.count(F.lit(1)).alias("n")).createOrReplaceTempView(
+            "ckpt_unit_docs")
         spans = spark.sql(synth.flat_spans_sql("spark", docs="ckpt_unit_docs"))
+        spans, fetch_counters = observe_counters(spans, cutflow.compile(spans)[1], CUTFLOW_WEIGHTS)
         joined = (
             SpatialJoinStage(name="sj", polygons=polys).apply(spans)
             .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
@@ -47,19 +55,16 @@ def flagship_unit_job(spark):
         partial = BinnedDataframeStage(
             name="tiles", binning=[{"in": "region"}, {"in": "cell"}], weights={"pw": "pw"}
         ).apply(joined)
-        ctr_rows = (
-            CutFlowStage(name="cf", selection=CUTFLOW_SELECTION, weights=CUTFLOW_WEIGHTS)
-            .counters(spans)
-            .collect()
-        )
-        metrics = {
-            "docs": df_unit.count(),
-            "cutflow": {
-                f"{r['cut']}|{r['count_type']}|{r['weight_name']}": r["value"]
-                for r in ctr_rows
-            },
-        }
-        return partial, metrics
+
+        def fetch_metrics():
+            rows = fetch_counters()  # checks the write finished; it completed `docs` too
+            return {
+                "docs": docs.get["n"],
+                "cutflow": {f"{r['cut']}|{r['count_type']}|{r['weight_name']}": r["value"]
+                            for r in rows},
+            }
+
+        return partial, fetch_metrics
 
     return job
 

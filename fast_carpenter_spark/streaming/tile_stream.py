@@ -87,6 +87,8 @@ class StreamingTileAgg:
         flows through the identical partial/merge algebra — proven with the
         zero-dependency rate source in tests/test_streaming_rate_source.py.
         When None, the default parquet file source over ``input_dir``."""
+        if stream is None and input_dir is None:
+            raise ValueError("provide input_dir or stream")
         if stream is None:
             schema = spark.read.parquet(input_dir).schema
             stream = (

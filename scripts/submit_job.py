@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Cluster job entry point for spark-submit (north_rule deployment path):
+"""Cluster job entry point for spark-submit (north_rule deployment path).
+Build the --py-files zip first (``dist/`` is not tracked), then submit:
 
     scripts/make_dist.sh
     spark-submit --master <cluster> \\

@@ -112,6 +112,10 @@ def test_msgpack_frame_roundtrip(tmp_path):
     assert list(back.columns) == list(pdf.columns)
     assert [str(t) for t in back.dtypes] == [str(t) for t in pdf.dtypes]
     pd.testing.assert_frame_equal(back, pdf)
+    # duplicate names would collapse into one map entry: refused instead
+    dup = pd.DataFrame([[1, 2.0]], columns=["n", "n"])
+    with pytest.raises(ValueError, match="duplicated: \\['n'\\]"):
+        minisinks.write_msgpack(dup, str(tmp_path / "dup.msg"))
 
 
 # ---------------------------------------------------------------------------
@@ -210,6 +214,12 @@ def test_xlsx_ooxml_escaping(tmp_path):
         raw = zf.read("xl/worksheets/sheet1.xml").decode()
     body = raw.split("<sheetData>", 1)[1]
     assert "_x000D_" in body and "_x005F_x0041_" in body and "\r" not in body
+    # a caller's sheet name with quotes stays well-formed in workbook.xml
+    name = 'a "q" <b> & c'
+    minisinks.write_xlsx(pdf, path, sheet_name=name)
+    with zipfile.ZipFile(path) as zf:
+        wb = ET.fromstring(zf.read("xl/workbook.xml"))
+    assert next(wb.iter(f"{NS}sheet")).attrib["name"] == name
 
 
 def test_empty_frame_roundtrip(tmp_path):

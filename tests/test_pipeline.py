@@ -57,15 +57,37 @@ def test_pipeline_from_config_matches_manual(spark, spans):
 
 def test_pipeline_exposes_cutflow_metrics(spark, spans):
     pipe = Pipeline.from_config(CONFIG)
-    pipe.apply(spans)
+    pipe.apply(spans).collect()  # the counters ride this action
     metrics = pipe.metrics()
     assert len(metrics) == 1
     (ctr,) = metrics.values()
-    rows = {(r["cut"], r["count_type"], r["weight_name"]): r["value"] for r in ctr.collect()}
+    rows = {(r["cut"], r["count_type"], r["weight_name"]): r["value"] for r in ctr}
     total = spans.count()
     assert rows[("n_chars > 100", "totals_incl", "unweighted")] == total
     passed = spans.filter("n_chars > 100 AND kind != 'table'").count()
     assert rows[("kind != 'table'", "passed_incl", "unweighted")] == passed
+
+
+def test_pipeline_metrics_before_action_raises(spark, spans):
+    """metrics() before any action raises instead of blocking on the
+    observation; a bounded join turns a hang into a failure."""
+    import threading
+
+    pipe = Pipeline.from_config(CONFIG)
+    pipe.apply(spans)
+    raised = []
+
+    def call():
+        try:
+            pipe.metrics()
+        except ValueError as e:
+            raised.append(e)
+
+    t = threading.Thread(target=call, daemon=True)
+    t.start()
+    t.join(30)
+    assert not t.is_alive()
+    assert len(raised) == 1 and "run one" in str(raised[0])
 
 
 def test_pipeline_spatial_join_stage(spark, spans):

@@ -189,14 +189,15 @@ def test_apply_observed_single_pass(spark, docs):
     scan)."""
     from fast_carpenter_spark import synth
     from fast_carpenter_spark.operators.selection import CutFlowStage
+    from fast_carpenter_spark.plans.pipeline import Pipeline
 
     spans = spark.sql(synth.flat_spans_sql("spark"))
     sel = {"All": ["n_chars > 100", {"Any": ["kind == 'image'", "lon > 0.0"]}]}
     stage = CutFlowStage(name="cf", selection=sel, weights={"w": "w"})
 
-    filtered, fetch = stage.apply_observed(spans)
+    filtered = stage.apply(spans)
     n_pass = filtered.count()  # the one action; metrics ride along
-    rows = fetch()
+    (rows,) = Pipeline([stage]).metrics().values()
 
     ref = {
         (r["cut_id"], r["count_type"], r["weight_name"]): r["value"]
@@ -205,5 +206,5 @@ def test_apply_observed_single_pass(spark, docs):
     got = {(r["cut_id"], r["count_type"], r["weight_name"]): r["value"] for r in rows}
     assert got == ref
     # and the filtered side agrees with the root mask
-    deepest = max(r["depth"] for r in rows)
     assert n_pass == filtered.count()
+

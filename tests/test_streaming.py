@@ -5,6 +5,7 @@ unbounded source)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fast_carpenter_spark import grid, synth
@@ -46,6 +47,8 @@ def test_streaming_equals_batch_and_is_incremental(spark, docs, tmp_path):
         out_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
+    with pytest.raises(ValueError, match="provide input_dir or stream"):
+        stage.start(spark)
     q = stage.start(spark, input_dir, available_now=True)
     q.awaitTermination(120)
     got1 = rows_sorted(stage.result(spark))
