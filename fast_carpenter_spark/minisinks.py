@@ -321,34 +321,38 @@ class _Unpacker:
             return self._array(tag & 0x0F)
         if 0xA0 <= tag <= 0xBF:
             return self._take(tag & 0x1F).decode("utf-8")
-        handlers = {
-            0xC0: lambda: None,
-            0xC2: lambda: False,
-            0xC3: lambda: True,
-            0xC4: lambda: bytes(self._take(self._unpack_n(">B", 1))),
-            0xC5: lambda: bytes(self._take(self._unpack_n(">H", 2))),
-            0xC6: lambda: bytes(self._take(self._unpack_n(">I", 4))),
-            0xCA: lambda: self._unpack_n(">f", 4),
-            0xCB: lambda: self._unpack_n(">d", 8),
-            0xCC: lambda: self._unpack_n(">B", 1),
-            0xCD: lambda: self._unpack_n(">H", 2),
-            0xCE: lambda: self._unpack_n(">I", 4),
-            0xCF: lambda: self._unpack_n(">Q", 8),
-            0xD0: lambda: self._unpack_n(">b", 1),
-            0xD1: lambda: self._unpack_n(">h", 2),
-            0xD2: lambda: self._unpack_n(">i", 4),
-            0xD3: lambda: self._unpack_n(">q", 8),
-            0xD9: lambda: self._take(self._unpack_n(">B", 1)).decode("utf-8"),
-            0xDA: lambda: self._take(self._unpack_n(">H", 2)).decode("utf-8"),
-            0xDB: lambda: self._take(self._unpack_n(">I", 4)).decode("utf-8"),
-            0xDC: lambda: self._array(self._unpack_n(">H", 2)),
-            0xDD: lambda: self._array(self._unpack_n(">I", 4)),
-            0xDE: lambda: self._map(self._unpack_n(">H", 2)),
-            0xDF: lambda: self._map(self._unpack_n(">I", 4)),
-        }
-        if tag not in handlers:
+        handler = self._HANDLERS.get(tag)
+        if handler is None:
             raise ValueError(f"msgpack tag 0x{tag:02x} not supported by this sink")
-        return handlers[tag]()
+        return handler(self)
+
+    # tag -> decoder of the element that follows it (built once, not per
+    # element: a 70k-element array decodes 70k tags)
+    _HANDLERS = {
+        0xC0: lambda self: None,
+        0xC2: lambda self: False,
+        0xC3: lambda self: True,
+        0xC4: lambda self: bytes(self._take(self._unpack_n(">B", 1))),
+        0xC5: lambda self: bytes(self._take(self._unpack_n(">H", 2))),
+        0xC6: lambda self: bytes(self._take(self._unpack_n(">I", 4))),
+        0xCA: lambda self: self._unpack_n(">f", 4),
+        0xCB: lambda self: self._unpack_n(">d", 8),
+        0xCC: lambda self: self._unpack_n(">B", 1),
+        0xCD: lambda self: self._unpack_n(">H", 2),
+        0xCE: lambda self: self._unpack_n(">I", 4),
+        0xCF: lambda self: self._unpack_n(">Q", 8),
+        0xD0: lambda self: self._unpack_n(">b", 1),
+        0xD1: lambda self: self._unpack_n(">h", 2),
+        0xD2: lambda self: self._unpack_n(">i", 4),
+        0xD3: lambda self: self._unpack_n(">q", 8),
+        0xD9: lambda self: self._take(self._unpack_n(">B", 1)).decode("utf-8"),
+        0xDA: lambda self: self._take(self._unpack_n(">H", 2)).decode("utf-8"),
+        0xDB: lambda self: self._take(self._unpack_n(">I", 4)).decode("utf-8"),
+        0xDC: lambda self: self._array(self._unpack_n(">H", 2)),
+        0xDD: lambda self: self._array(self._unpack_n(">I", 4)),
+        0xDE: lambda self: self._map(self._unpack_n(">H", 2)),
+        0xDF: lambda self: self._map(self._unpack_n(">I", 4)),
+    }
 
     def _array(self, n: int) -> list:
         return [self.unpack() for _ in range(n)]

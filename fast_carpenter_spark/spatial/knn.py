@@ -14,12 +14,14 @@ deterministic tie-break so the DuckDB oracle reproduces the exact rows
 * **halo-exchange kernel** (``knn_local`` planar, ``knn_geo_local``
   geodesic): one shared implementation, ``_halo_knn``.  Points shuffle once
   to parent blocks of grid cells (plus a ghost copy to each block their
-  ring reaches), and one numpy function per block, ``_knn_block``,
-  evaluates the ring candidates as dense SIMD distance blocks.  Planar and
-  geodesic differ only in the point embedding (2-D (lon, lat) or the
-  unit-sphere chord space), the ring enumeration (constant and clamped, or
-  latitude-dependent and wrapped at the antimeridian) and an optional
-  radius cutoff.
+  ring reaches), and one numpy function per block, ``_knn_block``, ranks
+  the ring candidates of every query cell in two vectorized paths: the
+  block's sparse cells as one flat batch of (query, candidate) pairs with
+  a segmented sort, its point-mass cells as dense 2-D distance blocks.
+  Planar and geodesic differ only in the point embedding (2-D (lon, lat)
+  or the unit-sphere chord space), the ring enumeration (constant and
+  clamped, or latitude-dependent and wrapped at the antimeridian) and an
+  optional radius cutoff.
 """
 
 from __future__ import annotations
@@ -185,6 +187,12 @@ def knn_bounded(
 # distance-matrix entries per dense block: bounds the kernel's temporaries
 # (the salted point-mass blocks are chunked to budget / n_candidates rows)
 _CHUNK_BUDGET = 3_000_000
+# ring candidates of one query cell above which ``_knn_block`` ranks it as
+# a 2-D block instead of in the flat pair batch: a point mass (bench q7's
+# 24k-point blob, the benchmark's salted hot block of ~2000 points at 25
+# positions) stays 2-D, where ``_topk_row_idx`` selects in O(n) per row;
+# at the benchmark grain 99.9% of query cells have fewer than 200
+_DENSE_CANDIDATES = 256
 
 
 @dataclass(frozen=True)
@@ -261,6 +269,15 @@ def _sphere(lon: np.ndarray, lat: np.ndarray) -> tuple:
     return cl * np.cos(rlon), cl * np.sin(rlon), np.sin(rlat)
 
 
+def _ragged(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The concatenated aranges ``starts[i] .. starts[i] + lens[i] - 1``."""
+    return (
+        np.arange(lens.sum(), dtype=np.int64)
+        - np.repeat(np.cumsum(lens) - lens, lens)
+        + np.repeat(starts, lens)
+    )
+
+
 def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None,
                k: int) -> tuple:
     """Top-k of every query point of ONE halo block — the numpy body of the
@@ -271,7 +288,24 @@ def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None
     the k nearest ring candidates other than itself by (squared distance
     in the ``embed`` space, neighbour id), minus those beyond ``cut2``
     when given.  Returns (query id, neighbour id, rank, squared distance)
-    arrays."""
+    arrays.
+
+    Query cells take one of two paths by their ring's candidate count,
+    split at ``_DENSE_CANDIDATES``:
+
+    * **sparse** (at most the split; 99.9% of the cells at the benchmark
+      grain): all such cells of the block are ranked together as one flat
+      batch of (query, candidate) pairs, about ``_CHUNK_BUDGET`` pairs at
+      a time — one distance pass and one segmented sort, where a loop
+      over cells would pay ~20 small numpy calls per occupied cell;
+    * **dense** (above the split: a point mass and its ring): each cell is
+      a 2-D query x candidate distance block, row top-k by
+      ``_topk_row_idx`` in O(n).  A flat sort of a 24k-point blob's 576M
+      pairs would be far larger and slower.
+
+    The split only routes work: both paths rank by (distance, id) and
+    give the same rows with bit-identical distances, and any split from
+    32 to 1024 measured the same time on the benchmark's groups."""
     # rows sorted by (cell, id): packed cells order by x then y, so each
     # ring column's y-window is one contiguous slice
     cell = pdf["_cell"].to_numpy()
@@ -284,10 +318,10 @@ def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None
     xyz = embed(pdf["_lon"].to_numpy()[order], pdf["_lat"].to_numpy()[order])
     res, n = ring.res, 1 << ring.res
     # query rows grouped by cell: the queries of qcells[ci] are
-    # qrows[qoff[ci]:qoff[ci + 1]]
+    # qrows[qoff[ci]:qoff[ci] + nq[ci]]
     qrows = np.nonzero(core)[0]
     qcells, qoff = np.unique(cell[qrows], return_index=True)
-    qoff = np.append(qoff, len(qrows))
+    nq = np.diff(np.append(qoff, len(qrows)))
     _, qcx, qcy = grid.unpack_cells(qcells)
     ylo = np.maximum(qcy - ring.ry, 0)
     yhi = np.minimum(qcy + ring.ry, n - 1)
@@ -300,27 +334,36 @@ def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None
     else:
         x0 = np.maximum(qcx - rx, 0)
         cnt = np.minimum(qcx + rx, n - 1) - x0 + 1
-    off = np.concatenate(([0], np.cumsum(cnt)))
     rep = np.repeat(np.arange(len(qcells)), cnt)
-    tx = (x0[rep] + np.arange(off[-1], dtype=np.int64) - off[rep]) % n
+    tx = _ragged(x0, cnt) % n
     col_s = np.searchsorted(cell, grid.pack_cells(res, tx, ylo[rep]), side="left")
     # +1 on the packed value of the last ring row = exclusive end
     col_e = np.searchsorted(cell, grid.pack_cells(res, tx, yhi[rep]) + 1, side="left")
-    # flatten all candidate row indices (ragged arange over the column
-    # slices), so each query cell's candidates are one O(1) slice
+    # all candidate rows, flattened: query cell ci's candidates are
+    # flat[cs[ci]:cs[ci] + nc[ci]]
     ln = col_e - col_s
+    flat = _ragged(col_s, ln)
     cum = np.concatenate(([0], np.cumsum(ln)))
-    flat = (
-        np.arange(cum[-1], dtype=np.int64)
-        - np.repeat(cum[:-1], ln)
-        + np.repeat(col_s, ln)
-    )
+    ce = np.cumsum(cnt)
+    cs = cum[ce - cnt]
+    nc = cum[ce] - cs
     acc: list = []
-    for ci in range(len(qcells)):
-        q_rows = qrows[qoff[ci]:qoff[ci + 1]]
-        cand = flat[cum[off[ci]]:cum[off[ci + 1]]]
-        if len(cand) < 2:
-            continue
+    sparse = np.nonzero(nc <= _DENSE_CANDIDATES)[0]
+    # whole cells per batch, each batch starting below the pair budget
+    pairs = nq[sparse] * nc[sparse]
+    batch = (np.cumsum(pairs) - pairs) // _CHUNK_BUDGET
+    for cells in np.split(sparse, np.nonzero(np.diff(batch))[0] + 1):
+        if len(cells):
+            # the batch's queries, then one pair per (query, candidate of
+            # its cell): pair i is (q_rows[pq[i]], pc[i])
+            q_rows = qrows[_ragged(qoff[cells], nq[cells])]
+            qn = np.repeat(nc[cells], nq[cells])
+            pq = np.repeat(np.arange(len(q_rows)), qn)
+            pc = flat[_ragged(np.repeat(cs[cells], nq[cells]), qn)]
+            acc.append(_topk_pairs(q_rows, pq, pc, ids, xyz, cut2, k))
+    for ci in np.nonzero(nc > _DENSE_CANDIDATES)[0]:
+        q_rows = qrows[qoff[ci]:qoff[ci] + nq[ci]]
+        cand = flat[cs[ci]:cs[ci] + nc[ci]]
         # candidates id-sorted, so column order is the id tie order —
         # exact even for degenerate point masses (the synthetic hot cell
         # collapses 24k docs onto ONE position, a 24k-deep tie class)
@@ -359,6 +402,39 @@ def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None
     if not acc:
         return (np.empty(0, np.int64),) * 3 + (np.empty(0),)
     return tuple(np.concatenate(a) for a in zip(*acc))
+
+
+def _topk_pairs(q_rows, pq, pc, ids, xyz, cut2, k) -> tuple:
+    """The sparse path of ``_knn_block``: rank a flat batch of (query row
+    ``q_rows[pq]``, candidate row ``pc``) pairs, grouped by ``pq``, with
+    one segmented sort — the rows, ranks and distances the dense path
+    would give them."""
+    pr = q_rows[pq]
+    # the dense path's operations in its order: bit-identical distances
+    d2 = xyz[0][pr] - xyz[0][pc]
+    np.multiply(d2, d2, out=d2)
+    for a in xyz[1:]:
+        t = a[pr] - a[pc]
+        np.multiply(t, t, out=t)
+        d2 += t
+    if cut2 is not None:
+        # a pair beyond the cutoff sorts after every pair within it, so
+        # dropping it before the top-k selects the same rows as after
+        m = d2 <= cut2
+        pq, pc, d2 = pq[m], pc[m], d2[m]
+    # per query by (distance, id); lexsort is stable, so equal ids keep
+    # their candidate-list order, as the dense path's stable id sort does
+    o = np.lexsort((ids[pc], d2, pq))
+    pq, pc, d2 = pq[o], pc[o], d2[o]
+    # top k+1 per query INCLUDING self, then drop self and rank the rest
+    cnt = np.bincount(pq, minlength=len(q_rows))
+    keep = np.arange(len(pq)) - (np.cumsum(cnt) - cnt)[pq] <= k
+    keep &= ids[pc] != ids[q_rows[pq]]
+    pq, pc, d2 = pq[keep], pc[keep], d2[keep]
+    cnt = np.bincount(pq, minlength=len(q_rows))
+    rank = np.arange(1, len(pq) + 1) - (np.cumsum(cnt) - cnt)[pq]
+    m = rank <= k
+    return ids[q_rows[pq[m]]], ids[pc[m]], rank[m], d2[m]
 
 
 def _halo_knn(
@@ -882,10 +958,11 @@ def knn_geo_local(
     ring widths up to the full circle near the poles, block columns
     wrapped across the antimeridian.
 
-    Top-k inside the kernel is ``_topk_row_idx`` (exact argpartition
-    selection, same indices as a stable argsort) over id-sorted
-    candidates, with the radius cutoff applied to the selected slice.
-    Hot-block skew is salted as in knn_local.
+    Top-k inside the kernel is exact: a segmented sort of the sparse
+    cells' pairs, ``_topk_row_idx`` (argpartition selection, same indices
+    as a stable argsort) over the id-sorted candidates of point-mass
+    cells; the radius cutoff drops pairs beyond it from both.  Hot-block
+    skew is salted as in knn_local.
 
     Like knn_geo, chord^2 values never reach the output (trig ulps differ
     between numpy / Spark / DuckDB): (id, neighbor_id, rank) only.
@@ -894,13 +971,17 @@ def knn_geo_local(
         # radius-derived res makes the cell ~ the radius (rings stay 3x3);
         # when the caller supplies the point count, coarsen toward the
         # DENSITY-derived res (auto_res, as in planar knn_local): at sparse
-        # densities a radius-sized grid leaves <1 point per cell and the
-        # kernel's cost shifts from SIMD pair evals to the per-occupied-cell
-        # Python loop.  Coarsening is capped at 2 levels — every level
-        # multiplies the ring's candidate superset area ~4x (measured at the
-        # bench grain, 2.4M pts / 5 km: res 10 is 1.16x faster than res 11;
-        # res 8 is 4x SLOWER).  Never finer than the radius res: rings
-        # must still span the radius, so finer cells only widen rx.
+        # densities a radius-sized grid leaves <1 point per cell.  The
+        # policy was sized when the kernel looped over occupied cells in
+        # Python (measured at the bench grain, 2.4M pts / 5 km: res 10 was
+        # 1.16x faster than res 11; res 8 4x SLOWER).  The kernel now
+        # batches sparse cells, so per-cell cost no longer argues for
+        # coarsening, but the policy is kept: the res fixes the blocks,
+        # the halo replication and the candidate superset (every coarser
+        # level multiplies the ring's area ~4x), and a change there must
+        # be measured end to end, not inferred from the kernel.  Capped at
+        # 2 levels.  Never finer than the radius res: rings must still
+        # span the radius, so finer cells only widen rx.
         deg_lat = math.degrees(radius_km / EARTH_KM)
         r_res = max(1, min(20, int(math.floor(math.log2(180.0 / deg_lat)))))
         if n_points is None:

@@ -8,6 +8,12 @@ directly and is compared with a brute-force numpy reference: every query
 when given.  Covers both embeddings, with and without the cutoff, a
 point-mass tie class, salted groups (most members are candidates only) and
 a geodesic group straddling the antimeridian.
+
+Two group shapes: a packed one, where every ring holds tens of candidates,
+and a spread one, where most cells hold 0-3 points next to one point-mass
+cell.  The spread group runs both of the kernel's paths in one call: the
+flat pair batch for the sparse cells and the 2-D block for the cells whose
+ring reaches the mass (more than ``_DENSE_CANDIDATES`` candidates).
 """
 
 from __future__ import annotations
@@ -17,7 +23,9 @@ import pandas as pd
 import pytest
 
 from fast_carpenter_spark import grid
+from fast_carpenter_spark.spatial import knn
 from fast_carpenter_spark.spatial.knn import (
+    _DENSE_CANDIDATES,
     _geo_ring,
     _knn_block,
     _planar_ring,
@@ -30,9 +38,21 @@ RES = 6
 RADIUS_KM = 300.0
 
 
-def _group(geo: bool, salted: bool, seed: int) -> pd.DataFrame:
+def _group(geo: bool, salted: bool, seed: int, spread: bool = False) -> pd.DataFrame:
     rng = np.random.default_rng(seed)
-    if geo:
+    if spread:
+        # 60 little clusters of 1-3 points, half on each side of the
+        # antimeridian when geo, plus one point mass deeper than the split
+        n_cl = rng.integers(1, 4, 60)
+        cx = rng.uniform(150.0, 210.0, 60) if geo else rng.uniform(-60.0, 60.0, 60)
+        cy = rng.uniform(-30.0, 30.0, 60)
+        m = _DENSE_CANDIDATES + 20
+        lon = np.concatenate([np.repeat(cx, n_cl) + rng.uniform(-0.5, 0.5, n_cl.sum()),
+                              np.full(m, 179.99 if geo else 5.0)])
+        lon = np.where(lon > 180.0, lon - 360.0, lon)
+        lat = np.concatenate([np.repeat(cy, n_cl) + rng.uniform(-0.5, 0.5, n_cl.sum()),
+                              np.full(m, 0.5 if geo else 5.0)])
+    elif geo:
         # straddles the antimeridian: half the points at lon ~ +180, half
         # at ~ -180, and a point mass on each side
         lon = np.concatenate([rng.uniform(176.0, 180.0, 80), rng.uniform(-180.0, -176.0, 80),
@@ -71,23 +91,56 @@ def _reference(pdf, ring, embed, cut2, k):
     return sorted(out)
 
 
-@pytest.mark.parametrize("salted", [False, True])
-@pytest.mark.parametrize("cutoff", [False, True])
-@pytest.mark.parametrize("geo", [False, True])
-@pytest.mark.parametrize("k", [3, 5])
-def test_block_matches_brute_force(geo, cutoff, salted, k):
-    pdf = _group(geo, salted, seed=11 + k)
+def _case(geo, cutoff):
     if geo:
         ring, embed = _geo_ring(RES, RADIUS_KM), _sphere
         cut2 = 4.0 * hav_threshold(RADIUS_KM) if cutoff else None
     else:
         ring, embed = _planar_ring(RES, 1), _plane
         cut2 = 4.0 if cutoff else None
+    return ring, embed, cut2
+
+
+@pytest.mark.parametrize("salted", [False, True])
+@pytest.mark.parametrize("cutoff", [False, True])
+@pytest.mark.parametrize("geo", [False, True])
+@pytest.mark.parametrize("k", [3, 5])
+def test_block_matches_brute_force(geo, cutoff, salted, k):
+    pdf = _group(geo, salted, seed=11 + k)
+    ring, embed, cut2 = _case(geo, cutoff)
     want = _reference(pdf, ring, embed, cut2, k)
     q, nb, rank, d2 = _knn_block(pdf, ring, embed, cut2, k)
     assert sorted(zip(q, nb, rank, d2)) == want
     # the point mass is a tie class deeper than k: ties break on id
     assert len(want) > 0 and any(d == 0.0 for *_, d in want)
+
+
+@pytest.mark.parametrize("salted", [False, True])
+@pytest.mark.parametrize("cutoff", [False, True])
+@pytest.mark.parametrize("geo", [False, True])
+@pytest.mark.parametrize("k", [3, 5])
+def test_spread_block_matches_brute_force(geo, cutoff, salted, k):
+    """Sparse cells and a dense point-mass cell in one group: both paths."""
+    pdf = _group(geo, salted, seed=11 + k, spread=True)
+    ring, embed, cut2 = _case(geo, cutoff)
+    want = _reference(pdf, ring, embed, cut2, k)
+    q, nb, rank, d2 = _knn_block(pdf, ring, embed, cut2, k)
+    assert sorted(zip(q, nb, rank, d2)) == want
+    assert any(d == 0.0 for *_, d in want) and any(d > 0.0 for *_, d in want)
+
+
+@pytest.mark.parametrize("geo", [False, True])
+def test_spread_block_in_small_pair_batches(geo, monkeypatch):
+    """A pair budget far below the block's pair count: the sparse cells
+    span many batches and the point-mass rows many 2-D chunks."""
+    pdf = _group(geo, salted=False, seed=5, spread=True)
+    # most occupied cells hold at most 3 points; the mass cell is dense
+    per_cell = np.bincount(np.unique(pdf["_cell"], return_inverse=True)[1])
+    assert np.median(per_cell) <= 3 and per_cell.max() > _DENSE_CANDIDATES
+    ring, embed, cut2 = _case(geo, cutoff=True)
+    monkeypatch.setattr(knn, "_CHUNK_BUDGET", 40)
+    q, nb, rank, d2 = _knn_block(pdf, ring, embed, cut2, 3)
+    assert sorted(zip(q, nb, rank, d2)) == _reference(pdf, ring, embed, cut2, 3)
 
 
 def test_block_without_queries_is_empty():

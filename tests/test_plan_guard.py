@@ -18,7 +18,10 @@ GUARDED = ["pip_tile_agg", "knn", "tile_agg", "radius_join", "sessions_overlap",
            # round-5 additions: the geodesic halo-exchange kernel and the
            # materialized trained-PQ / trained-IVF-PQ searches must stay
            # broadcast-only
-           "knn_geo_local", "ann_pq_trained_topk", "ann_ivfpq_trained_topk"]
+           "knn_geo_local", "ann_pq_trained_topk", "ann_ivfpq_trained_topk",
+           # the planar halo kernel, MinHash-LSH dedup, its connected
+           # components and the tile pyramid
+           "knn_local", "dedup_minhash_lsh", "dedup_cluster", "tile_pyramid"]
 
 
 def _plan(spark, name):
