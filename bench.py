@@ -6,9 +6,10 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 
 Scale-up: documents are replicated SPARK_GRAFT_REPL times (default 24)
 with distinct doc_ids, so the flagship pipeline processes ~N*repl docs —
-the deterministic stand-in for larger SF inputs.  Results are consumed by
-scripts/run_scaling.py to evidence N -> 4N core scaling efficiency
-(BASELINE.json north_rule; local[8] vs local[32] on this host).
+the deterministic stand-in for larger SF inputs.  scripts/scaling.py runs
+the flagship job (q1, ``flagship_tiles``) through this module's session,
+replica and sink helpers at N and 4N cores to evidence N -> 4N scaling
+efficiency (BASELINE.json north_rule).
 
 Measurement protocol (hard-won correctness):
 * every timed run constructs a FRESH DataFrame from its factory — re-running
@@ -40,8 +41,8 @@ from fast_carpenter_spark.spatial.join import SpatialJoinStage
 from fast_carpenter_spark.queries import (
     CUTFLOW_SELECTION,
     CUTFLOW_WEIGHTS,
-    REGION_RES,
     TILE_RES,
+    flagship_tiles,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -49,7 +50,9 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPL = int(os.environ.get("SPARK_GRAFT_REPL", "480"))
 
 
-def build_session() -> SparkSession:
+def build_session(master: str | None = None, extra_conf: dict | None = None) -> SparkSession:
+    """The bench session on ``master`` (default local[CPUS]); ``CPUS`` also
+    sets the shuffle partitions and default parallelism."""
     from fast_carpenter_spark.session import build_session as _build
 
     # Keep the resident footprint SMALL: this sandbox's host demand-pages the
@@ -62,7 +65,7 @@ def build_session() -> SparkSession:
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "536870912")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "536870912")
     return _build(
-        master=f"local[{CPUS}]",
+        master=master or f"local[{CPUS}]",
         app_name="fast_carpenter_spark_bench",
         shuffle_partitions=CPUS,
         extra_conf={
@@ -73,6 +76,7 @@ def build_session() -> SparkSession:
             "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "536870912",
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
+            **(extra_conf or {}),
         },
     )
 
@@ -80,21 +84,23 @@ def build_session() -> SparkSession:
 CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
 
 
-def replicated_documents(spark: SparkSession):
-    """documents x REPL with distinct doc_ids (deterministic scale-up).
+def replicated_documents(spark: SparkSession, repl: int | None = None):
+    """documents x ``repl`` (default REPL) with distinct doc_ids
+    (deterministic scale-up).
 
     Materialized once to a local parquet cache with a realistic partition
     layout (a 100 TB input arrives as many files); the timed queries read
     from that cache so the replication cross-join is not measured.
     """
+    repl = REPL if repl is None else repl
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    if REPL <= 1:
+    if repl <= 1:
         return docs
-    tag = f"{os.path.basename(os.path.normpath(SF_DIR))}_x{REPL}"
+    tag = f"{os.path.basename(os.path.normpath(SF_DIR))}_x{repl}"
     path = os.path.join(CACHE_DIR, f"documents_{tag}.parquet")
     if not os.path.exists(path):
         (
-            docs.crossJoin(spark.range(REPL).select(F.col("id").alias("_rep")))
+            docs.crossJoin(spark.range(repl).select(F.col("id").alias("_rep")))
             .withColumn("doc_id", F.col("doc_id") + F.col("_rep") * F.lit(10_000_019))
             .drop("_rep")
             .repartition(128, "doc_id")
@@ -142,14 +148,7 @@ def make_factories(spark: SparkSession, n_docs: int):
 
     def q1():
         # FLAGSHIP: cell encode -> spatial join (cover + PIP refine) -> tile agg
-        joined = (
-            SpatialJoinStage(name="sj", polygons=polys).apply(fresh_spans())
-            .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
-            .withColumn("pw", F.col("w") * F.col("weight"))
-        )
-        return BinnedDataframeStage(
-            name="tiles", binning=[{"in": "region"}, {"in": "cell"}], weights={"pw": "pw"}
-        ).apply(joined)
+        return flagship_tiles(fresh_spans(), polys)
 
     def q2():
         # dense tile aggregation at res 8 over all spans
@@ -209,14 +208,7 @@ def make_factories(spark: SparkSession, n_docs: int):
 
     def q6():
         # flagship over spans AT REST (parquet scan instead of synthesis)
-        joined = (
-            SpatialJoinStage(name="sj", polygons=polys).apply(materialized_spans(spark))
-            .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
-            .withColumn("pw", F.col("w") * F.col("weight"))
-        )
-        return BinnedDataframeStage(
-            name="tiles", binning=[{"in": "region"}, {"in": "cell"}], weights={"pw": "pw"}
-        ).apply(joined)
+        return flagship_tiles(materialized_spans(spark), polys)
 
     return {
         "q1_pip_tile_agg": q1,

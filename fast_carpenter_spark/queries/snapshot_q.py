@@ -6,12 +6,10 @@ from pyspark.sql import Observation
 
 from ..operators.selection import observe_counters
 from ._common import (
-    BinnedDataframeStage,
     CutFlowStage,
     Dimension,
     F,
     REGION_RES,
-    SpatialJoinStage,
     TILE_RES,
     _source_fingerprint_tag,
     flat_spans,
@@ -22,6 +20,7 @@ from ._common import (
 from .tiles_q import (
     O_SPANS_FLAT,
 )
+from .spatial_q import flagship_tiles
 from .core_q import (
     CUTFLOW_SELECTION,
     CUTFLOW_WEIGHTS,
@@ -47,14 +46,7 @@ def flagship_unit_job(spark):
             "ckpt_unit_docs")
         spans = spark.sql(synth.flat_spans_sql("spark", docs="ckpt_unit_docs"))
         spans, fetch_counters = observe_counters(spans, cutflow.compile(spans)[1], CUTFLOW_WEIGHTS)
-        joined = (
-            SpatialJoinStage(name="sj", polygons=polys).apply(spans)
-            .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
-            .withColumn("pw", F.col("w") * F.col("weight"))
-        )
-        partial = BinnedDataframeStage(
-            name="tiles", binning=[{"in": "region"}, {"in": "cell"}], weights={"pw": "pw"}
-        ).apply(joined)
+        partial = flagship_tiles(spans, polys)
 
         def fetch_metrics():
             rows = fetch_counters()  # checks the write finished; it completed `docs` too

@@ -67,18 +67,23 @@ WHERE doc_id NOT IN (SELECT doc_id FROM ({O_PIP_JOIN}))
 """
 
 
-def q_pip_tile_agg(spark, sf_dir):
-    """FLAGSHIP: spatial join -> per (region, tile) weighted aggregation.
-    Pair weight = doc weight x polygon weight (exact binary fractions)."""
-    df = flat_spans(spark, sf_dir)
-    stage = SpatialJoinStage(name="sj", polygons=synth.polygons())
-    joined = stage.apply(df).withColumn(
-        "cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark"))
-    ).withColumn("pw", F.col("w") * F.col("weight"))
-    agg = BinnedDataframeStage(
-        name="tiles", binning=[{"in": "region"}, {"in": "cell"}], weights={"pw": "pw"}
+def flagship_tiles(spans, polygons):
+    """The flagship job: span points joined to ``polygons``, then one
+    weighted bin per (region, cell at REGION_RES).  Pair weight
+    ``pw`` = doc weight x polygon weight (exact binary fractions)."""
+    joined = (
+        SpatialJoinStage(name="sj", polygons=polygons).apply(spans)
+        .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
+        .withColumn("pw", F.col("w") * F.col("weight"))
     )
-    return agg.apply(joined)
+    return BinnedDataframeStage(
+        name="tiles", binning=[{"in": "region"}, {"in": "cell"}], weights={"pw": "pw"}
+    ).apply(joined)
+
+
+def q_pip_tile_agg(spark, sf_dir):
+    """FLAGSHIP: spatial join -> per (region, tile) weighted aggregation."""
+    return flagship_tiles(flat_spans(spark, sf_dir), synth.polygons())
 
 
 O_PIP_TILE_AGG = f"""

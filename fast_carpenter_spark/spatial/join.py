@@ -13,14 +13,14 @@ Plan shape (designed for 10^12 docs x large polygon sets):
    numpy on the (small) polygon table, exploded to (res, cell, poly...).
 2. **Equi-join**: points carry their cell at each cover resolution (pure
    SQL shifts of the base-res cell).  One hash equi-join per cover level,
-   unioned — every join is on a plain BIGINT key, so Catalyst broadcasts
-   small covers or shuffles with AQE skew splitting for big ones.
-   ``strategy="salted"`` additionally spreads known-hot cells: points get
+   unioned — every join is on a plain BIGINT key.  ``strategy="broadcast"``
+   (default) broadcasts the cover; ``"shuffle_hash"`` shuffles both sides;
+   ``"salted"`` additionally spreads known-hot cells: points get
    ``salt = pmod(xxhash64(doc_uid), nsalt)``, covers are exploded over all
    salts — the classic hot-key fan-out.
-3. **Refine**: the exact ray-casting PIP (Arrow-batched numpy) filters the
-   candidate pairs.  Cover is a superset, refine is exact, so the result
-   equals the brute-force oracle.
+3. **Refine**: the exact ray-casting PIP (a codegen'd SQL expression over
+   the polygon's edge array) filters the candidate pairs.  Cover is a
+   superset, refine is exact, so the result equals the brute-force oracle.
 """
 
 from __future__ import annotations
@@ -32,9 +32,10 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from .. import grid
-from .pip import edges_sql, pip_edges_condition_sql, pip_udf
+from .pip import edges_sql, pip_edges_condition_sql
 
 COVER_RESOLUTIONS = (2, 4, 6, 8)
+STRATEGIES = ("broadcast", "salted", "shuffle_hash")
 
 
 def polygon_covers_local(
@@ -155,7 +156,6 @@ def spatial_join(
     strategy: str = "broadcast",
     nsalt: int = 8,
     salt_key: str = "doc_uid",
-    refine: str = "sql",
     resolutions: list[int] | None = None,
 ) -> DataFrame:
     """Join point rows to containing polygons.
@@ -170,10 +170,14 @@ def spatial_join(
     polygon; points in no polygon are absent (inner join semantics — use
     ``left_anti`` on the result keys for the complement).
 
-    ``refine="sql"`` (default) runs the ray-casting parity test as a pure
-    codegen'd SQL expression; ``refine="udf"`` uses the Arrow-batched numpy
-    kernel (same semantics, kept for parity testing).
+    ``strategy`` is one of ``STRATEGIES``; anything else raises
+    ``ValueError``.  The refine is the ray-casting parity test as a
+    codegen'd SQL expression.
     """
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown spatial join strategy {strategy!r}; use one of {STRATEGIES}"
+        )
     if resolutions is None:
         resolutions = sorted({r.res for r in covers.select("res").distinct().collect()})
     if not resolutions:
@@ -212,7 +216,7 @@ def spatial_join(
             salted_pts.join(salted_cov.hint("shuffle_hash"), ["_cell", "_salt"], "inner")
             .drop("_salt")
         )
-    elif strategy == "shuffle_hash":
+    else:  # "shuffle_hash"
         # unsalted shuffle-hash join: the at-scale regime where the cover
         # side is too big to broadcast but no salting is applied — a single
         # hot cell key lands on ONE reducer.  Kept as the explicit control
@@ -220,27 +224,14 @@ def spatial_join(
         # split does not rescue it at bench scale because the hot partition
         # sits far under skewJoin.skewedPartitionThresholdInBytes (256 MB).
         cand = pts.join(cov.hint("shuffle_hash"), "_cell", "inner")
-    else:  # plain shuffle join; AQE skew handling applies
-        cand = pts.join(cov, "_cell", "inner")
     cand = cand.drop("_cell")
 
     polys_small = polys_df.select(
-        "poly_id", "region", "weight", "ring_lon", "ring_lat"
-    ).withColumn("_edges", F.expr(edges_sql()))
-    if refine == "udf":
-        cand = cand.join(
-            F.broadcast(polys_small.drop("_edges")), "poly_id"
-        )
-        refined = cand.filter(
-            pip_udf(F.col(lon_col), F.col(lat_col), F.col("ring_lon"), F.col("ring_lat"))
-        )
-    else:
-        cand = cand.join(
-            F.broadcast(polys_small.drop("ring_lon", "ring_lat")), "poly_id"
-        )
-        refined = cand.filter(
-            F.expr(pip_edges_condition_sql(lon_col, lat_col, "_edges"))
-        )
+        "poly_id", "region", "weight", F.expr(edges_sql()).alias("_edges")
+    )
+    refined = cand.join(F.broadcast(polys_small), "poly_id").filter(
+        F.expr(pip_edges_condition_sql(lon_col, lat_col, "_edges"))
+    )
     return refined.select(*point_cols, "poly_id", "region", "weight")
 
 
@@ -255,7 +246,6 @@ class SpatialJoinStage:
     strategy: str = "broadcast"
     nsalt: int = 8
     max_cells: int = 64
-    refine: str = "sql"
 
     def apply(self, df: DataFrame) -> DataFrame:
         spark = df.sparkSession
@@ -264,6 +254,6 @@ class SpatialJoinStage:
         return spatial_join(
             df, polygons_frame(spark, self.polygons), covers,
             lon_col=self.lon_col, lat_col=self.lat_col,
-            strategy=self.strategy, nsalt=self.nsalt, refine=self.refine,
+            strategy=self.strategy, nsalt=self.nsalt,
             resolutions=resolutions,
         )

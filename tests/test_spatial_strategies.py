@@ -31,14 +31,13 @@ def test_join_strategies_identical(spark, spans):
         SpatialJoinStage(name="s", polygons=polys, strategy="salted", nsalt=7).apply(spans),
         cols,
     )
-    shuffled = rows_sorted(
-        SpatialJoinStage(name="h", polygons=polys, strategy="shuffle").apply(spans), cols
-    )
     hashed = rows_sorted(
         SpatialJoinStage(name="sh", polygons=polys, strategy="shuffle_hash").apply(spans),
         cols,
     )
-    assert salted == base and shuffled == base and hashed == base and len(base) > 0
+    assert salted == base and hashed == base and len(base) > 0
+    with pytest.raises(ValueError, match="'salt'.*broadcast.*salted.*shuffle_hash"):
+        SpatialJoinStage(name="t", polygons=polys, strategy="salt").apply(spans)
 
 
 # planar grid-edge points: lon = +-180 and lat = +-90 sit in the edge cells
@@ -127,15 +126,3 @@ def test_join_refines_against_user_polygons(spark, duck):
     assert [r for r in got if r[0] == 1] == [(1, 0, "harbour", "north", 1.0)]
     assert not [r for r in got if r[:2] == (3, 0)] and len(got) == 7
 
-
-def test_pip_refine_udf_matches_sql(spark, spans):
-    """The Arrow numpy PIP kernel and the codegen SQL refine agree."""
-    polys = synth.polygons()
-    cols = ["doc_id", "span_idx", "poly_id"]
-    via_sql = rows_sorted(
-        SpatialJoinStage(name="a", polygons=polys, refine="sql").apply(spans), cols
-    )
-    via_udf = rows_sorted(
-        SpatialJoinStage(name="b", polygons=polys, refine="udf").apply(spans), cols
-    )
-    assert via_sql == via_udf and len(via_sql) > 0
