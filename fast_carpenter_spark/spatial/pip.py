@@ -65,7 +65,7 @@ def points_in_polygon(
     pxc = px[:, None]
 
     straddles = (y1 > pyc) != (y2 > pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xing = pxc < (x2 - x1) * (pyc - y1) / (y2 - y1) + x1
     crossings = straddles & xing & valid
     return (crossings.sum(axis=1) % 2).astype(bool)

@@ -21,7 +21,10 @@ GUARDED = ["pip_tile_agg", "knn", "tile_agg", "radius_join", "sessions_overlap",
            "knn_geo_local", "ann_pq_trained_topk", "ann_ivfpq_trained_topk",
            # the planar halo kernel, MinHash-LSH dedup, its connected
            # components and the tile pyramid
-           "knn_local", "dedup_minhash_lsh", "dedup_cluster", "tile_pyramid"]
+           "knn_local", "dedup_minhash_lsh", "dedup_cluster", "tile_pyramid",
+           # the other two join strategies' queries: the refine (_inside OR
+           # ray-cast) must stay a condition of the polygon hash join
+           "pip_join_salted", "pip_anti"]
 
 
 def _plan(spark, name):

@@ -8,7 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from fast_carpenter_spark import synth
-from fast_carpenter_spark.spatial.join import SpatialJoinStage
+from fast_carpenter_spark.spatial.join import (
+    STRATEGIES, SpatialJoinStage, polygon_covers_local, polygons_frame, spatial_join,
+)
 from fast_carpenter_spark.spatial.knn import knn_bounded, knn_local
 
 
@@ -73,7 +75,9 @@ def test_knn_hot_cell_salting_identical(spark, spans):
 
 
 # hand-built layer: ids and regions in no synthetic shape, a concave "C"
-# polygon, integer coordinates, and a 2x2 degree square around (10, 10)
+# polygon, integer coordinates, a 2x2 degree square around (10, 10), and a
+# pentagon large enough to hold interior res-8 cells (1.40625 x 0.703125
+# degrees; lon 45 and lat 0, 1.40625, 5.625 are res-8 cell borders)
 USER_POLYGONS = [
     {"poly_id": "harbour", "region": "north", "weight": 1,
      "ring_lon": [9, 11, 11, 9], "ring_lat": [9, 9, 11, 11]},
@@ -82,6 +86,8 @@ USER_POLYGONS = [
      "ring_lat": [-22.0, -22.0, -21.0, -21.0, -19.0, -19.0, -18.0, -18.0]},
     {"poly_id": "Z9", "region": "north", "weight": 2.25,
      "ring_lon": [10.5, 13.0, 10.5], "ring_lat": [10.5, 10.5, 13.0]},
+    {"poly_id": "plaza", "region": "south", "weight": 0.75,
+     "ring_lon": [40.0, 52.0, 52.0, 46.0, 40.0], "ring_lat": [-6.0, -6.0, 4.0, 8.0, 4.0]},
 ]
 USER_POINTS = [
     (1, 0, 10.0, 10.0),    # square centre
@@ -92,6 +98,19 @@ USER_POINTS = [
     (4, 1, 31.0, -18.5),   # C upper arm
     (5, 0, 12.5, 10.7),    # triangle only
     (6, 0, -50.0, 40.0),   # nowhere
+    (7, 0, 45.0, 0.0),     # plaza, res-8 cell corner in its interior
+    (7, 1, 45.0, 1.40625), # plaza, res-8 cell border
+    (7, 2, 47.8125, -2.8125),  # plaza, res-8 corner
+    (8, 0, 40.0, 0.0),     # plaza edge
+    (8, 1, 43.0, 6.0),     # plaza slanted edge
+    (8, 2, 52.0, -6.0),    # plaza vertex
+    (8, 3, 46.0, 8.0),     # plaza apex
+    (8, 4, 40.0, 4.0),     # plaza vertex
+    (9, 0, 51.5, 7.0),     # above plaza's slanted edge: outside
+    (9, 1, 9.0, 9.0),      # square vertex
+    (9, 2, 11.0, 10.0),    # square edge
+    (9, 3, 10.5, 10.5),    # triangle vertex, inside the square
+    (9, 4, 45.0, 5.625),   # plaza, res-8 border near the slanted edges
 ]
 
 
@@ -104,25 +123,74 @@ def _values_sql(polys):
     return f"(VALUES\n {rows}\n) AS polygons(poly_id, region, weight, ring_lon, ring_lat)"
 
 
-def test_join_refines_against_user_polygons(spark, duck):
+def _oracle_rows(duck, points, polys):
     from fast_carpenter_spark.spatial.pip import pip_oracle_sql
 
+    points_sql = "SELECT * FROM (VALUES " + ", ".join(
+        f"({d}, {o}, {synth._dbl(x, 'duckdb')}, {synth._dbl(y, 'duckdb')})"
+        for d, o, x, y in points
+    ) + ") AS t(doc_id, span_offset, lon, lat)"
+    return sorted(
+        tuple(r) for r in duck.execute(
+            pip_oracle_sql(points_sql, _values_sql(polys), extra_poly_cols="region, weight")
+        ).fetchall()
+    )
+
+
+def test_join_refines_against_user_polygons(spark, duck):
     cols = ["doc_id", "span_offset", "poly_id", "region", "weight"]
+    covers, _ = polygon_covers_local(USER_POLYGONS)
+    assert covers[covers.poly_id == "plaza"].inside.any()
     pts = spark.createDataFrame(
         USER_POINTS, "doc_id long, span_offset int, lon double, lat double"
     )
     got = rows_sorted(SpatialJoinStage(name="u", polygons=USER_POLYGONS).apply(pts), cols)
-    points_sql = "SELECT * FROM (VALUES " + ", ".join(
-        f"({d}, {o}, {synth._dbl(x, 'duckdb')}, {synth._dbl(y, 'duckdb')})"
-        for d, o, x, y in USER_POINTS
-    ) + ") AS t(doc_id, span_offset, lon, lat)"
-    want = sorted(
-        tuple(r) for r in duck.execute(
-            pip_oracle_sql(points_sql, _values_sql(USER_POLYGONS),
-                           extra_poly_cols="region, weight")
-        ).fetchall()
-    )
-    assert got == want
+    assert got == _oracle_rows(duck, USER_POINTS, USER_POLYGONS)
     assert [r for r in got if r[0] == 1] == [(1, 0, "harbour", "north", 1.0)]
-    assert not [r for r in got if r[:2] == (3, 0)] and len(got) == 7
+    assert not [r for r in got if r[:2] == (3, 0)] and len(got) == 17
 
+
+def test_multi_level_cover_join(spark, duck):
+    """The multi-level cover (per-polygon resolutions, points exploded over
+    the levels) matches the brute-force oracle on every strategy, on a
+    lattice of res-8 cell centres and borders plus the hand-made points."""
+    cols = ["doc_id", "span_offset", "poly_id", "region", "weight"]
+    covers_pd, levels = polygon_covers_local(USER_POLYGONS, max_cells=64, max_total_rows=1)
+    assert len(levels) > 1 and covers_pd.inside.any()
+    lattice = [
+        (100 + k, j, -180.0 + 1.40625 * k / 2, -90.0 + 0.703125 * j / 2)
+        for k in range(264, 334) for j in range(190, 296, 3)
+    ]
+    points = USER_POINTS + lattice
+    pts = spark.createDataFrame(points, "doc_id long, span_offset int, lon double, lat double")
+    want = _oracle_rows(duck, points, USER_POLYGONS)
+    polys = polygons_frame(spark, USER_POLYGONS)
+    covers = spark.createDataFrame(covers_pd)
+    for strategy in STRATEGIES:
+        got = rows_sorted(
+            spatial_join(pts, polys, covers, strategy=strategy, nsalt=3, salt_key="doc_id",
+                         resolutions=levels),
+            cols,
+        )
+        assert got == want, strategy
+
+
+
+_SQUARE = {"poly_id": "ok", "region": "r", "weight": 1,
+           "ring_lon": [0, 1, 1, 0], "ring_lat": [0, 0, 1, 1]}
+
+
+@pytest.mark.parametrize("bad, message", [
+    ({"poly_id": "two", "ring_lon": [0.0, 1.0], "ring_lat": [0.0, 1.0]}, "'two'.*3 vertices"),
+    ({"poly_id": "ragged", "ring_lon": [0.0, 1.0, 1.0], "ring_lat": [0.0, 1.0]},
+     "'ragged'.*ring_lon has 3.*ring_lat 2"),
+    ({"poly_id": "nan", "ring_lon": [0.0, float("nan"), 1.0], "ring_lat": [0.0, 1.0, 1.0]},
+     "'nan'.*non-finite"),
+    ({"poly_id": "inf", "ring_lon": [0.0, 1.0, 1.0], "ring_lat": [0.0, 1.0, -float("inf")]},
+     "'inf'.*non-finite"),
+    ({"poly_id": "ok"}, "duplicate poly_id 'ok'"),
+])
+def test_join_stage_rejects_bad_rings(bad, message):
+    SpatialJoinStage(name="v", polygons=[_SQUARE])  # integer coordinates pass
+    with pytest.raises(ValueError, match=message):
+        SpatialJoinStage(name="v", polygons=[_SQUARE, {**_SQUARE, **bad}])
