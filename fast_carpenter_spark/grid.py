@@ -18,18 +18,23 @@ Parent/child moves are right/left shifts of x and y — the zoom-rollup
 analogue of fast-carpenter's re-binning.  k-ring(x, y, k) is the Chebyshev
 ball of radius k, clamped at the poles and the antimeridian (no wrap).
 
-Two implementations, verified against each other in tests:
+Three parts, the first two verified against each other in tests:
 
 * SQL fragment builders (``cell_sql`` / ``parent_sql`` …) emitting either
   Spark SQL or DuckDB SQL — the DuckDB form is the independent oracle.
 * Vectorized numpy kernels (``encode_cells`` / ``hilbert_key`` …) used by
-  the Arrow-batched pandas UDF path, including the Hilbert space-filling
+  the Arrow-batched Python workers, including the Hilbert space-filling
   key used for range partitioning (not expressible in SQL built-ins).
+* ``explode_cells``: the one cell enumerator of the Spark-side operators —
+  every row over the cells of a ring or bounding box, rows clamped at the
+  poles and columns clamped or wrapped at the antimeridian, ready for a
+  BIGINT equi-join on the packed cell.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import DataFrame, functions as F
 
 XY_BITS = 29
 RES_SHIFT = 2 * XY_BITS  # 58
@@ -118,7 +123,58 @@ def parent1_sql(cell_expr: str, dialect: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# numpy kernels (Arrow / pandas-UDF path)
+# Spark cell enumeration
+# ---------------------------------------------------------------------------
+
+
+def explode_cells(
+    df: DataFrame,
+    res: int,
+    x_lo: str,
+    x_hi: str,
+    y_lo: str,
+    y_hi: str,
+    *,
+    wrap: bool = False,
+    cell: str = "_cell",
+) -> DataFrame:
+    """Every row of ``df`` once per grid cell of its rectangle: columns
+    ``x_lo .. x_hi`` by rows ``y_lo .. y_hi`` at ``res`` (inclusive
+    bounds; Spark SQL BIGINT expressions over ``df``'s columns).  Adds
+    ``_nx``, ``_ny`` and the packed cell id as ``cell``; a caller that
+    needs offsets takes ``_nx - x``.
+
+    Rows clamp to [0, n-1].  Columns clamp too, or with ``wrap`` (the
+    antimeridian) take at most n consecutive columns from ``x_lo``, each
+    modulo n: every column once, so a ring as wide as the grid needs no
+    special case.
+
+    Precondition: every rectangle holds an in-grid cell.  The explicit
+    step makes ``sequence`` raise on reversed bounds, where ``sequence(5,
+    3)`` would silently count down.
+
+    Two explodes of plain sequences stay in whole-stage generated code;
+    the same enumeration as ``flatten(transform(...))`` lambdas and a
+    clamp filter runs interpreted (measured +0.3 s per 400k points at
+    local[4]).
+    """
+    n = 1 << res
+    last = f"CAST({n - 1} AS BIGINT)"
+    if wrap:
+        xs = f"sequence({x_lo}, least({x_hi}, ({x_lo}) + {last}), 1)"
+    else:
+        xs = f"sequence(greatest({x_lo}, 0), least({x_hi}, {last}), 1)"
+    ys = f"sequence(greatest({y_lo}, 0), least({y_hi}, {last}), 1)"
+    out = df.select("*", F.explode(F.expr(xs)).alias("_nx"))
+    if wrap:
+        out = out.withColumn("_nx", F.expr(f"pmod(_nx, {n})"))
+    return out.select("*", F.explode(F.expr(ys)).alias("_ny")).withColumn(
+        cell, F.expr(pack_sql(res, "_nx", "_ny"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# numpy kernels (Arrow-batched Python workers)
 # ---------------------------------------------------------------------------
 
 
@@ -205,29 +261,6 @@ def hilbert_key_for_cells(cell: np.ndarray) -> np.ndarray:
     res, x, y = unpack_cells(cell)
     r = int(res[0]) if len(res) else 0
     return hilbert_key(x, y, max(r, 1))
-
-
-import pandas as pd  # noqa: E402  (module-level so pandas_udf type hints resolve)
-
-
-def cell_encode_column(lon_col: str, lat_col: str, res: int):
-    """Arrow-batched cell encode as a Spark Column (pandas_udf over the
-    numpy kernel) — the north-star's 'batched cell-encode via pandas/Arrow
-    UDFs', kept alongside the codegen SQL twin (cell_sql).  The SQL path
-    measures faster (no Arrow hop, whole-stage codegen) and is the engine
-    default; this variant exists for parity testing and as the template
-    for encoders that genuinely need numpy (e.g. real H3/S2 libraries)."""
-    from pyspark.sql import functions as F, types as T
-
-    @F.pandas_udf(T.LongType())
-    def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(
-            encode_cells(
-                lon.to_numpy(dtype="float64"), lat.to_numpy(dtype="float64"), res
-            )
-        )
-
-    return _enc(F.col(lon_col), F.col(lat_col))
 
 
 def quadkey_sql(cell_expr: str, res: int, dialect: str) -> str:

@@ -118,7 +118,6 @@ def q_tile_smooth(spark, sf_dir):
     stats — the cell-ring expansion of the north_star applied to
     aggregation.  One explode over 9 constant offsets + re-aggregation;
     no joins."""
-    n = 1 << REGION_RES
     tiles = (
         flat_spans(spark, sf_dir)
         .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
@@ -127,20 +126,8 @@ def q_tile_smooth(spark, sf_dir):
     )
     x = grid.unpack_x_sql("cell", "spark")
     y = grid.unpack_y_sql("cell", "spark")
-    ring = (
-        "flatten(transform(sequence(-1, 1), dx -> transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y))))"
-    )
-    contrib = (
-        tiles.select("n", "w_sumw", F.explode(F.expr(ring)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < n)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < n)
-        )
-        .select(
-            F.expr(grid.pack_sql(REGION_RES, "_nc.x", "_nc.y")).alias("cell"),
-            "n", "w_sumw",
-        )
+    contrib = grid.explode_cells(
+        tiles, REGION_RES, f"{x} - 1", f"{x} + 1", f"{y} - 1", f"{y} + 1", cell="cell"
     )
     return contrib.groupBy("cell").agg(
         F.sum("n").alias("n_smooth"), F.sum("w_sumw").alias("w_smooth")
@@ -176,31 +163,21 @@ def q_tile_gauss(spark, sf_dir):
     the count channel exact BIGINT, and the weight channel stays exact
     because span weights are binary fractions.  Same single-explode,
     no-join shape as the box smooth."""
-    n = 1 << REGION_RES
     tiles = (
         flat_spans(spark, sf_dir)
         .withColumn("cell", F.expr(grid.cell_sql("lon", "lat", REGION_RES, "spark")))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("w").alias("w_sumw"))
+        .withColumn("_x", F.expr(grid.unpack_x_sql("cell", "spark")))
+        .withColumn("_y", F.expr(grid.unpack_y_sql("cell", "spark")))
     )
-    x = grid.unpack_x_sql("cell", "spark")
-    y = grid.unpack_y_sql("cell", "spark")
-    ring = (
-        "flatten(transform(sequence(-1, 1), dx -> transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y, "
-        "(2 - abs(dx)) * (2 - abs(dy)) AS kw))))"
-    )
-    contrib = (
-        tiles.select("n", "w_sumw", F.explode(F.expr(ring)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < n)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < n)
-        )
-        .select(
-            F.expr(grid.pack_sql(REGION_RES, "_nc.x", "_nc.y")).alias("cell"),
-            F.expr("CAST(_nc.kw AS BIGINT) * n").alias("kn"),
-            F.expr("CAST(_nc.kw AS DOUBLE) * w_sumw").alias("kws"),
-        )
+    kw = "(2 - abs(_nx - _x)) * (2 - abs(_ny - _y))"
+    contrib = grid.explode_cells(
+        tiles, REGION_RES, "_x - 1", "_x + 1", "_y - 1", "_y + 1", cell="cell"
+    ).select(
+        "cell",
+        F.expr(f"CAST({kw} AS BIGINT) * n").alias("kn"),
+        F.expr(f"CAST({kw} AS DOUBLE) * w_sumw").alias("kws"),
     )
     return contrib.groupBy("cell").agg(
         F.sum("kn").alias("n_gauss"), F.sum("kws").alias("w_gauss")

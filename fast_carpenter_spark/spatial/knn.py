@@ -6,15 +6,17 @@ deterministic tie-break so the DuckDB oracle reproduces the exact rows
 (SURVEY.md §7 risk 5).  Two executions of the same contract:
 
 * **join forms** (``knn_bounded`` planar, ``knn_geo`` geodesic): pure
-  DataFrame algebra — explode each point over its ring cells, hash
-  equi-join them against the points-by-cell table (the only shuffle, keyed
-  by BIGINT cell), window ``row_number()`` <= k.  The bounded ring makes
-  this a single join round (vs. iterative expansion, SURVEY.md §2.4), but
-  every candidate pair is a shuffled join row: quadratic in any point mass.
+  DataFrame algebra — explode each point over its ring cells
+  (``grid.explode_cells``), hash equi-join them against the points-by-cell
+  table (the only shuffle, keyed by BIGINT cell), window ``row_number()``
+  <= k.  The bounded ring makes this a single join round (vs. iterative
+  expansion, SURVEY.md §2.4), but every candidate pair is a shuffled join
+  row: quadratic in any point mass.
 * **halo-exchange kernel** (``knn_local`` planar, ``knn_geo_local``
   geodesic): one shared implementation, ``_halo_knn``.  Points shuffle once
   to parent blocks of grid cells (plus a ghost copy to each block their
-  ring reaches), and one numpy function per block, ``_knn_block``, ranks
+  ring reaches, enumerated by ``grid.explode_cells`` at the block
+  resolution), and one numpy function per block, ``_knn_block``, ranks
   the ring candidates of every query cell in two vectorized paths: the
   block's sparse cells as one flat batch of (query, candidate) pairs with
   a segmented sort, its point-mass cells as dense 2-D distance blocks.
@@ -129,7 +131,6 @@ def knn_bounded(
     k: int = 3,
 ) -> DataFrame:
     """(id, nbr_id, rank, dist2) top-k rows per point."""
-    n = 1 << res
     pts = points.select(
         F.col(id_col).alias("_id"),
         F.col(lon_col).alias("_lon"),
@@ -138,22 +139,9 @@ def knn_bounded(
         F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
     )
 
-    ring_cells = pts.select(
-        "_id", "_lon", "_lat",
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-{ring}, {ring}), dx -> "
-                f"transform(sequence(-{ring}, {ring}), dy -> "
-                f"struct(_cx + dx AS x, _cy + dy AS y))))"
-            )
-        ).alias("_nc"),
-    ).filter(
-        (F.col("_nc.x") >= 0) & (F.col("_nc.x") < n)
-        & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < n)
-    ).select(
-        "_id", "_lon", "_lat",
-        F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("_cell"),
-    )
+    ring_cells = grid.explode_cells(
+        pts, res, f"_cx - {ring}", f"_cx + {ring}", f"_cy - {ring}", f"_cy + {ring}"
+    ).select("_id", "_lon", "_lat", "_cell")
 
     others = pts.select(
         F.col("_id").alias("_nbr"),
@@ -470,10 +458,8 @@ def _halo_knn(
     import pandas as pd
 
     res = ring.res
-    n = 1 << res
     shift = min(res, group_offset)
     group_res = res - shift
-    nbx = max(1, n >> shift)
     pts = points.select(
         F.col(id_col).alias("_id"),
         F.col(lon_col).alias("_lon"),
@@ -482,42 +468,23 @@ def _halo_knn(
         F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
     )
     rx = ring.rx_sql
-    if ring.wrap:
-        xlo, xhi = f"_cx - {rx}", f"_cx + {rx}"
-    else:
-        xlo, xhi = f"greatest(_cx - {rx}, 0)", f"least(_cx + {rx}, {n - 1})"
     # ALL parent blocks the ring bbox touches — a wide ring can span many
     # block columns, all of them at the pole.  Arithmetic shiftright floors
-    # negative cell offsets, pmod wraps block columns across the
-    # antimeridian (a no-op on a clamped range), and at most nbx
-    # consecutive columns keep the wrapped ones distinct.  Two explodes of
-    # plain sequences stay in generated code; the same enumeration as
-    # transform()/array_distinct lambdas runs interpreted (measured
-    # +0.3 s per 400k points at local[4]).
-    bx0 = f"shiftright({xlo}, {shift})"
-    bxs = f"sequence({bx0}, least(shiftright({xhi}, {shift}), {bx0} + {nbx - 1}))"
-    bys = (
-        f"sequence(shiftright(greatest(_cy - {ring.ry}, 0), {shift}), "
-        f"shiftright(least(_cy + {ring.ry}, {n - 1}), {shift}))"
-    )
+    # negative cell offsets, so the block bounds are the shifted cell bounds
     home = grid.pack_sql(group_res, f"shiftright(_cx, {shift})", f"shiftright(_cy, {shift})")
-    gcell = F.expr(grid.pack_sql(group_res, f"pmod(_bx, {nbx})", "_by"))
-    members = (
+    members = grid.explode_cells(
         pts.select(
-            "_id", "_lon", "_lat", "_cy",
+            "_id", "_lon", "_lat", "_cx", "_cy",
             F.expr(grid.pack_sql(res, "_cx", "_cy")).alias("_cell"),
             F.expr(home).alias("_home_g"),
-            F.explode(F.expr(bxs)).alias("_bx"),
-        )
-        .select(
-            "_id", "_lon", "_lat", "_cell", "_home_g", "_bx",
-            F.explode(F.expr(bys)).alias("_by"),
-        )
-        .select(
-            "_id", "_lon", "_lat", "_cell",
-            gcell.alias("_gcell"),
-            (F.col("_home_g") == gcell).alias("_core"),
-        )
+        ),
+        group_res,
+        f"shiftright(_cx - ({rx}), {shift})", f"shiftright(_cx + ({rx}), {shift})",
+        f"shiftright(_cy - {ring.ry}, {shift})", f"shiftright(_cy + {ring.ry}, {shift})",
+        wrap=ring.wrap, cell="_gcell",
+    ).select(
+        "_id", "_lon", "_lat", "_cell", "_gcell",
+        (F.col("_home_g") == F.col("_gcell")).alias("_core"),
     )
 
     # hot-BLOCK detection: tiny aggregate over home blocks, broadcast back
@@ -637,22 +604,9 @@ def radius_join(
         F.expr(grid.cell_x_sql(lon_col, res, "spark")).alias("_cx"),
         F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
     )
-    ring_cells = pts.select(
-        "_id", "_lon", "_lat",
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-{rx}, {rx}), dx -> "
-                f"transform(sequence(-{ry}, {ry}), dy -> "
-                f"struct(_cx + dx AS x, _cy + dy AS y))))"
-            )
-        ).alias("_nc"),
-    ).filter(
-        (F.col("_nc.x") >= 0) & (F.col("_nc.x") < n)
-        & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < n)
-    ).select(
-        "_id", "_lon", "_lat",
-        F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("_cell"),
-    )
+    ring_cells = grid.explode_cells(
+        pts, res, f"_cx - {rx}", f"_cx + {rx}", f"_cy - {ry}", f"_cy + {ry}"
+    ).select("_id", "_lon", "_lat", "_cell")
     others = pts.select(
         F.col("_id").alias("_nbr"),
         F.col("_lon").alias("_nlon"),
@@ -759,16 +713,10 @@ def _geo_ring_candidates(
     # per-point longitude half-width in CELLS; full ring when the disk
     # crosses a pole (lat +- deg_lat reaches it)
     rx = (
-        f"CASE WHEN ABS({lat_col}) + {deg_lat!r} >= 90.0 THEN CAST({n} AS BIGINT) "
+        f"CASE WHEN ABS(_lat) + {deg_lat!r} >= 90.0 THEN CAST({n} AS BIGINT) "
         f"ELSE CAST(CEIL(DEGREES(ASIN(LEAST(1.0, "
-        f"SIN({r_ang!r}) / COS(RADIANS({lat_col}))))) / {cell_w!r}) AS BIGINT) END"
+        f"SIN({r_ang!r}) / COS(RADIANS(_lat))))) / {cell_w!r}) AS BIGINT) END"
     )
-    # distinct-mod-n offset list: count = min(2*rx+1, n), starting at
-    # -min(rx, n/2) — covers -rx..rx exactly when narrow and every cell
-    # exactly once when the ring is full (no duplicate candidates)
-    cnt = f"LEAST(2 * ({rx}) + 1, CAST({n} AS BIGINT))"
-    lo = f"-LEAST(({rx}), CAST({n // 2} AS BIGINT))"
-    offsets = f"transform(sequence(0, {cnt} - 1), i -> CAST(i AS BIGINT) + ({lo}))"
 
     pts = points.select(
         F.col(id_col).alias("_id"),
@@ -776,25 +724,11 @@ def _geo_ring_candidates(
         F.col(lat_col).alias("_lat"),
         F.expr(grid.cell_x_sql(lon_col, res, "spark")).alias("_cx"),
         F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
-        F.expr(offsets).alias("_dxs"),
-    )
-    ring = (
-        pts.select(
-            "_id", "_lon", "_lat", "_cy",
-            F.explode(
-                F.expr(
-                    f"flatten(transform(_dxs, dx -> "
-                    f"transform(sequence(-{ry}, {ry}), dy -> "
-                    f"struct(pmod(_cx + dx, {n}) AS x, _cy + dy AS y))))"
-                )
-            ).alias("_nc"),
-        )
-        .filter((F.col("_nc.y") >= 0) & (F.col("_nc.y") < n))
-        .select(
-            "_id", "_lon", "_lat",
-            F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("_cell"),
-        )
-    )
+    ).withColumn("_rx", F.expr(rx))
+    # wrapped columns: each cell once, even for a full ring
+    ring = grid.explode_cells(
+        pts, res, "_cx - _rx", "_cx + _rx", f"_cy - {ry}", f"_cy + {ry}", wrap=True
+    ).select("_id", "_lon", "_lat", "_cell")
     others = points.select(
         F.col(id_col).alias("_nbr"),
         F.col(lon_col).alias("_nlon"),

@@ -9,9 +9,12 @@ crossing test per directed edge (x1,y1)->(x2,y2):
               AND px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
 
 Implementations (verified identical in tests):
-* a numpy kernel over Arrow batches (pandas UDF) — rings of varying length
-  are padded to the batch max and masked, the same pad/mask trick the
-  reference uses for jagged arrays (ref: tree_adapter.py:345-348);
+* the engine's refine: the formula as a Spark SQL higher-order-function
+  expression (``pip_condition_sql``, or ``pip_edges_condition_sql`` over
+  edges precomputed once by ``edges_sql``), kept in whole-stage codegen;
+* a numpy kernel, the test reference — rings of varying length are padded
+  to the batch max and masked, the same pad/mask trick the reference uses
+  for jagged arrays (ref: tree_adapter.py:345-348);
 * the identical formula as SQL for the DuckDB oracle (unnest edges, count
   crossings, parity) — independent evaluation, bit-identical doubles.
 
@@ -23,7 +26,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F, types as T
 
 
 def _pad_rings(rings: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -69,12 +71,6 @@ def points_in_polygon(
         xing = pxc < (x2 - x1) * (pyc - y1) / (y2 - y1) + x1
     crossings = straddles & xing & valid
     return (crossings.sum(axis=1) % 2).astype(bool)
-
-
-@F.pandas_udf(T.BooleanType())
-def pip_udf(lon: pd.Series, lat: pd.Series, ring_lon: pd.Series, ring_lat: pd.Series) -> pd.Series:
-    """Arrow-batched PIP refine over candidate pairs."""
-    return pd.Series(points_in_polygon(lon.values, lat.values, ring_lon, ring_lat))
 
 
 def pip_condition_sql(

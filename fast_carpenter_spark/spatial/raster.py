@@ -51,24 +51,11 @@ def focal_stats(spark, *, res: int = 6) -> DataFrame:
     generated raster.  Same single-explode no-join shape as the tile
     smooth; tile values are exact binary fractions so the sum channel is
     order-insensitive."""
-    n = 1 << res
     raster = spark.sql(raster_sql("spark", res))
     x = grid.unpack_x_sql("tile_id", "spark")
     y = grid.unpack_y_sql("tile_id", "spark")
-    ring = (
-        "flatten(transform(sequence(-1, 1), dx -> transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y))))"
-    )
-    contrib = (
-        raster.select("tile_value", F.explode(F.expr(ring)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < n)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < n)
-        )
-        .select(
-            F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("tile_id"),
-            "tile_value",
-        )
+    contrib = grid.explode_cells(
+        raster, res, f"{x} - 1", f"{x} + 1", f"{y} - 1", f"{y} + 1", cell="tile_id",
     )
     return contrib.groupBy("tile_id").agg(
         F.max("tile_value").alias("f_max"),

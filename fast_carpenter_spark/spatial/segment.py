@@ -68,40 +68,23 @@ def nearest_segment_join(
         F.expr(grid.cell_x_sql("lon", res, "spark")).alias("_cx"),
         F.expr(grid.cell_y_sql("lat", res, "spark")).alias("_cy"),
     )
-    ring = pts.select(
-        "doc_id", "lon", "lat",
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-{rx}, {rx}), dx -> "
-                f"transform(sequence(-{ry}, {ry}), dy -> "
-                f"struct(_cx + dx AS x, _cy + dy AS y))))"
-            )
-        ).alias("_nc"),
-    ).filter(
-        (F.col("_nc.x") >= 0) & (F.col("_nc.x") < n)
-        & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < n)
-    ).select(
-        "doc_id", "lon", "lat",
-        F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("_cell"),
-    )
-    seg_cover = segments.select(
-        "user_id", "seg_idx", "ax", "ay", "bx", "by",
-        F.expr(grid.cell_x_sql("least(ax, bx)", res, "spark")).alias("_x0"),
-        F.expr(grid.cell_x_sql("greatest(ax, bx)", res, "spark")).alias("_x1"),
-        F.expr(grid.cell_y_sql("least(ay, by)", res, "spark")).alias("_y0"),
-        F.expr(grid.cell_y_sql("greatest(ay, by)", res, "spark")).alias("_y1"),
-    ).select(
-        "user_id", "seg_idx", "ax", "ay", "bx", "by",
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(_x0, _x1), x -> "
-                "transform(sequence(_y0, _y1), y -> struct(x, y))))"
-            )
-        ).alias("_nc"),
-    ).select(
-        "user_id", "seg_idx", "ax", "ay", "bx", "by",
-        F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("_cell"),
-    )
+    ring = grid.explode_cells(
+        pts, res, f"_cx - {rx}", f"_cx + {rx}", f"_cy - {ry}", f"_cy + {ry}"
+    ).select("doc_id", "lon", "lat", "_cell")
+    # the bbox stays as columns under the explode: Catalyst sizes each join
+    # side by its row widths, blind to the explode fan-out, and these wider
+    # cover rows keep the point ring (fan-out bounded by the radius) the
+    # broadcast side
+    seg_cover = grid.explode_cells(
+        segments.select(
+            "user_id", "seg_idx", "ax", "ay", "bx", "by",
+            F.expr(grid.cell_x_sql("least(ax, bx)", res, "spark")).alias("_x0"),
+            F.expr(grid.cell_x_sql("greatest(ax, bx)", res, "spark")).alias("_x1"),
+            F.expr(grid.cell_y_sql("least(ay, by)", res, "spark")).alias("_y0"),
+            F.expr(grid.cell_y_sql("greatest(ay, by)", res, "spark")).alias("_y1"),
+        ),
+        res, "_x0", "_x1", "_y0", "_y1",
+    ).select("user_id", "seg_idx", "ax", "ay", "bx", "by", "_cell")
     d2 = _seg_d2_sql("lon", "lat", "ax", "ay", "bx", "by")
     cand = (
         ring.join(seg_cover, "_cell")

@@ -40,6 +40,19 @@ def _z_sql(local: str, wdeg: str, n_cells: str, tot: str, tot2: str) -> str:
     return f"({num} / {den})"
 
 
+def _ring1(cells: DataFrame, res: int, *, own: bool = True) -> DataFrame:
+    """``cells`` (a ``cell`` column at ``res`` plus values) once per
+    in-grid cell of its ring-1 neighbourhood, the target cell id replacing
+    ``cell``; ``own=False`` drops the cell itself (queen weights)."""
+    x = grid.unpack_x_sql("cell", "spark")
+    y = grid.unpack_y_sql("cell", "spark")
+    out = grid.explode_cells(
+        cells.withColumn("_x", F.expr(x)).withColumn("_y", F.expr(y)),
+        res, "_x - 1", "_x + 1", "_y - 1", "_y + 1", cell="cell",
+    )
+    return out if own else out.filter("_nx != _x OR _ny != _y")
+
+
 def gi_star(tiles: DataFrame, res: int) -> DataFrame:
     """Hotspot z-score per occupied cell.
 
@@ -48,21 +61,7 @@ def gi_star(tiles: DataFrame, res: int) -> DataFrame:
     local_sum/wdeg sum/count the occupied ring-1 neighbourhood (self
     included, Gi* convention).
     """
-    nside = 1 << res
-    x = grid.unpack_x_sql("cell", "spark")
-    y = grid.unpack_y_sql("cell", "spark")
-    ring = (
-        "flatten(transform(sequence(-1, 1), dx -> transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y))))"
-    )
-    contrib = (
-        tiles.select("n", F.explode(F.expr(ring)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < nside)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < nside)
-        )
-        .select(F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("cell"), "n")
-    )
+    contrib = _ring1(tiles, res).select("cell", "n")
     # Ring sums over ALL targets, then inner-join back to the occupied set:
     # both sides are keyed (and already shuffled) on `cell`, so the join is
     # co-partitioned — no extra exchange — and it both restricts the field
@@ -109,7 +108,6 @@ def moran_i(tiles: DataFrame, res: int) -> DataFrame:
     co-partitioned self-join, 1-row aggregates with a broadcast of the
     3-value global tuple — same skeleton as gi_star.
     """
-    nside = 1 << res
     glob = tiles.agg(
         F.count(F.lit(1)).alias("n_cells"), F.sum("n").alias("tot")
     )
@@ -121,24 +119,8 @@ def moran_i(tiles: DataFrame, res: int) -> DataFrame:
         .select("cell", "n_cells", F.expr("n_cells * n - tot").alias("d"))
         .localCheckpoint()
     )
-    x = grid.unpack_x_sql("cell", "spark")
-    y = grid.unpack_y_sql("cell", "spark")
-    ring8 = (
-        "filter(flatten(transform(sequence(-1, 1), dx -> "
-        "transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y, dx = 0 AND dy = 0 AS own)))), "
-        "c -> NOT c.own)"
-    )
-    nbr = (
-        dev.select("d", F.explode(F.expr(ring8)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < nside)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < nside)
-        )
-        .select(
-            F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("cell"),
-            F.col("d").alias("d_i"),
-        )
+    nbr = _ring1(dev, res, own=False).select(
+        "cell", F.col("d").alias("d_i")
     )
     # co-partitioned on `cell`: both sides keyed by the packed cell id
     pair_sums = nbr.join(dev.select("cell", F.col("d").alias("d_j")), "cell").agg(
@@ -179,31 +161,14 @@ def local_moran(tiles: DataFrame, res: int) -> DataFrame:
     bit-identical across engines.  Same scale skeleton as moran_i/gi_star.
     Returns (cell, d, lag, lisa_i, quadrant).
     """
-    nside = 1 << res
     glob = tiles.agg(F.count(F.lit(1)).alias("n_cells"), F.sum("n").alias("tot"))
     dev = (
         tiles.crossJoin(F.broadcast(glob))
         .select("cell", "n_cells", F.expr("n_cells * n - tot").alias("d"))
         .localCheckpoint()
     )
-    x = grid.unpack_x_sql("cell", "spark")
-    y = grid.unpack_y_sql("cell", "spark")
-    ring8 = (
-        "filter(flatten(transform(sequence(-1, 1), dx -> "
-        "transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y, dx = 0 AND dy = 0 AS own)))), "
-        "c -> NOT c.own)"
-    )
-    contrib = (
-        dev.select("d", F.explode(F.expr(ring8)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < nside)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < nside)
-        )
-        .select(
-            F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("cell"),
-            F.col("d").alias("d_nbr"),
-        )
+    contrib = _ring1(dev, res, own=False).select(
+        "cell", F.col("d").alias("d_nbr")
     )
     lag = contrib.groupBy("cell").agg(F.sum("d_nbr").alias("lag"))
     den = dev.agg(F.max("n_cells").alias("n_cells"), F.sum(F.expr("d * d")).alias("den"))
@@ -328,7 +293,6 @@ def bivariate_moran(tiles: DataFrame, res: int) -> DataFrame:
     bit-identical across engines.  Scale shape unchanged from moran_i:
     constant 8-offset explode, ONE co-partitioned cell join, 1-row
     aggregates + broadcast global tuple."""
-    nside = 1 << res
     glob = tiles.agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.sum("nx").alias("totx"),
@@ -343,24 +307,8 @@ def bivariate_moran(tiles: DataFrame, res: int) -> DataFrame:
         )
         .localCheckpoint()
     )
-    x = grid.unpack_x_sql("cell", "spark")
-    y = grid.unpack_y_sql("cell", "spark")
-    ring8 = (
-        "filter(flatten(transform(sequence(-1, 1), dx -> "
-        "transform(sequence(-1, 1), dy -> "
-        f"struct({x} + dx AS x, {y} + dy AS y, dx = 0 AND dy = 0 AS own)))), "
-        "c -> NOT c.own)"
-    )
-    nbr = (
-        dev.select("dx_", F.explode(F.expr(ring8)).alias("_nc"))
-        .filter(
-            (F.col("_nc.x") >= 0) & (F.col("_nc.x") < nside)
-            & (F.col("_nc.y") >= 0) & (F.col("_nc.y") < nside)
-        )
-        .select(
-            F.expr(grid.pack_sql(res, "_nc.x", "_nc.y")).alias("cell"),
-            F.col("dx_").alias("d_i"),
-        )
+    nbr = _ring1(dev, res, own=False).select(
+        "cell", F.col("dx_").alias("d_i")
     )
     pair_sums = nbr.join(dev.select("cell", F.col("dy_").alias("d_j")), "cell").agg(
         F.sum(F.expr("d_i * d_j")).alias("num"),

@@ -119,21 +119,90 @@ def test_parent_res_validation():
 
 
 def test_arrow_encoder_matches_sql(spark):
-    """cell_encode_column (Arrow/numpy) == cell_sql (codegen) on real span
-    geometry — the north-star's pandas-UDF encoder and the engine default
-    produce identical cell ids."""
+    """cell_sql (codegen) == encode_cells (the numpy kernel) on real span
+    geometry: the engine's encode and its reference give identical ids."""
     from pyspark.sql import functions as F
 
     from fast_carpenter_spark import synth
 
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .createOrReplaceTempView("documents")
-    spans = spark.sql(synth.flat_spans_sql("spark"))
-    both = spans.select(
-        grid.cell_encode_column("lon", "lat", 9).alias("via_udf"),
-        F.expr(grid.cell_sql("lon", "lat", 9, "spark")).alias("via_sql"),
+    spans = spark.sql(synth.flat_spans_sql("spark")).select(
+        "lon", "lat", F.expr(grid.cell_sql("lon", "lat", 9, "spark")).alias("via_sql")
+    ).toPandas()
+    want = grid.encode_cells(spans["lon"].to_numpy(), spans["lat"].to_numpy(), 9)
+    assert len(spans) > 0
+    assert (spans["via_sql"].to_numpy() == want).all()
+
+
+def _explode(spark, rows, res, *, wrap):
+    """explode_cells over (id, x, y, left, right, down, up) rows, the
+    rectangle x - left .. x + right by y - down .. y + up: id -> cells."""
+    df = spark.createDataFrame(
+        rows, "id int, x long, y long, l long, r long, d long, u long"
     )
-    assert both.filter("via_udf != via_sql").count() == 0
+    out = grid.explode_cells(df, res, "x - l", "x + r", "y - d", "y + u", wrap=wrap)
+    got = {}
+    for row in out.collect():
+        packed = grid.pack_cells(res, np.array([row._nx]), np.array([row._ny]))
+        assert row._cell == int(packed[0])
+        got.setdefault(row.id, []).append((row._nx, row._ny))
+    return got
+
+
+def _brute(res, x, y, l, r, d, u, *, wrap):
+    n = 1 << res
+    return {
+        (cx % n, cy)
+        for cx in range(x - l, x + r + 1)
+        for cy in range(y - d, y + u + 1)
+        if 0 <= cy < n and (wrap or 0 <= cx < n)
+    }
+
+
+def test_explode_cells_clamps(spark):
+    rows = [
+        (0, 3, 4, 1, 1, 1, 1),  # mid-grid ring
+        (1, 0, 0, 2, 2, 2, 2),  # the four corners
+        (2, 0, 7, 2, 2, 2, 2),
+        (3, 7, 0, 2, 2, 2, 2),
+        (4, 7, 7, 2, 2, 2, 2),
+        (5, 4, 2, 3, 1, 0, 2),  # asymmetric bbox
+    ]
+    got = _explode(spark, rows, 3, wrap=False)
+    for row in rows:
+        cells = got[row[0]]
+        assert len(cells) == len(set(cells)), row
+        assert set(cells) == _brute(3, *row[1:], wrap=False), row
+
+
+def test_explode_cells_wraps_each_column_once(spark):
+    n = 8
+    rows = [
+        (0, 1, 4, 2, 2, 1, 1),  # rx < n/2, across the antimeridian
+        (1, 5, 0, 4, 4, 1, 1),  # rx = n/2: 2 rx + 1 > n
+        (2, 3, 7, 8, 8, 0, 0),  # rx = n
+        (3, 6, 3, 11, 11, 1, 1),  # rx > n
+    ]
+    got = _explode(spark, rows, 3, wrap=True)
+    for row in rows:
+        cells = got[row[0]]
+        assert len(cells) == len(set(cells)), row
+        assert set(cells) == _brute(3, *row[1:], wrap=True), row
+    for i in (1, 2, 3):
+        for ny in {cy for _, cy in got[i]}:
+            assert sorted(cx for cx, cy in got[i] if cy == ny) == list(range(n))
+
+
+@pytest.mark.parametrize("wrap", [False, True])
+@pytest.mark.parametrize("bounds", [
+    ("x + 1", "x - 1", "y", "y"),  # reversed columns
+    ("x", "x", "y + 1", "y - 1"),  # reversed rows
+])
+def test_explode_cells_reversed_bounds_raise(spark, wrap, bounds):
+    df = spark.createDataFrame([(0, 3, 4)], "id int, x long, y long")
+    with pytest.raises(Exception, match="Illegal sequence boundaries"):
+        grid.explode_cells(df, 3, *bounds, wrap=wrap).collect()
 
 
 def test_grid_properties_hypothesis():

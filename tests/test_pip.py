@@ -6,7 +6,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from fast_carpenter_spark.spatial.pip import pip_udf, points_in_polygon
+from fast_carpenter_spark.spatial.pip import (
+    edges_sql,
+    pip_edges_condition_sql,
+    points_in_polygon,
+)
 from fast_carpenter_spark import synth
 
 SQUARE_X = [0.0, 2.0, 2.0, 0.0]
@@ -79,6 +83,8 @@ def test_matches_duckdb_parity_formula():
 
 
 def test_pip_udf_on_spark(spark):
+    """The engine's Spark refine (edges precomputed, crossing parity in
+    codegen SQL) agrees with the numpy kernel row for row."""
     rows = [
         (1.0, 1.0, SQUARE_X, SQUARE_Y),
         (3.0, 1.0, SQUARE_X, SQUARE_Y),
@@ -88,10 +94,16 @@ def test_pip_udf_on_spark(spark):
     df = spark.createDataFrame(
         rows, "lon double, lat double, ring_lon array<double>, ring_lat array<double>"
     )
+    inside = pip_edges_condition_sql("lon", "lat")
     got = [
         r.inside
-        for r in df.withColumn(
-            "inside", pip_udf(F.col("lon"), F.col("lat"), F.col("ring_lon"), F.col("ring_lat"))
-        ).collect()
+        for r in df.withColumn("edges", F.expr(edges_sql()))
+        .select(F.expr(inside).alias("inside"))
+        .collect()
     ]
     assert got == [True, False, True, False]
+    want = points_in_polygon(
+        [r[0] for r in rows], [r[1] for r in rows],
+        [r[2] for r in rows], [r[3] for r in rows],
+    )
+    assert got == list(want)

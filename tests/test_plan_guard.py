@@ -24,7 +24,10 @@ GUARDED = ["pip_tile_agg", "knn", "tile_agg", "radius_join", "sessions_overlap",
            "knn_local", "dedup_minhash_lsh", "dedup_cluster", "tile_pyramid",
            # the other two join strategies' queries: the refine (_inside OR
            # ray-cast) must stay a condition of the polygon hash join
-           "pip_join_salted", "pip_anti"]
+           "pip_join_salted", "pip_anti",
+           # the join forms and tile smoothers on the shared cell enumerator
+           "knn_geo", "radius_join_geo", "segment_join", "dbscan",
+           "tile_smooth", "tile_gauss"]
 
 
 def _plan(spark, name):
