@@ -224,45 +224,43 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cos FROM (
 """
 
 
-def rerank_recall(
-    emb: DataFrame, *, query_filter: str = "vec_id % 50 = 0", k: int = 5
-) -> DataFrame:
-    """Recall@k of the multi-probe rerank path against the exact brute-force
-    baseline, as a one-row summary: (k, n_exact, n_hit, recall)."""
-    exact = cosine_topk(emb, query_filter=query_filter, k=k)
-    approx = lsh_rerank_topk(emb, query_filter=query_filter, k=k)
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
+def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Recall@k of an approximate top-k against the exact top-k, as one row
+    (k, n_exact, n_hit, recall) — the single scorer every ANN family (LSH,
+    IVF, PQ, IVF-PQ, trained codebooks) reports through.
+
+    Both inputs carry (query_id, neighbor_id) with at most one row per
+    pair, which every row_number top-k here guarantees.  n_exact counts the
+    exact pairs, n_hit those the approx top-k also returns; approx queries
+    absent from ``exact`` score nothing.  Shape: one left join on the pair
+    and one keyless aggregate; recall is NULL when ``exact`` is empty."""
+    hit = approx.select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     return (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))
+        exact.select("query_id", "neighbor_id")
+        .join(hit, ["query_id", "neighbor_id"], "left")
+        .agg(F.count(F.lit(1)).alias("n_exact"), F.count("_hit").alias("n_hit"))
         .select(
             F.lit(k).cast("int").alias("k"),
             "n_exact",
             "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall"),
+            F.expr("CAST(n_hit AS DOUBLE) / nullif(n_exact, 0)").alias("recall"),
         )
     )
 
 
-def rerank_recall_oracle_sql(
-    *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
-    table: str = "embeddings", extra_cte: str = "",
+def recall_oracle_sql(
+    exact_sql: str, approx_sql: str, *, k: int, extra_cte: str = ""
 ) -> str:
-    exact = cosine_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    approx = lsh_rerank_oracle_sql(query_filter=query_filter, k=k, table=table)
+    """DuckDB twin of :func:`recall_at_k` over two top-k query texts;
+    ``extra_cte`` (text ending in a comma) defines tables they read."""
     return f"""
-WITH {extra_cte}exact AS ({exact}), approx AS ({approx}),
-hit AS (
-  SELECT e.query_id, e.neighbor_id FROM exact e
-  WHERE EXISTS (SELECT 1 FROM approx a
-                WHERE a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id)
-)
+WITH {extra_cte}exact AS ({exact_sql}), approx AS ({approx_sql})
 SELECT CAST({k} AS INT) AS k,
-       (SELECT count(*) FROM exact) AS n_exact,
-       (SELECT count(*) FROM hit) AS n_hit,
-       CAST((SELECT count(*) FROM hit) AS DOUBLE) / (SELECT count(*) FROM exact) AS recall
+       count(*) AS n_exact,
+       count(a.query_id) AS n_hit,
+       CAST(count(a.query_id) AS DOUBLE) / nullif(count(*), 0) AS recall
+FROM exact e
+LEFT JOIN approx a ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
 """
 
 
@@ -542,48 +540,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cos FROM (
     ON ({ivf_assign_sql('c.embedding', 'duck')}) = p.probe
    AND c.vec_id != p.query_id
 ) WHERE rank <= {k}
-"""
-
-
-def ivf_recall(
-    emb: DataFrame, *, query_filter: str = "vec_id % 50 = 0", k: int = 5
-) -> DataFrame:
-    """Recall@k of the IVF probe path vs exact brute force, one-row summary
-    (same shape as rerank_recall so the two ANN families are comparable)."""
-    exact = cosine_topk(emb, query_filter=query_filter, k=k)
-    approx = ivf_topk(emb, query_filter=query_filter, k=k)
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
-    return (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.lit(k).cast("int").alias("k"),
-            "n_exact",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall"),
-        )
-    )
-
-
-def ivf_recall_oracle_sql(
-    *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
-    table: str = "embeddings", extra_cte: str = "",
-) -> str:
-    exact = cosine_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    approx = ivf_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    return f"""
-WITH {extra_cte}exact AS ({exact}), approx AS ({approx}),
-hit AS (
-  SELECT e.query_id, e.neighbor_id FROM exact e
-  WHERE EXISTS (SELECT 1 FROM approx a
-                WHERE a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id)
-)
-SELECT CAST({k} AS INT) AS k,
-       (SELECT count(*) FROM exact) AS n_exact,
-       (SELECT count(*) FROM hit) AS n_hit,
-       CAST((SELECT count(*) FROM hit) AS DOUBLE) / (SELECT count(*) FROM exact) AS recall
 """
 
 

@@ -271,48 +271,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, d2 FROM (
 """
 
 
-def pq_recall(
-    emb: DataFrame, *, query_filter: str = "vec_id % 50 = 0", k: int = 5
-) -> DataFrame:
-    """Recall@k of the PQ/ADC path vs exact L2, one-row summary (same
-    shape as ann.rerank_recall / ann.ivf_recall)."""
-    exact = l2_topk(emb, query_filter=query_filter, k=k)
-    approx = pq_adc_topk(emb, query_filter=query_filter, k=k)
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
-    return (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.lit(k).cast("int").alias("k"),
-            "n_exact",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall"),
-        )
-    )
-
-
-def pq_recall_oracle_sql(
-    *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
-    table: str = "embeddings", extra_cte: str = "",
-) -> str:
-    exact = l2_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    approx = pq_adc_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    return f"""
-WITH {extra_cte}exact AS ({exact}), approx AS ({approx}),
-hit AS (
-  SELECT e.query_id, e.neighbor_id FROM exact e
-  WHERE EXISTS (SELECT 1 FROM approx a
-                WHERE a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id)
-)
-SELECT CAST({k} AS INT) AS k,
-       (SELECT count(*) FROM exact) AS n_exact,
-       (SELECT count(*) FROM hit) AS n_hit,
-       CAST((SELECT count(*) FROM hit) AS DOUBLE) / (SELECT count(*) FROM exact) AS recall
-"""
-
-
 def pq_rerank_topk(
     emb: DataFrame, *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
     shortlist: int = 50,
@@ -361,52 +319,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, d2 FROM (
   JOIN {table} q ON q.vec_id = s.query_id
   JOIN {table} c ON c.vec_id = s.neighbor_id
 ) WHERE rank <= {k}
-"""
-
-
-def pq_rerank_recall(
-    emb: DataFrame, *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
-    shortlist: int = 50,
-) -> DataFrame:
-    """Recall@k of ADC-shortlist + exact rerank vs exact L2."""
-    exact = l2_topk(emb, query_filter=query_filter, k=k)
-    approx = pq_rerank_topk(
-        emb, query_filter=query_filter, k=k, shortlist=shortlist
-    )
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
-    return (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.lit(k).cast("int").alias("k"),
-            "n_exact",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall"),
-        )
-    )
-
-
-def pq_rerank_recall_oracle_sql(
-    *, query_filter: str = "vec_id % 50 = 0", k: int = 5, shortlist: int = 50,
-    table: str = "embeddings", extra_cte: str = "",
-) -> str:
-    exact = l2_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    approx = pq_rerank_topk_oracle_sql(
-        query_filter=query_filter, k=k, shortlist=shortlist, table=table
-    )
-    return f"""
-WITH {extra_cte}exact AS ({exact}), approx AS ({approx}),
-hit AS (
-  SELECT e.query_id, e.neighbor_id FROM exact e
-  WHERE EXISTS (SELECT 1 FROM approx a
-                WHERE a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id)
-)
-SELECT CAST({k} AS INT) AS k,
-       (SELECT count(*) FROM exact) AS n_exact,
-       (SELECT count(*) FROM hit) AS n_hit,
-       CAST((SELECT count(*) FROM hit) AS DOUBLE) / (SELECT count(*) FROM exact) AS recall
 """
 
 
@@ -615,54 +527,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, d2 FROM (
 """
 
 
-def ivfpq_recall(
-    emb: DataFrame, *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
-    n_probe: int = N_PROBE, shortlist: int = 50,
-) -> DataFrame:
-    """Recall@k of the full IVF-PQ path vs exact L2."""
-    exact = l2_topk(emb, query_filter=query_filter, k=k)
-    approx = ivfpq_rerank_topk(
-        emb, query_filter=query_filter, k=k, n_probe=n_probe, shortlist=shortlist
-    )
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
-    )
-    return (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.lit(k).cast("int").alias("k"),
-            "n_exact",
-            "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall"),
-        )
-    )
-
-
-def ivfpq_recall_oracle_sql(
-    *, query_filter: str = "vec_id % 50 = 0", k: int = 5,
-    n_probe: int = N_PROBE, shortlist: int = 50,
-    table: str = "embeddings", extra_cte: str = "",
-) -> str:
-    exact = l2_topk_oracle_sql(query_filter=query_filter, k=k, table=table)
-    approx = ivfpq_rerank_topk_oracle_sql(
-        query_filter=query_filter, k=k, n_probe=n_probe,
-        shortlist=shortlist, table=table,
-    )
-    return f"""
-WITH {extra_cte}exact AS ({exact}), approx AS ({approx}),
-hit AS (
-  SELECT e.query_id, e.neighbor_id FROM exact e
-  WHERE EXISTS (SELECT 1 FROM approx a
-                WHERE a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id)
-)
-SELECT CAST({k} AS INT) AS k,
-       (SELECT count(*) FROM exact) AS n_exact,
-       (SELECT count(*) FROM hit) AS n_hit,
-       CAST((SELECT count(*) FROM hit) AS DOUBLE) / (SELECT count(*) FROM exact) AS recall
-"""
-
-
 # --- trained codebooks: exact distributed k-means, in-engine -----------------
 # Round-4 (VERDICT item 4).  The lattice codebooks above give raw ADC zero
 # resolution INSIDE a tight cluster; training moves the codes onto the data.
@@ -756,6 +620,12 @@ def trained_cb_ctes(
         )
         reasm = "list(comp ORDER BY d)"
         fdiv = "(s - (((s % n) + n) % n)) // n"
+    # Every codebook feeds both the next E-step and the next codebook.
+    # DuckDB inlines CTEs, so the plain chain re-derives cb0 2^rounds times
+    # (IVF-PQ search oracle at sf0.001 on 4 cores: 358 s, 31 s materialized);
+    # MATERIALIZED evaluates each codebook once.  Spark shares them through
+    # exchange reuse already.
+    cb_as = "AS" if dialect == "spark" else "AS MATERIALIZED"
     d2 = _d2i_sql("s.sv", "c.cent", dialect)
     ctes = [
         f"subs AS (SELECT vec_id, m, {sv} AS sv FROM {table} {mexpand})",
@@ -763,7 +633,7 @@ def trained_cb_ctes(
         f"train AS (SELECT vec_id, m, {sv} AS sv FROM tsubs {mexpand})",
         f"tiles AS (SELECT vec_id, m, sv, ntile({k}) OVER "
         f"(PARTITION BY m ORDER BY sv, vec_id) AS tile FROM train)",
-        f"cb0 AS (SELECT m, tile - 1 AS code, sv AS cent FROM "
+        f"cb0 {cb_as} (SELECT m, tile - 1 AS code, sv AS cent FROM "
         f"(SELECT m, tile, sv, row_number() OVER (PARTITION BY m, tile "
         f"ORDER BY sv, vec_id) AS rn FROM tiles) _q WHERE rn = 1)",
     ]
@@ -785,7 +655,7 @@ def trained_cb_ctes(
             f"(SELECT m, code, d, {fdiv} AS comp FROM g{r}) _u GROUP BY m, code)"
         )
         ctes.append(
-            f"cb{r} AS (SELECT c.m, c.code, coalesce(u.cent, c.cent) AS cent "
+            f"cb{r} {cb_as} (SELECT c.m, c.code, coalesce(u.cent, c.cent) AS cent "
             f"FROM {prev} c LEFT JOIN u{r} u ON u.m = c.m AND u.code = c.code)"
         )
         prev = f"cb{r}"
@@ -816,78 +686,11 @@ def trained_codebook_body_sql(
     return f"WITH {extra_cte}{ctes}\n{tail}"
 
 
-def trained_recall_body_sql(
-    dialect: str, *, k: int = N_CODES, rounds: int = TRAIN_ROUNDS,
-    table: str = "embeddings_c", train_filter: str = "true",
-    query_filter: str = "vec_id % 50 = 0", topk: int = 5,
-    extra_cte: str = "",
-) -> str:
-    """Full query text: recall@topk of raw trained-codebook ADC vs exact
-    L2 — encode (E-step under the final codebook), per-query LUT, ONE
-    equi-join on (m, code) + groupBy sum; raw vectors appear only in the
-    exact baseline.  All estimated distances are exact BIGINTs, so the
-    groupBy sum is order-insensitive in both engines."""
-    ctes, final = trained_cb_ctes(
-        dialect, k=k, rounds=rounds, table=table, train_filter=train_filter
-    )
-    d2 = _d2i_sql("s.sv", "c.cent", dialect)
-    l2 = l2_sql("q.embedding", "c.embedding", dialect)
-    tail_ctes = f""",
-codes AS (
-  SELECT vec_id AS neighbor_id, m, code FROM (
-    SELECT s.vec_id, s.m, c.code,
-           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY {d2}, c.code) AS rk
-    FROM subs s JOIN {final} c ON c.m = s.m
-  ) _c WHERE rk = 1
-),
-lut AS (
-  SELECT s.vec_id AS query_id, s.m, c.code, {d2} AS d2
-  FROM (SELECT * FROM subs WHERE {query_filter}) s
-  JOIN {final} c ON c.m = s.m
-),
-est AS (
-  SELECT l.query_id, c.neighbor_id, CAST(sum(l.d2) AS BIGINT) AS est_d2
-  FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-  WHERE c.neighbor_id != l.query_id
-  GROUP BY l.query_id, c.neighbor_id
-),
-approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY est_d2, neighbor_id) AS rank
-    FROM est
-  ) _a WHERE rank <= {topk}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY {l2}, c.vec_id) AS rank
-    FROM (SELECT * FROM {table} WHERE {query_filter}) q
-    JOIN {table} c ON q.vec_id != c.vec_id
-  ) _e WHERE rank <= {topk}
-)
-SELECT CAST({topk} AS INT) AS k,
-       count(1) AS n_exact,
-       count(a.query_id) AS n_hit,
-       CAST(count(a.query_id) AS DOUBLE) / count(1) AS recall
-FROM exact e
-LEFT JOIN approx a
-  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id"""
-    return f"WITH {extra_cte}{ctes}{tail_ctes}"
-
-
 def trained_codebook(emb: DataFrame, **kw) -> DataFrame:
     """Spark side of trained_codebook_body_sql over a registered view of
     ``emb`` (same text, Catalyst-compiled)."""
     emb.createOrReplaceTempView("embeddings_c")
     return emb.sparkSession.sql(trained_codebook_body_sql("spark", **kw))
-
-
-def trained_pq_recall(emb: DataFrame, **kw) -> DataFrame:
-    emb.createOrReplaceTempView("embeddings_c")
-    return emb.sparkSession.sql(trained_recall_body_sql("spark", **kw))
 
 
 # --- trained IVF-PQ: k-means codebooks on coarse residuals -------------------
@@ -909,7 +712,7 @@ def trained_pq_recall(emb: DataFrame, **kw) -> DataFrame:
 
 def _resid_sql(dialect: str, list_col: str = "list_id", orig: str = "orig") -> str:
     """Residual of ``orig`` against its coarse centroid (BIGINT-exact):
-    the IVF-PQ pre-step shared by the recall diagnostic, the materialized
+    the IVF-PQ pre-step shared by the search oracle, the materialized
     search and the stored-codebook trainer."""
     if dialect == "spark":
         return (
@@ -926,138 +729,13 @@ def _resid_sql(dialect: str, list_col: str = "list_id", orig: str = "orig") -> s
     )
 
 
-def _trained_ivfpq_est_sql(
-    dialect: str, *,
-    k: int = N_CODES, rounds: int = TRAIN_ROUNDS,
-    table: str = "embeddings_c", train_filter: str = "true",
-    query_filter: str = "vec_id % 50 = 0",
-    n_probe: int = N_PROBE, extra_cte: str = "",
-) -> str:
-    """``WITH ... est`` prefix shared by the trained-IVF-PQ recall
-    diagnostic and the materialized-search oracle: coarse-assign, residual
-    table, the k-means recurrence over residuals, encode, probed query
-    LUTs, and the additive est_d2 aggregate."""
-    resid_i = _resid_sql(dialect)
-    if dialect == "spark":
-        qsv = f"transform(slice(remb, m * {SUB_DIM} + 1, {SUB_DIM}), x -> x)"
-        mexpand = f"LATERAL VIEW explode(sequence(0, {M_SUB - 1})) _mr AS m"
-        sim_expl = (
-            "SELECT query_id, orig, posexplode(sims) AS (probe, sim) FROM qsim0"
-        )
-    else:
-        qsv = (
-            f"list_transform(list_slice(remb, m * {SUB_DIM} + 1, "
-            f"m * {SUB_DIM} + {SUB_DIM}), x -> x)"
-        )
-        mexpand = f"CROSS JOIN (SELECT unnest(range(0, {M_SUB})) AS m) _mr"
-        sim_expl = (
-            "SELECT query_id, orig, CAST(generate_subscripts(sims, 1) - 1 AS INT)"
-            " AS probe, unnest(sims) AS sim FROM qsim0"
-        )
-    pre = f"""{extra_cte}assigned AS (
-  SELECT vec_id, embedding AS orig,
-         {ivf_assign_sql('embedding', dialect)} AS list_id
-  FROM {table}
-),
-rtbl AS (SELECT vec_id, list_id, {resid_i} AS embedding FROM assigned),
-"""
-    ctes, final = trained_cb_ctes(
-        dialect, k=k, rounds=rounds, table="rtbl", train_filter=train_filter
-    )
-    qd2 = _d2i_sql("q.sv", "c.cent", dialect)
-    tail = f""",
-enc AS (
-  SELECT vec_id, m, code FROM (
-    SELECT s.vec_id, s.m, c.code,
-           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY {qd2.replace('q.sv', 's.sv')}, c.code) AS rk
-    FROM subs s JOIN {final} c ON c.m = s.m
-  ) _e WHERE rk = 1
-),
-codes AS (
-  SELECT e.vec_id AS neighbor_id, a.list_id AS probe, e.m, e.code
-  FROM enc e JOIN assigned a ON a.vec_id = e.vec_id
-),
-qsim0 AS (
-  SELECT vec_id AS query_id, orig,
-         {centroid_sims_sql('orig', dialect)} AS sims
-  FROM assigned WHERE {query_filter}
-),
-qsim AS ({sim_expl}),
-qprobe AS (
-  SELECT query_id, probe, {_resid_sql(dialect, list_col='probe')} AS remb
-  FROM (
-    SELECT query_id, orig, probe,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, probe) AS pr
-    FROM qsim
-  ) _p WHERE pr <= {n_probe}
-),
-qsubs AS (SELECT query_id, probe, m, {qsv} AS sv FROM qprobe {mexpand}),
-lut AS (
-  SELECT q.query_id, q.probe, q.m, c.code, {qd2} AS d2
-  FROM qsubs q JOIN {final} c ON c.m = q.m
-),
-est AS (
-  SELECT l.query_id, c.neighbor_id, CAST(sum(l.d2) AS BIGINT) AS est_d2
-  FROM codes c
-  JOIN lut l ON l.probe = c.probe AND l.m = c.m AND l.code = c.code
-  WHERE c.neighbor_id != l.query_id
-  GROUP BY l.query_id, c.neighbor_id
-)"""
-    return f"WITH {pre}{ctes}{tail}"
-
-
-def trained_ivfpq_recall_body_sql(
-    dialect: str, *,
-    k: int = N_CODES, rounds: int = TRAIN_ROUNDS,
-    table: str = "embeddings_c", train_filter: str = "true",
-    query_filter: str = "vec_id % 50 = 0", topk: int = 5,
-    n_probe: int = N_PROBE, extra_cte: str = "",
-) -> str:
-    est = _trained_ivfpq_est_sql(
-        dialect, k=k, rounds=rounds, table=table, train_filter=train_filter,
-        query_filter=query_filter, n_probe=n_probe, extra_cte=extra_cte,
-    )
-    l2 = l2_sql("q.embedding", "c.embedding", dialect)
-    return f"""{est},
-approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY est_d2, neighbor_id) AS rank
-    FROM est
-  ) _a WHERE rank <= {topk}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY {l2}, c.vec_id) AS rank
-    FROM (SELECT * FROM {table} WHERE {query_filter}) q
-    JOIN {table} c ON q.vec_id != c.vec_id
-  ) _e WHERE rank <= {topk}
-)
-SELECT CAST({topk} AS INT) AS k,
-       count(1) AS n_exact,
-       count(a.query_id) AS n_hit,
-       CAST(count(a.query_id) AS DOUBLE) / count(1) AS recall
-FROM exact e
-LEFT JOIN approx a
-  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id"""
-
-
-def trained_ivfpq_recall(emb: DataFrame, **kw) -> DataFrame:
-    emb.createOrReplaceTempView("embeddings_c")
-    return emb.sparkSession.sql(trained_ivfpq_recall_body_sql("spark", **kw))
-
-
 # --- materialized trained codebooks (round-5; VERDICT r4 item 2) -------------
 # Training is a ONE-TIME job whose output is the index artifact — k*M_SUB
-# rows of (m, code, cent).  The diagnostic queries above re-derive the
-# k-means recurrence inside every plan (48 exchanges / 22 sort-merge joins
-# at k=32), which is fine for a correctness diagnostic but wrong for the
-# production encode path: at 10^12 vectors you train once on a sample,
-# COMMIT the codebook as a table, and every search joins the stored rows.
+# rows of (m, code, cent).  Re-deriving the k-means recurrence inside every
+# search plan (48 exchanges / 22 sort-merge joins at k=32) is fine for an
+# oracle but wrong for the production encode path: at 10^12 vectors you
+# train once on a sample, COMMIT the codebook as a table, and every search
+# (and every trained recall score) joins the stored rows.
 #
 # store_trained_codebook() runs the recurrence once and commits the result
 # through the engine's own snapshot writer (sources/snapshot.write_snapshot
@@ -1242,8 +920,8 @@ SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, est_d2 FROM (
 # the snapshot writer, and search becomes map-side coarse-assign + residual
 # + encode/LUT folds over the literal rows, with the vetted equi-join on
 # (probe, m, code) + one additive groupBy + the top-k window — the same
-# ~4-exchange shape as trained_adc_topk_from_rows, vs the recurrence-in-plan
-# diagnostic (trained_ivfpq_recall).
+# ~4-exchange shape as trained_adc_topk_from_rows, vs the recurrence run in
+# the plan (trained_ivfpq_topk_oracle_sql).
 
 
 def trained_ivfpq_codebook_table(emb: DataFrame, **kw) -> DataFrame:
@@ -1370,15 +1048,82 @@ def trained_ivfpq_topk_oracle_sql(
     n_probe: int = N_PROBE,
     extra_cte: str = "",
 ) -> str:
-    """Oracle twin of trained_ivfpq_topk_from_rows: re-derives the residual
-    codebook via the recurrence in-query (shared est prefix with the recall
-    diagnostic) — values agree because both reach the same integer fixed
-    point; only the plans differ."""
-    est = _trained_ivfpq_est_sql(
-        dialect, k=k, rounds=rounds, table=table, train_filter=train_filter,
-        query_filter=query_filter, n_probe=n_probe, extra_cte=extra_cte,
+    """Oracle twin of trained_ivfpq_topk_from_rows: coarse-assign, residual
+    table, the k-means recurrence over residuals re-derived in-query,
+    encode, probed query LUTs and the additive est_d2 aggregate — values
+    agree because both reach the same integer fixed point; only the plans
+    differ."""
+    resid_i = _resid_sql(dialect)
+    # DuckDB: the residual table feeds the codebook training's `train`
+    # (every round) and `subs`; materialized, coarse assignment runs once
+    rtbl_as = "AS" if dialect == "spark" else "AS MATERIALIZED"
+    if dialect == "spark":
+        qsv = f"transform(slice(remb, m * {SUB_DIM} + 1, {SUB_DIM}), x -> x)"
+        mexpand = f"LATERAL VIEW explode(sequence(0, {M_SUB - 1})) _mr AS m"
+        sim_expl = (
+            "SELECT query_id, orig, posexplode(sims) AS (probe, sim) FROM qsim0"
+        )
+    else:
+        qsv = (
+            f"list_transform(list_slice(remb, m * {SUB_DIM} + 1, "
+            f"m * {SUB_DIM} + {SUB_DIM}), x -> x)"
+        )
+        mexpand = f"CROSS JOIN (SELECT unnest(range(0, {M_SUB})) AS m) _mr"
+        sim_expl = (
+            "SELECT query_id, orig, CAST(generate_subscripts(sims, 1) - 1 AS INT)"
+            " AS probe, unnest(sims) AS sim FROM qsim0"
+        )
+    pre = f"""{extra_cte}assigned AS (
+  SELECT vec_id, embedding AS orig,
+         {ivf_assign_sql('embedding', dialect)} AS list_id
+  FROM {table}
+),
+rtbl {rtbl_as} (SELECT vec_id, list_id, {resid_i} AS embedding FROM assigned),
+"""
+    ctes, final = trained_cb_ctes(
+        dialect, k=k, rounds=rounds, table="rtbl", train_filter=train_filter
     )
-    return f"""{est}
+    qd2 = _d2i_sql("q.sv", "c.cent", dialect)
+    tail = f""",
+enc AS (
+  SELECT vec_id, m, code FROM (
+    SELECT s.vec_id, s.m, c.code,
+           row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY {qd2.replace('q.sv', 's.sv')}, c.code) AS rk
+    FROM subs s JOIN {final} c ON c.m = s.m
+  ) _e WHERE rk = 1
+),
+codes AS (
+  SELECT e.vec_id AS neighbor_id, a.list_id AS probe, e.m, e.code
+  FROM enc e JOIN assigned a ON a.vec_id = e.vec_id
+),
+qsim0 AS (
+  SELECT vec_id AS query_id, orig,
+         {centroid_sims_sql('orig', dialect)} AS sims
+  FROM assigned WHERE {query_filter}
+),
+qsim AS ({sim_expl}),
+qprobe AS (
+  SELECT query_id, probe, {_resid_sql(dialect, list_col='probe')} AS remb
+  FROM (
+    SELECT query_id, orig, probe,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, probe) AS pr
+    FROM qsim
+  ) _p WHERE pr <= {n_probe}
+),
+qsubs AS (SELECT query_id, probe, m, {qsv} AS sv FROM qprobe {mexpand}),
+lut AS (
+  SELECT q.query_id, q.probe, q.m, c.code, {qd2} AS d2
+  FROM qsubs q JOIN {final} c ON c.m = q.m
+),
+est AS (
+  SELECT l.query_id, c.neighbor_id, CAST(sum(l.d2) AS BIGINT) AS est_d2
+  FROM codes c
+  JOIN lut l ON l.probe = c.probe AND l.m = c.m AND l.code = c.code
+  WHERE c.neighbor_id != l.query_id
+  GROUP BY l.query_id, c.neighbor_id
+)"""
+    return f"""WITH {pre}{ctes}{tail}
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, est_d2 FROM (
   SELECT query_id, neighbor_id, est_d2,
          row_number() OVER (PARTITION BY query_id

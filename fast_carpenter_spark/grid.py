@@ -23,8 +23,9 @@ Three parts, the first two verified against each other in tests:
 * SQL fragment builders (``cell_sql`` / ``parent_sql`` …) emitting either
   Spark SQL or DuckDB SQL — the DuckDB form is the independent oracle.
 * Vectorized numpy kernels (``encode_cells`` / ``hilbert_key`` …) used by
-  the Arrow-batched Python workers, including the Hilbert space-filling
-  key used for range partitioning (not expressible in SQL built-ins).
+  the Arrow-batched Python workers and as the reference for SQL twins such
+  as ``hilbert_key_sql``, the Hilbert space-filling key used for range
+  partitioning.
 * ``explode_cells``: the one cell enumerator of the Spark-side operators —
   every row over the cells of a ring or bounding box, rows clamped at the
   poles and columns clamped or wrapped at the antimeridian, ready for a
@@ -230,9 +231,8 @@ def hilbert_key(x: np.ndarray, y: np.ndarray, order: int) -> np.ndarray:
     """Vectorized Hilbert curve distance d for points (x, y) on a 2^order grid.
 
     Standard iterative xy->d transform (bit-interleave with quadrant
-    rotation), lifted to numpy arrays.  Used only for physical layout
-    (``repartitionByRange`` on Hilbert-ordered cell keys), never for
-    results — so it needs no SQL oracle twin.
+    rotation), lifted to numpy arrays.  The reference for
+    :func:`hilbert_key_sql`, which the layout stage evaluates.
     """
     x = np.asarray(x, dtype=np.int64).copy()
     y = np.asarray(y, dtype=np.int64).copy()
@@ -256,11 +256,24 @@ def hilbert_key(x: np.ndarray, y: np.ndarray, order: int) -> np.ndarray:
     return d
 
 
-def hilbert_key_for_cells(cell: np.ndarray) -> np.ndarray:
-    """Hilbert key of a packed cell id at its own resolution."""
-    res, x, y = unpack_cells(cell)
-    r = int(res[0]) if len(res) else 0
-    return hilbert_key(x, y, max(r, 1))
+def hilbert_key_sql(x: str, y: str, order: int) -> str:
+    """Spark SQL twin of :func:`hilbert_key` over BIGINT expressions: the
+    same per-level loop as one ``aggregate`` fold over s = 2^(order-1) .. 1
+    carrying (x, y, d).  Like the numpy loop it never masks x and y to the
+    current level, so the ``s-1-x`` flip can go negative; two's-complement
+    ``&`` then tests the same bits numpy does, and keys agree bit for bit."""
+    levels = ", ".join(f"{1 << i}L" for i in range(order - 1, -1, -1))
+    bx, by = "(st.x & s) > 0", "(st.y & s) > 0"
+    step = (
+        f"named_struct("
+        f"'x', CASE WHEN {by} THEN st.x WHEN {bx} THEN s - 1 - st.y ELSE st.y END, "
+        f"'y', CASE WHEN {by} THEN st.y WHEN {bx} THEN s - 1 - st.x ELSE st.x END, "
+        f"'d', st.d + s * s * ((3L * IF({bx}, 1L, 0L)) ^ IF({by}, 1L, 0L)))"
+    )
+    return (
+        f"aggregate(array({levels}), named_struct('x', CAST({x} AS BIGINT), "
+        f"'y', CAST({y} AS BIGINT), 'd', 0L), (st, s) -> {step}, st -> st.d)"
+    )
 
 
 def quadkey_sql(cell_expr: str, res: int, dialect: str) -> str:

@@ -25,8 +25,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
 from .. import grid
@@ -61,8 +59,9 @@ class CellEncodeStage:
 class HilbertLayoutStage:
     """Physical layout: range-partition on the Hilbert key of the cell —
     space-filling locality so neighbouring cells land in the same
-    partitions (SURVEY.md §4 'partitioning we must add').  Arrow-batched
-    numpy kernel; used for layout only, never for results."""
+    partitions (SURVEY.md §4 'partitioning we must add').  The key is
+    codegen SQL (grid.hilbert_key_sql), bit-identical to the numpy
+    grid.hilbert_key; used for layout only, never for results."""
 
     name: str
     res: int = 16
@@ -73,21 +72,11 @@ class HilbertLayoutStage:
     keep_col: str | None = None
 
     def apply(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import types as T
-
-        res = self.res
-
-        @F.pandas_udf(T.LongType())
-        def hkey(cell: pd.Series) -> pd.Series:
-            import numpy as np
-
-            from .. import grid as g
-
-            arr = cell.to_numpy(dtype="int64", na_value=0)
-            _, x, y = g.unpack_cells(arr)
-            return pd.Series(g.hilbert_key(x, y, res))
-
-        out = df.withColumn("_hkey", hkey(F.col(self.cell_col)))
+        cell = f"coalesce({self.cell_col}, 0)"  # a NULL cell keys as cell 0
+        key = grid.hilbert_key_sql(
+            grid.unpack_x_sql(cell, "spark"), grid.unpack_y_sql(cell, "spark"), self.res
+        )
+        out = df.withColumn("_hkey", F.expr(key))
         out = out.repartitionByRange(self.partitions, "_hkey")
         if self.keep_col:
             return out.withColumnRenamed("_hkey", self.keep_col)
@@ -104,6 +93,11 @@ class KnnStage:
     ring: int = 1
     k: int = 3
     id_col: str = "doc_id"
+
+    def __post_init__(self):
+        from ..spatial.knn import check_k
+
+        check_k(self.k)
 
     def apply(self, df: DataFrame) -> DataFrame:
         from ..spatial.knn import knn_local

@@ -74,17 +74,18 @@ def _load_events(spark, sf_dir):
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 
 
-def _source_fingerprint_tag(sf_dir: str) -> str:
-    """Cache tag from the source parquet's (name, size, mtime) set so a
-    regenerated testdata set can never hit a stale derived snapshot."""
+def _source_fingerprint_tag(sf_dir: str, table: str = "documents") -> str:
+    """Cache tag from ``table``'s parquet (name, size, mtime) set so a
+    regenerated testdata set can never hit a stale derived snapshot.
+    Pass the table the cache is built from."""
     import hashlib
     import os
 
-    src = f"{sf_dir}/documents.parquet"
+    src = f"{sf_dir}/{table}.parquet"
     parts = []
     if os.path.isfile(src):
         st = os.stat(src)
-        parts.append(f"documents.parquet:{st.st_size}:{int(st.st_mtime)}")
+        parts.append(f"{table}.parquet:{st.st_size}:{int(st.st_mtime)}")
     else:
         for root, _, files in os.walk(src):
             for fn in sorted(files):

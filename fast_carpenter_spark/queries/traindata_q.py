@@ -410,12 +410,18 @@ def q_ann_lsh_rerank(spark, sf_dir):
 O_ANN_LSH_RERANK = _ann.lsh_rerank_oracle_sql()
 
 
+RECALL_K = 5  # recall@5: every top-k below runs at its default k=5
+
+
 def q_ann_rerank_recall(spark, sf_dir):
     """Recall@k of the rerank path vs the exact brute-force baseline."""
-    return _ann.rerank_recall(_load_embeddings(spark, sf_dir))
+    emb = _load_embeddings(spark, sf_dir)
+    return _ann.recall_at_k(_ann.cosine_topk(emb), _ann.lsh_rerank_topk(emb), RECALL_K)
 
 
-O_ANN_RERANK_RECALL = _ann.rerank_recall_oracle_sql()
+O_ANN_RERANK_RECALL = _ann.recall_oracle_sql(
+    _ann.cosine_topk_oracle_sql(), _ann.lsh_rerank_oracle_sql(), k=RECALL_K
+)
 
 
 def q_ann_ivf_assign(spark, sf_dir):
@@ -465,10 +471,13 @@ O_ANN_IVF_TOPK = _ann.ivf_topk_oracle_sql()
 
 def q_ann_ivf_recall(spark, sf_dir):
     """Recall@k of the IVF probe path vs the exact baseline."""
-    return _ann.ivf_recall(_load_embeddings(spark, sf_dir))
+    emb = _load_embeddings(spark, sf_dir)
+    return _ann.recall_at_k(_ann.cosine_topk(emb), _ann.ivf_topk(emb), RECALL_K)
 
 
-O_ANN_IVF_RECALL = _ann.ivf_recall_oracle_sql()
+O_ANN_IVF_RECALL = _ann.recall_oracle_sql(
+    _ann.cosine_topk_oracle_sql(), _ann.ivf_topk_oracle_sql(), k=RECALL_K
+)
 
 
 def _load_clustered(spark, sf_dir):
@@ -476,6 +485,14 @@ def _load_clustered(spark, sf_dir):
     (vec_id, label) — pure integer-hash arithmetic, so Spark and the DuckDB
     oracle generate bit-identical vectors (see ann.clustered_vec_sql)."""
     return _ann.clustered_embeddings(_load_embeddings(spark, sf_dir))
+
+
+def _clustered_recall_oracle(exact_sql: str, approx_sql: str) -> str:
+    """recall@RECALL_K oracle over top-k texts reading ``embeddings_c``."""
+    return _ann.recall_oracle_sql(
+        exact_sql, approx_sql, k=RECALL_K,
+        extra_cte=_ann.clustered_table_cte() + ", ",
+    )
 
 
 def q_embed_clustered(spark, sf_dir):
@@ -507,22 +524,26 @@ def q_ann_ivf_recall_clustered(spark, sf_dir):
     ann_ivf_recall, but measured on a corpus with real cluster structure —
     the honest recall number (near-uniform vectors bound recall at ~0.5
     no matter the probe settings; clustered corpora are what IVF is for)."""
-    return _ann.ivf_recall(_load_clustered(spark, sf_dir))
+    emb = _load_clustered(spark, sf_dir)
+    return _ann.recall_at_k(_ann.cosine_topk(emb), _ann.ivf_topk(emb), RECALL_K)
 
 
-O_ANN_IVF_RECALL_CLUSTERED = _ann.ivf_recall_oracle_sql(
-    table="embeddings_c", extra_cte=_ann.clustered_table_cte() + ", "
+O_ANN_IVF_RECALL_CLUSTERED = _clustered_recall_oracle(
+    _ann.cosine_topk_oracle_sql(table="embeddings_c"),
+    _ann.ivf_topk_oracle_sql(table="embeddings_c"),
 )
 
 
 def q_ann_rerank_recall_clustered(spark, sf_dir):
     """Multi-probe LSH rerank recall@5 on CLUSTERED embeddings — the
     LSH-family twin of ann_ivf_recall_clustered."""
-    return _ann.rerank_recall(_load_clustered(spark, sf_dir))
+    emb = _load_clustered(spark, sf_dir)
+    return _ann.recall_at_k(_ann.cosine_topk(emb), _ann.lsh_rerank_topk(emb), RECALL_K)
 
 
-O_ANN_RERANK_RECALL_CLUSTERED = _ann.rerank_recall_oracle_sql(
-    table="embeddings_c", extra_cte=_ann.clustered_table_cte() + ", "
+O_ANN_RERANK_RECALL_CLUSTERED = _clustered_recall_oracle(
+    _ann.cosine_topk_oracle_sql(table="embeddings_c"),
+    _ann.lsh_rerank_oracle_sql(table="embeddings_c"),
 )
 
 
@@ -568,14 +589,16 @@ def q_ann_pq_recall(spark, sf_dir):
     and ann_rerank_recall_clustered."""
     from ..functions import pq as _pq
 
-    return _pq.pq_recall(_load_clustered(spark, sf_dir))
+    emb = _load_clustered(spark, sf_dir)
+    return _ann.recall_at_k(_pq.l2_topk(emb), _pq.pq_adc_topk(emb), RECALL_K)
 
 
 def _o_ann_pq_recall() -> str:
     from ..functions import pq as _pq
 
-    return _pq.pq_recall_oracle_sql(
-        table="embeddings_c", extra_cte=_ann.clustered_table_cte() + ", "
+    return _clustered_recall_oracle(
+        _pq.l2_topk_oracle_sql(table="embeddings_c"),
+        _pq.pq_adc_topk_oracle_sql(table="embeddings_c"),
     )
 
 
@@ -588,14 +611,16 @@ def q_ann_pq_rerank_recall(spark, sf_dir):
     ties and the rerank touches ~shortlist/corpus of the vectors."""
     from ..functions import pq as _pq
 
-    return _pq.pq_rerank_recall(_load_clustered(spark, sf_dir))
+    emb = _load_clustered(spark, sf_dir)
+    return _ann.recall_at_k(_pq.l2_topk(emb), _pq.pq_rerank_topk(emb), RECALL_K)
 
 
 def _o_ann_pq_rerank_recall() -> str:
     from ..functions import pq as _pq
 
-    return _pq.pq_rerank_recall_oracle_sql(
-        table="embeddings_c", extra_cte=_ann.clustered_table_cte() + ", "
+    return _clustered_recall_oracle(
+        _pq.l2_topk_oracle_sql(table="embeddings_c"),
+        _pq.pq_rerank_topk_oracle_sql(table="embeddings_c"),
     )
 
 
@@ -624,14 +649,16 @@ def q_ann_ivfpq_recall(spark, sf_dir):
     one equi-join plan; candidates outside probed lists never join."""
     from ..functions import pq as _pq
 
-    return _pq.ivfpq_recall(_load_clustered(spark, sf_dir))
+    emb = _load_clustered(spark, sf_dir)
+    return _ann.recall_at_k(_pq.l2_topk(emb), _pq.ivfpq_rerank_topk(emb), RECALL_K)
 
 
 def _o_ann_ivfpq_recall() -> str:
     from ..functions import pq as _pq
 
-    return _pq.ivfpq_recall_oracle_sql(
-        table="embeddings_c", extra_cte=_ann.clustered_table_cte() + ", "
+    return _clustered_recall_oracle(
+        _pq.l2_topk_oracle_sql(table="embeddings_c"),
+        _pq.ivfpq_rerank_topk_oracle_sql(table="embeddings_c"),
     )
 
 
@@ -650,7 +677,8 @@ def q_ann_index_delta(spark, sf_dir):
     from ..sources.snapshot import SnapshotReader, list_snapshots, write_snapshot
 
     tdir = os.path.join(
-        tempfile.gettempdir(), f"fcs_annidx_snap_{_source_fingerprint_tag(sf_dir)}"
+        tempfile.gettempdir(),
+        f"fcs_annidx_snap_{_source_fingerprint_tag(sf_dir, 'embeddings')}",
     )
     if not (os.path.isdir(tdir) and len(list_snapshots(tdir)) >= 2):
         ce = _load_clustered(spark, sf_dir)
@@ -1045,23 +1073,51 @@ def _o_ann_pq_train() -> str:
     )
 
 
-def q_ann_pq_trained_recall(spark, sf_dir):
+def _stored_codebook_rows(spark, sf_dir, emb, kind: str, k: int):
+    """The trained (m, code, cent) rows of a ``kind`` ("pq" or "ivfpq")
+    codebook with ``k`` codes per subspace.  The k-means recurrence runs
+    once per embeddings file and commits its k*M_SUB rows through the
+    snapshot writer under the temp dir; later calls only read them back."""
+    import os
+    import tempfile
+
+    from ..functions import pq as _pq
+    from ..sources.snapshot import list_snapshots
+
+    store = {"pq": _pq.store_trained_codebook, "ivfpq": _pq.store_trained_ivfpq_codebook}
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"fcs_{kind}cb_k{k}_{_source_fingerprint_tag(sf_dir, 'embeddings')}",
+    )
+    if not (os.path.isdir(path) and list_snapshots(path)):
+        store[kind](emb, path, k=k)
+    return _pq.load_codebook_rows(spark, path)
+
+
+def q_ann_pq_trained_recall(spark, sf_dir, k: int = 16):
     """Raw-ADC recall@5 with TRAINED 4-bit codebooks (same M=8 x K=16
     geometry as ann_pq_recall): 0.22-0.34 untrained -> 0.66 trained at
     sf0.01.  The k-means fixed point is reached by round 2; the remaining
     gap to 1.0 is 4-bit CAPACITY (16 cells per subspace cannot separate
     ~50 within-cluster members), not training quality — see the K=32 twin
-    below, which clears 0.8 with one extra bit."""
+    below, which clears 0.8 with one extra bit.  Scored on the stored
+    codebook (the ann_pq_trained_topk search path); the oracle re-derives
+    the codebook in-query, so it checks the stored artifact independently."""
     from ..functions import pq as _pq
 
-    return _pq.trained_pq_recall(_load_clustered(spark, sf_dir))
+    emb = _load_clustered(spark, sf_dir)
+    rows = _stored_codebook_rows(spark, sf_dir, emb, "pq", k=k)
+    return _ann.recall_at_k(
+        _pq.l2_topk(emb), _pq.trained_adc_topk_from_rows(emb, rows), RECALL_K
+    )
 
 
-def _o_ann_pq_trained_recall() -> str:
+def _o_ann_pq_trained_recall(k: int = 16) -> str:
     from ..functions import pq as _pq
 
-    return _pq.trained_recall_body_sql(
-        "duck", extra_cte=_ann.clustered_table_cte("embeddings_c") + ",\n"
+    return _clustered_recall_oracle(
+        _pq.l2_topk_oracle_sql(table="embeddings_c"),
+        _pq.trained_adc_topk_oracle_sql("duck", k=k),
     )
 
 
@@ -1069,17 +1125,11 @@ def q_ann_pq_trained_recall_k32(spark, sf_dir):
     """Raw-ADC recall@5 with trained 5-bit codebooks (M=8 x K=32):
     0.84 at sf0.01 — one extra bit per code clears the 0.8 line that the
     4-bit geometry is information-bounded below."""
-    from ..functions import pq as _pq
-
-    return _pq.trained_pq_recall(_load_clustered(spark, sf_dir), k=32)
+    return q_ann_pq_trained_recall(spark, sf_dir, k=32)
 
 
 def _o_ann_pq_trained_recall_k32() -> str:
-    from ..functions import pq as _pq
-
-    return _pq.trained_recall_body_sql(
-        "duck", k=32, extra_cte=_ann.clustered_table_cte("embeddings_c") + ",\n"
-    )
+    return _o_ann_pq_trained_recall(k=32)
 
 
 def q_ann_ivfpq_trained_recall(spark, sf_dir):
@@ -1090,17 +1140,23 @@ def q_ann_ivfpq_trained_recall(spark, sf_dir):
     0.22-0.34 untrained-lattice raw-ADC floor; n_probe=8 does not move it
     (coarse pruning is lossless here — cluster members share lists), so
     the residue is sub-quantizer capacity, which the production
-    shortlist+rerank path (ann_ivfpq_recall, 0.96-1.0) finishes off."""
+    shortlist+rerank path (ann_ivfpq_recall, 0.96-1.0) finishes off.
+    Scored on the stored residual codebook of ann_ivfpq_trained_topk."""
     from ..functions import pq as _pq
 
-    return _pq.trained_ivfpq_recall(_load_clustered(spark, sf_dir), k=32)
+    emb = _load_clustered(spark, sf_dir)
+    rows = _stored_codebook_rows(spark, sf_dir, emb, "ivfpq", k=32)
+    return _ann.recall_at_k(
+        _pq.l2_topk(emb), _pq.trained_ivfpq_topk_from_rows(emb, rows), RECALL_K
+    )
 
 
 def _o_ann_ivfpq_trained_recall() -> str:
     from ..functions import pq as _pq
 
-    return _pq.trained_ivfpq_recall_body_sql(
-        "duck", k=32, extra_cte=_ann.clustered_table_cte("embeddings_c") + ",\n"
+    return _clustered_recall_oracle(
+        _pq.l2_topk_oracle_sql(table="embeddings_c"),
+        _pq.trained_ivfpq_topk_oracle_sql("duck", k=32),
     )
 
 
@@ -1129,26 +1185,16 @@ def q_ann_pq_trained_topk(spark, sf_dir):
     any other: time travel, manifest bounds); search loads the 256 rows
     and injects them as a literal array-of-matrices, so encode + LUT are
     map-side folds and the search plan carries ~3 exchanges vs the 48 of
-    the recurrence-in-plan diagnostics (ann_pq_trained_recall*, kept as
-    training-correctness checks).  Recall@5 vs exact L2 is pinned >= 0.8
-    by tests/test_pq.py; value-level parity is pinned here: the oracle
-    re-derives the codebook in-query and must land on the same integer
-    fixed point, so every (query_id, rank, neighbor_id, est_d2) row
-    matches exactly."""
-    import os
-    import tempfile
-
+    the recurrence run inside the plan.  The trained recall queries
+    (ann_pq_trained_recall*) score this same stored path.  Recall@5 vs
+    exact L2 is pinned >= 0.8 by tests/test_pq.py; value-level parity is
+    pinned here: the oracle re-derives the codebook in-query and must land
+    on the same integer fixed point, so every (query_id, rank,
+    neighbor_id, est_d2) row matches exactly."""
     from ..functions import pq as _pq
-    from ..sources.snapshot import list_snapshots
 
     emb = _load_clustered(spark, sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"fcs_pqcb_k32_{_source_fingerprint_tag(sf_dir)}",
-    )
-    if not (os.path.isdir(path) and list_snapshots(path)):
-        _pq.store_trained_codebook(emb, path, k=32)
-    rows = _pq.load_codebook_rows(spark, path)
+    rows = _stored_codebook_rows(spark, sf_dir, emb, "pq", k=32)
     return _pq.trained_adc_topk_from_rows(emb, rows)
 
 
@@ -1168,25 +1214,15 @@ def q_ann_ivfpq_trained_topk(spark, sf_dir):
     coarse-assignment residuals and committed through the snapshot writer;
     search coarse-assigns, forms residuals, encodes and builds the probed
     query LUTs entirely map-side over literals, leaving only the
-    (probe, m, code) equi-join + additive groupBy + top-k window — vs the
-    recurrence-in-plan diagnostic (ann_ivfpq_trained_recall, kept as the
-    training-correctness check).  The oracle re-derives the residual
-    recurrence in-query and must land on the same integer fixed point, so
-    every (query_id, rank, neighbor_id, est_d2) row matches exactly."""
-    import os
-    import tempfile
-
+    (probe, m, code) equi-join + additive groupBy + top-k window
+    (ann_ivfpq_trained_recall scores this same stored path).  The oracle
+    re-derives the residual recurrence in-query and must land on the same
+    integer fixed point, so every (query_id, rank, neighbor_id, est_d2)
+    row matches exactly."""
     from ..functions import pq as _pq
-    from ..sources.snapshot import list_snapshots
 
     emb = _load_clustered(spark, sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"fcs_ivfpqcb_k32_{_source_fingerprint_tag(sf_dir)}",
-    )
-    if not (os.path.isdir(path) and list_snapshots(path)):
-        _pq.store_trained_ivfpq_codebook(emb, path, k=32)
-    rows = _pq.load_codebook_rows(spark, path)
+    rows = _stored_codebook_rows(spark, sf_dir, emb, "ivfpq", k=32)
     return _pq.trained_ivfpq_topk_from_rows(emb, rows)
 
 

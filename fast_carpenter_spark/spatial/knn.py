@@ -120,6 +120,12 @@ def _topk_row_idx(d2, kk):
     return out
 
 
+def check_k(k: int) -> None:
+    """Reject a neighbour count below 1 before any plan is built."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+
+
 def knn_bounded(
     points: DataFrame,
     *,
@@ -131,6 +137,7 @@ def knn_bounded(
     k: int = 3,
 ) -> DataFrame:
     """(id, nbr_id, rank, dist2) top-k rows per point."""
+    check_k(k)
     pts = points.select(
         F.col(id_col).alias("_id"),
         F.col(lon_col).alias("_lon"),
@@ -545,6 +552,7 @@ def knn_local(
     blocks (measured ~1.2x total vs the 9x of replicating every point to
     all (2R+1)^2 ring cells); wider rings are enumerated in full.  Hot
     blocks (> ``hot_threshold`` points) salt over ``nsalt`` tasks."""
+    check_k(k)
     return _halo_knn(
         points, id_col=id_col, lon_col=lon_col, lat_col=lat_col,
         ring=_planar_ring(res, ring), embed=_plane, cut2=None, k=k,
@@ -805,6 +813,7 @@ def knn_geo(
     tasks; bench.py q7 runs it on the full table, point mass included.
     This join form stays the registered reference the kernel is tested
     against."""
+    check_k(k)
     cand = _geo_ring_candidates(
         points, radius_km=radius_km, id_col=id_col,
         lon_col=lon_col, lat_col=lat_col, res=res,
@@ -901,6 +910,7 @@ def knn_geo_local(
     Like knn_geo, chord^2 values never reach the output (trig ulps differ
     between numpy / Spark / DuckDB): (id, neighbor_id, rank) only.
     """
+    check_k(k)
     if res is None:
         # radius-derived res makes the cell ~ the radius (rings stay 3x3);
         # when the caller supplies the point count, coarsen toward the

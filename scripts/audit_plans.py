@@ -171,17 +171,16 @@ def summarize(name: str, text: str) -> list[str]:
 #   cardinality 1 by construction); the expected BNLJ count is pinned so a
 #   refactor cannot add an unvetted cross.
 ALLOW_BNLJ_GRIDSYNTH = {"zonal_stats"}
-# ann_ivf_recall_clustered carries TWO vetted BNLJs: (1) the exact
-# brute-force BASELINE the recall is measured against — a broadcast of the
-# tiny sampled query set crossed with ONE corpus scan (linear in the
-# corpus, by design the only place brute force is permitted; the measured
-# path is the IVF equi join in the same plan); (2) the one-row recall
-# summary crossJoining two keyless 1-row aggregates (n_exact × n_hit) —
-# the usual 1-row global attach.  Counts pinned so a refactor cannot add
-# an unvetted cross.
+# ann_ivf_recall_clustered carries ONE vetted BNLJ: the exact brute-force
+# BASELINE the recall is measured against — a broadcast of the tiny
+# sampled query set crossed with ONE corpus scan (linear in the corpus, by
+# design the only place brute force is permitted; the measured path is the
+# IVF equi join in the same plan).  The recall scorer itself is a pair
+# equi join plus one keyless aggregate, no attach.  Counts pinned so a
+# refactor cannot add an unvetted cross.
 ALLOW_BNLJ_GLOBAL_ATTACH = {
     "tile_hotspot": 1, "tile_moran": 1, "tile_lisa": 1,
-    "ann_ivf_recall_clustered": 2,
+    "ann_ivf_recall_clustered": 1,
     "tile_contour": 1,  # the global-mean threshold attach (keyless 1-row agg)
     "join_size_cms": 1,  # est x exact: two keyless 1-row aggregates joined
     "tile_decay": 1,     # max-bin "now" attach (keyless 1-row agg)

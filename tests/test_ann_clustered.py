@@ -47,12 +47,14 @@ def test_mixture_structure(clustered):
 
 
 def test_ivf_recall_clustered_at_least_0_8(clustered):
-    row = ann.ivf_recall(clustered).collect()[0]
+    exact, approx = ann.cosine_topk(clustered), ann.ivf_topk(clustered)
+    row = ann.recall_at_k(exact, approx, 5).collect()[0]
     assert row["n_exact"] > 0
     assert row["recall"] >= 0.8, f"IVF clustered recall@5 = {row['recall']}"
 
 
 def test_lsh_rerank_recall_clustered_at_least_0_8(clustered):
-    row = ann.rerank_recall(clustered).collect()[0]
+    exact, approx = ann.cosine_topk(clustered), ann.lsh_rerank_topk(clustered)
+    row = ann.recall_at_k(exact, approx, 5).collect()[0]
     assert row["n_exact"] > 0
     assert row["recall"] >= 0.8, f"LSH clustered recall@5 = {row['recall']}"

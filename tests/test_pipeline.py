@@ -154,6 +154,51 @@ def test_hilbert_layout_stage(spark, spans):
         assert hi1 <= lo2
 
 
+def test_hilbert_layout_key_is_codegen_sql_equal_to_numpy(spark):
+    """The layout key is codegen SQL, no Python worker, and equals the numpy
+    grid.hilbert_key on every cell of an order-8 grid and on finer cells,
+    whose unmasked high bits drive the s-1-x flip negative."""
+    import numpy as np
+
+    from fast_carpenter_spark.plans.pipeline import HilbertLayoutStage
+
+    n = 1 << 8
+    grid8 = spark.range(n * n).selectExpr(
+        f"{grid.pack_sql(8, f'id DIV {n}', f'id % {n}')} AS cell"
+    )
+    rng = np.random.default_rng(8)
+    fine = [int(c) for c in grid.pack_cells(12, rng.integers(0, 1 << 12, 2000),
+                                            rng.integers(0, 1 << 12, 2000))]
+    fine = spark.createDataFrame([(c,) for c in fine], "cell long")
+    for cells, n_rows in ((grid8, n * n), (fine, 2000)):
+        out = HilbertLayoutStage(name="h", res=8, partitions=4, keep_col="hk").apply(cells)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        got = out.toPandas()
+        assert len(got) == n_rows
+        _, x, y = grid.unpack_cells(got["cell"].to_numpy())
+        assert (got["hk"].to_numpy() == grid.hilbert_key(x, y, 8)).all()
+
+
+def test_knn_rejects_k_below_one(spark, spans):
+    from fast_carpenter_spark.plans.pipeline import KnnStage
+    from fast_carpenter_spark.spatial.knn import (
+        knn_bounded, knn_geo, knn_geo_local, knn_local,
+    )
+
+    pts = spans.select("doc_id", "lon", "lat")
+    for k in (0, -1):
+        for call in (
+            lambda: knn_bounded(pts, k=k),
+            lambda: knn_local(pts, k=k),
+            lambda: knn_geo(pts, radius_km=50.0, k=k),
+            lambda: knn_geo_local(pts, radius_km=50.0, k=k),
+            lambda: KnnStage(name="knn", k=k),
+        ):
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                call()
+
+
 def test_config_validation_errors(spark, spans):
     """Bad configs raise typed errors at construction or apply (the
     reference validates eagerly in stage constructors, §5)."""

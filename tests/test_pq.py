@@ -15,6 +15,18 @@ def clustered(spark):
     return ann.clustered_embeddings(emb).cache()
 
 
+@pytest.fixture(scope="module")
+def cb32_rows(clustered, tmp_path_factory):
+    """The k=32 codebook committed through the snapshot writer, read back."""
+    path = str(tmp_path_factory.mktemp("cb") / "cb")
+    pq.store_trained_codebook(clustered, path, k=32)
+    return pq.load_codebook_rows(clustered.sparkSession, path)
+
+
+def _recall(exact, approx) -> dict:
+    return ann.recall_at_k(exact, approx, 5).collect()[0].asDict()
+
+
 def test_code_table_shape(clustered):
     codes = pq.pq_codes(clustered)
     n_vec = clustered.count()
@@ -53,7 +65,7 @@ def test_adc_estimate_reconstructs_from_8_hits(clustered):
 
 
 def test_pq_rerank_recall_at_least_0_9(clustered):
-    row = pq.pq_rerank_recall(clustered).collect()[0]
+    row = _recall(pq.l2_topk(clustered), pq.pq_rerank_topk(clustered))
     assert row["n_exact"] > 0
     assert row["recall"] >= 0.9, f"PQ rerank recall@5 = {row['recall']}"
 
@@ -67,7 +79,7 @@ def test_ivfpq_codes_cover_all_vectors(clustered):
 
 
 def test_ivfpq_recall_at_least_0_9(clustered):
-    row = pq.ivfpq_recall(clustered).collect()[0]
+    row = _recall(pq.l2_topk(clustered), pq.ivfpq_rerank_topk(clustered))
     assert row["n_exact"] > 0
     assert row["recall"] >= 0.9, f"IVF-PQ recall@5 = {row['recall']}"
 
@@ -83,25 +95,25 @@ def test_trained_codebook_shape_and_determinism(clustered):
     assert sorted(map(tuple, cb)) == sorted(map(tuple, cb2))
 
 
-def test_trained_recall_beats_untrained(clustered):
+def test_trained_recall_beats_untrained(clustered, cb32_rows):
     """VERDICT r3 item 4: training moves raw-ADC recall from the 0.22-0.34
     untrained floor to >= 0.8 on the clustered mixture (k=32: capacity to
-    separate ~50 within-cluster members)."""
-    untrained = pq.pq_recall(clustered).collect()[0]["recall"]
-    trained32 = pq.trained_pq_recall(clustered, k=32).collect()[0]["recall"]
+    separate ~50 within-cluster members), scored on the stored codebook."""
+    exact = pq.l2_topk(clustered)
+    untrained = _recall(exact, pq.pq_adc_topk(clustered))["recall"]
+    trained32 = _recall(
+        exact, pq.trained_adc_topk_from_rows(clustered, cb32_rows)
+    )["recall"]
     assert trained32 >= 0.8, f"trained k=32 raw-ADC recall@5 = {trained32}"
     assert trained32 > untrained + 0.3
 
 
-def test_materialized_codebook_roundtrip_and_plan(clustered, tmp_path):
+def test_materialized_codebook_roundtrip_and_plan(clustered, cb32_rows):
     """Round-5 materialization (VERDICT r4 item 2): store_trained_codebook
     commits the index artifact through the snapshot writer; search against
     the loaded rows is plan-small (<= 8 exchanges, no BNLJ) and its
-    recall@5 matches the recurrence-in-plan diagnostic's 0.8+ at k=32."""
-    path = str(tmp_path / "cb")
-    pq.store_trained_codebook(clustered, path, k=32)
-    spark = clustered.sparkSession
-    rows = pq.load_codebook_rows(spark, path)
+    recall@5 is 0.8+ at k=32."""
+    rows = cb32_rows
     assert len(rows) == 32 * pq.M_SUB
     assert all(len(cent) == pq.SUB_DIM for _, _, cent in rows)
     # stored artifact == the recurrence's own output (same fixed point)
@@ -117,11 +129,8 @@ def test_materialized_codebook_roundtrip_and_plan(clustered, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan
 
     # recall@5 vs exact L2 through the MATERIALIZED path
-    approx = topk.selectExpr("query_id", "neighbor_id")
-    exact = pq.l2_topk(clustered).selectExpr("query_id", "neighbor_id")
-    n_exact = exact.count()
-    n_hit = exact.join(approx, ["query_id", "neighbor_id"]).count()
-    assert n_hit / n_exact >= 0.8, f"materialized recall@5 = {n_hit/n_exact}"
+    recall = _recall(pq.l2_topk(clustered), topk)["recall"]
+    assert recall >= 0.8, f"materialized recall@5 = {recall}"
 
 
 def test_materialized_ivfpq_codebook_roundtrip_and_plan(clustered, tmp_path):

@@ -931,3 +931,25 @@ def test_named_refs_tag_immutable_branch_moves(spark, docs, tmp_path):
     assert via_tag.count() == direct.count() == docs.filter("doc_id % 2 = 0").count()
     with pytest.raises(ValueError):
         SnapshotReader(table, "s1", ref="stable")  # id XOR ref
+
+
+def test_cache_fingerprint_follows_its_source_table(tmp_path):
+    """A cache built from embeddings.parquet must change tag when only the
+    embeddings are regenerated; one built from documents.parquet must not."""
+    import os
+
+    from fast_carpenter_spark.queries._common import _source_fingerprint_tag
+
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    (sf / "documents.parquet").write_bytes(b"docs")
+    emb = sf / "embeddings.parquet"
+    emb.write_bytes(b"emb-v1")
+    docs_tag = _source_fingerprint_tag(str(sf))
+    emb_tag = _source_fingerprint_tag(str(sf), "embeddings")
+    assert docs_tag != emb_tag
+    emb.write_bytes(b"emb-v2, regenerated")
+    st = os.stat(emb)
+    os.utime(emb, (st.st_atime, st.st_mtime + 5))
+    assert _source_fingerprint_tag(str(sf)) == docs_tag
+    assert _source_fingerprint_tag(str(sf), "embeddings") != emb_tag
