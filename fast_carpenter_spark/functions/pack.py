@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 
 def global_prefix_sum(
     df: DataFrame,
@@ -62,9 +64,7 @@ def global_prefix_sum(
         acc += totals[pid]
     spark = df.sparkSession
     base_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in base.items()], "_pid int, _base bigint"
-        )
+        local_frame(spark, list(base.items()), "_pid int, _base bigint")
     )
     w = (
         Window.partitionBy("_pid")

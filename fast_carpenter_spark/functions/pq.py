@@ -1037,7 +1037,6 @@ SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, est_d2 FROM (
 
 
 def trained_ivfpq_topk_oracle_sql(
-    dialect: str = "duck",
     *,
     k: int = N_CODES,
     rounds: int = TRAIN_ROUNDS,
@@ -1048,37 +1047,30 @@ def trained_ivfpq_topk_oracle_sql(
     n_probe: int = N_PROBE,
     extra_cte: str = "",
 ) -> str:
-    """Oracle twin of trained_ivfpq_topk_from_rows: coarse-assign, residual
-    table, the k-means recurrence over residuals re-derived in-query,
-    encode, probed query LUTs and the additive est_d2 aggregate — values
-    agree because both reach the same integer fixed point; only the plans
-    differ."""
+    """DuckDB oracle twin of trained_ivfpq_topk_from_rows: coarse-assign,
+    residual table, the k-means recurrence over residuals re-derived
+    in-query, encode, probed query LUTs and the additive est_d2 aggregate
+    — values agree because both reach the same integer fixed point; only
+    the plans differ."""
+    dialect = "duck"
     resid_i = _resid_sql(dialect)
-    # DuckDB: the residual table feeds the codebook training's `train`
-    # (every round) and `subs`; materialized, coarse assignment runs once
-    rtbl_as = "AS" if dialect == "spark" else "AS MATERIALIZED"
-    if dialect == "spark":
-        qsv = f"transform(slice(remb, m * {SUB_DIM} + 1, {SUB_DIM}), x -> x)"
-        mexpand = f"LATERAL VIEW explode(sequence(0, {M_SUB - 1})) _mr AS m"
-        sim_expl = (
-            "SELECT query_id, orig, posexplode(sims) AS (probe, sim) FROM qsim0"
-        )
-    else:
-        qsv = (
-            f"list_transform(list_slice(remb, m * {SUB_DIM} + 1, "
-            f"m * {SUB_DIM} + {SUB_DIM}), x -> x)"
-        )
-        mexpand = f"CROSS JOIN (SELECT unnest(range(0, {M_SUB})) AS m) _mr"
-        sim_expl = (
-            "SELECT query_id, orig, CAST(generate_subscripts(sims, 1) - 1 AS INT)"
-            " AS probe, unnest(sims) AS sim FROM qsim0"
-        )
+    qsv = (
+        f"list_transform(list_slice(remb, m * {SUB_DIM} + 1, "
+        f"m * {SUB_DIM} + {SUB_DIM}), x -> x)"
+    )
+    mexpand = f"CROSS JOIN (SELECT unnest(range(0, {M_SUB})) AS m) _mr"
+    sim_expl = (
+        "SELECT query_id, orig, CAST(generate_subscripts(sims, 1) - 1 AS INT)"
+        " AS probe, unnest(sims) AS sim FROM qsim0"
+    )
+    # the residual table feeds the codebook training's `train` (every
+    # round) and `subs`; materialized, coarse assignment runs once
     pre = f"""{extra_cte}assigned AS (
   SELECT vec_id, embedding AS orig,
          {ivf_assign_sql('embedding', dialect)} AS list_id
   FROM {table}
 ),
-rtbl {rtbl_as} (SELECT vec_id, list_id, {resid_i} AS embedding FROM assigned),
+rtbl AS MATERIALIZED (SELECT vec_id, list_id, {resid_i} AS embedding FROM assigned),
 """
     ctes, final = trained_cb_ctes(
         dialect, k=k, rounds=rounds, table="rtbl", train_filter=train_filter

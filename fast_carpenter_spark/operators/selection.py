@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..expressions import compile_expression
+from ..session import local_frame
 from .define import Variable, compile_variable
 
 # ---------------------------------------------------------------------------
@@ -251,10 +252,10 @@ def counters_table(
         ids=[], values=[m[0] for m in meta],
         variableColumnName="_key", valueColumnName="value",
     )
-    meta_df = df.sparkSession.createDataFrame(
-        meta,
-        schema="_key string, cut_id string, depth int, cut string, "
-               "count_type string, weight_name string",
+    meta_df = local_frame(
+        df.sparkSession, meta,
+        "_key string, cut_id string, depth int, cut string, "
+        "count_type string, weight_name string",
     )
     out = long.join(F.broadcast(meta_df), "_key")
     return out.select(*_ROW_KEYS, F.coalesce("value", F.lit(0.0)).alias("value"))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from ..session import local_frame
 from ._common import (
     CutFlowStage,
     F,
@@ -588,8 +589,8 @@ def q_qdigest_quantiles(spark, sf_dir):
         rows.append(
             (q, _qd.qdigest_rank_query(digest, n, q), exact, len(digest), n)
         )
-    return spark.createDataFrame(
-        rows, "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
+    return local_frame(
+        spark, rows, "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
     )
 
 

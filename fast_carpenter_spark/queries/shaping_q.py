@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from ..session import local_frame
 from ._common import (
     F,
     _drain,
@@ -426,8 +427,8 @@ def q_streaming_enrich(spark, sf_dir):
     d_in = tempfile.mkdtemp(prefix="fcs_enr_in_")
     docs.repartition(4, "doc_id").write.mode("overwrite").parquet(d_in)
     dim_path = tempfile.mkdtemp(prefix="fcs_enr_dim_")
-    spark.createDataFrame(
-        [(lang, f"label_{lang}") for lang in _ENRICH_LANGS],
+    local_frame(
+        spark, [(lang, f"label_{lang}") for lang in _ENRICH_LANGS],
         "lang string, lang_label string",
     ).write.mode("overwrite").parquet(dim_path)
     stage = StreamingEnrich(

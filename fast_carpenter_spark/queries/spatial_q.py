@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from ..session import local_frame
 from ._common import (
     BinnedDataframeStage,
     F,
@@ -275,7 +276,7 @@ def q_pip_holes(spark, sf_dir):
             T.StructField("hole_lat", T.ArrayType(T.DoubleType(), False), False),
         ]
     )
-    holes = spark.createDataFrame(_donut_holes(), schema)
+    holes = local_frame(spark, _donut_holes(), schema)
     inhole = pip_condition_sql("lon", "lat", "hole_lon", "hole_lat", "spark")
     return (
         cand.join(F.broadcast(holes), "poly_id")

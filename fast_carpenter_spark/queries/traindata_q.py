@@ -1156,7 +1156,7 @@ def _o_ann_ivfpq_trained_recall() -> str:
 
     return _clustered_recall_oracle(
         _pq.l2_topk_oracle_sql(table="embeddings_c"),
-        _pq.trained_ivfpq_topk_oracle_sql("duck", k=32),
+        _pq.trained_ivfpq_topk_oracle_sql(k=32),
     )
 
 
@@ -1230,5 +1230,5 @@ def _o_ann_ivfpq_trained_topk() -> str:
     from ..functions import pq as _pq
 
     return _pq.trained_ivfpq_topk_oracle_sql(
-        "duck", k=32, extra_cte=_ann.clustered_table_cte("embeddings_c") + ",\n"
+        k=32, extra_cte=_ann.clustered_table_cte("embeddings_c") + ",\n"
     )

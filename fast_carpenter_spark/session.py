@@ -8,7 +8,7 @@ harnesses; on a real cluster the same settings go through
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Defaults tuned for the engine's plan shapes.  Values are strings, as
 #: spark-submit would pass them.
@@ -56,3 +56,35 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built table (row tuples or a pandas DataFrame) as a
+    ``LocalTableScan`` under ``schema`` (StructType or DDL string).
+
+    ``spark.createDataFrame(list)`` plans a Python RDD: its first action
+    starts a PySpark daemon and a Python worker per task (~0.3 s each)
+    just to unpickle the rows.  An Arrow table is handed to the JVM whole
+    and plans as a ``LocalRelation`` with real size statistics and no
+    Python task.  Nulls in a non-nullable column are rejected here, as
+    ``createDataFrame``'s schema check would.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows, schema=arrow_schema, preserve_index=False)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+        )
+    for field, col in zip(schema.fields, table.columns):
+        if not field.nullable and col.null_count:
+            raise ValueError(f"column {field.name!r} is not nullable but holds a null")
+    return spark.createDataFrame(table, schema)

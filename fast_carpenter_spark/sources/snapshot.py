@@ -23,6 +23,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 MANIFEST_PREFIX = "manifest-"
 
 
@@ -416,7 +418,7 @@ class SnapshotReader:
             # it also covers a snapshot with ZERO data files); only fall
             # back to reading one file's footer when no schema was pinned.
             if self.schema is not None:
-                return spark.createDataFrame([], self.schema)
+                return local_frame(spark, [], self.schema)
             if not self.snapshot.files:
                 raise ValueError(
                     "empty snapshot with no pinned schema: cannot build "
@@ -678,7 +680,7 @@ def rewrite_deletes(
     ]
     keep = [f for f in base.files if not any(may_apply(d, f) for d in base.delete_files)]
     if not affected:
-        out = spark.createDataFrame([], reader.schema) if reader.schema else None
+        out = local_frame(spark, [], reader.schema) if reader.schema else None
         if out is None:
             raise ValueError("rewrite_deletes: nothing affected and no schema")
     else:

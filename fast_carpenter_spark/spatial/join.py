@@ -43,6 +43,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from .. import grid
+from ..session import local_frame
 from .knn import _ragged
 from .pip import edges_sql, pip_edges_condition_sql
 
@@ -213,13 +214,9 @@ def polygons_frame(spark, polys: list[dict]) -> DataFrame:
             T.StructField("ring_lat", T.ArrayType(T.DoubleType(), False), False),
         ]
     )
-    # float() admits hand-written layers with integer coordinates/weights
-    rows = [
-        (d["poly_id"], d["region"], float(d["weight"]),
-         [float(v) for v in d["ring_lon"]], [float(v) for v in d["ring_lat"]])
-        for d in polys
-    ]
-    return spark.createDataFrame(rows, schema)
+    # Arrow casts hand-written integer coordinates/weights to double
+    rows = [(d["poly_id"], d["region"], d["weight"], d["ring_lon"], d["ring_lat"]) for d in polys]
+    return local_frame(spark, rows, schema)
 
 
 def spatial_join(
@@ -349,7 +346,9 @@ class SpatialJoinStage:
     def apply(self, df: DataFrame) -> DataFrame:
         spark = df.sparkSession
         covers_pd, resolutions = polygon_covers_local(self.polygons, self.max_cells)
-        covers = spark.createDataFrame(covers_pd)
+        covers = local_frame(
+            spark, covers_pd, "poly_id string, res bigint, cell bigint, inside boolean"
+        )
         return spatial_join(
             df, polygons_frame(spark, self.polygons), covers,
             lon_col=self.lon_col, lat_col=self.lat_col,

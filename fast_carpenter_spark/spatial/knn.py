@@ -918,14 +918,15 @@ def knn_geo_local(
         # densities a radius-sized grid leaves <1 point per cell.  The
         # policy was sized when the kernel looped over occupied cells in
         # Python (measured at the bench grain, 2.4M pts / 5 km: res 10 was
-        # 1.16x faster than res 11; res 8 4x SLOWER).  The kernel now
-        # batches sparse cells, so per-cell cost no longer argues for
-        # coarsening, but the policy is kept: the res fixes the blocks,
-        # the halo replication and the candidate superset (every coarser
-        # level multiplies the ring's area ~4x), and a change there must
-        # be measured end to end, not inferred from the kernel.  Capped at
-        # 2 levels.  Never finer than the radius res: rings must still
-        # span the radius, so finer cells only widen rx.
+        # 1.16x faster than res 11; res 8 4x SLOWER).  Re-measured with
+        # the batched kernel on 200k points at 5 km incl. a 1% point mass
+        # (local[4], 5 interleaved rounds, identical digests), op medians:
+        # this policy (res 9, group_offset 5) 1.56 s; res 10 2.65 s;
+        # res 11 (the radius res) 6.0 s; res 8 4.55 s; res 9 with offset
+        # 6 / 7: 4.39 / 3.08 s; offset 4 at res 10 / 11: 5.9 / 19.5 s --
+        # the policy is the fastest grid measured.
+        # Capped at 2 levels.  Never finer than the radius res: rings must
+        # still span the radius, so finer cells only widen rx.
         deg_lat = math.degrees(radius_km / EARTH_KM)
         r_res = max(1, min(20, int(math.floor(math.log2(180.0 / deg_lat)))))
         if n_points is None:

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.sketch import hll_finalize, hll_registers
+from ..session import local_frame
 
 
 @dataclass
@@ -314,6 +315,6 @@ class StreamingQdigest:
                     exact = v
                     break
             rows.append((q, qdigest_rank_query(digest, n, q), exact, len(digest), n))
-        return spark.createDataFrame(
-            rows, "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
+        return local_frame(
+            spark, rows, "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
         )

@@ -5,7 +5,8 @@ queries and check the plan properties that matter at 100 TB:
 * column pruning reaches the parquet scan (ReadSchema is minimal),
 * the polygon/cover side is broadcast (no shuffle of the point side),
 * aggregation is partial-before-shuffle (HashAggregate below Exchange),
-* the hot path is whole-stage codegen (no row-at-a-time Python).
+* the hot path is whole-stage codegen (no row-at-a-time Python),
+* driver-built tables are local relations (no Python RDD scan).
 
 Writes PLANS.md.  Re-run after any operator change.
 """
@@ -209,6 +210,14 @@ ALLOW_BNLJ_DENSIFY = {
 def check_scale_killers(name: str, text: str) -> None:
     if "CartesianProduct" in text:
         raise SystemExit(f"plan audit FAILED: CartesianProduct in `{name}`")
+    # A Python RDD scan (``createDataFrame`` from a list) starts a Python
+    # worker per task.  Only its detail entry names the RDD: a
+    # localCheckpoint scan is also ``Scan ExistingRDD`` but runs no Python.
+    if "at applySchemaToPythonRDD" in text:
+        raise SystemExit(
+            f"plan audit FAILED: a Python RDD scan in `{name}` (build driver-side "
+            "tables with session.local_frame)"
+        )
     # count detail entries only — `explain("formatted")` prints each node
     # twice (tree line + numbered detail section)
     n_bnlj = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", text))
@@ -254,7 +263,8 @@ def main() -> None:
         "size-independent).  Checks: minimal ReadSchema (column pruning to",
         "the scan), broadcast polygon side, partial-before-shuffle",
         "aggregation, whole-stage codegen on the hot path, Arrow-batched",
-        "(never per-row) Python.",
+        "(never per-row) Python, driver-built tables as local relations (a",
+        "Python RDD scan fails the audit).",
         "",
     ]
     for name in AUDITED:

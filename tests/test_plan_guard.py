@@ -10,7 +10,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 
+from fast_carpenter_spark import synth
 from fast_carpenter_spark.queries import QUERIES
+from fast_carpenter_spark.queries.snapshot_q import flagship_unit_job
 
 from conftest import SF_DIR
 
@@ -30,12 +32,15 @@ GUARDED = ["pip_tile_agg", "knn", "tile_agg", "radius_join", "sessions_overlap",
            "tile_smooth", "tile_gauss"]
 
 
-def _plan(spark, name):
-    df = QUERIES[name][0](spark, SF_DIR)
+def _explain(df):
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _plan(spark, name):
+    return _explain(QUERIES[name][0](spark, SF_DIR))
 
 
 def test_no_scale_killers_in_cornerstone_plans(spark):
@@ -54,3 +59,21 @@ def test_flagship_scan_stays_pruned(spark):
     text = _plan(spark, "pip_tile_agg")
     reads = re.findall(r"ReadSchema: (struct<[^\n]*)", text)
     assert reads and all(r.strip() == "struct<doc_id:bigint>" for r in reads), reads
+
+
+def test_driver_built_tables_start_no_python_worker(spark, docs):
+    """Driver-built tables (polygons, covers, cutflow meta) enter the plan
+    as Arrow local relations: a Python RDD (``Scan ExistingRDD``) would
+    start a PySpark daemon and a Python worker per task on every run."""
+    polys = synth.polygons_df(spark)
+    assert "LocalTableScan" in _explain(polys)
+    frames = {
+        "polygons": polys,
+        "pip_tile_agg": QUERIES["pip_tile_agg"][0](spark, SF_DIR),
+        "flagship_unit_job": flagship_unit_job(spark)(docs)[0],
+        "cutflow": QUERIES["cutflow"][0](spark, SF_DIR),
+        "demo_pipeline": QUERIES["demo_pipeline"][0](spark, SF_DIR),
+    }
+    for name, df in frames.items():
+        assert "Scan ExistingRDD" not in _explain(df), name
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString(), name

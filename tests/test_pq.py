@@ -1,6 +1,7 @@
 """Product-quantization invariants (oracle parity is covered by the
 parametrized tests/test_queries_oracle.py sweep)."""
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,8 +138,8 @@ def test_materialized_ivfpq_codebook_roundtrip_and_plan(clustered, tmp_path):
     """IVF-PQ analog of the materialization test: the trained RESIDUAL
     codebook commits through the snapshot writer, equals the recurrence's
     own output, and the materialized search is plan-small (no BNLJ,
-    bounded exchanges) while agreeing with the in-plan recurrence oracle
-    (covered value-exactly by the driver sweep)."""
+    bounded exchanges) while agreeing value for value with the DuckDB
+    recurrence oracle."""
     path = str(tmp_path / "ivfpqcb")
     pq.store_trained_ivfpq_codebook(clustered, path, k=32)
     spark = clustered.sparkSession
@@ -157,10 +158,11 @@ def test_materialized_ivfpq_codebook_roundtrip_and_plan(clustered, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
-    # spark result == the spark-dialect recurrence oracle (same integer
-    # fixed point reached by materialized and in-plan training)
-    clustered.createOrReplaceTempView("embeddings_c")
-    oracle = spark.sql(pq.trained_ivfpq_topk_oracle_sql("spark", k=32))
+    # spark result == the DuckDB recurrence oracle over the same clustered
+    # rows (same integer fixed point reached by materialized and in-query
+    # training, in an independent engine)
+    con = duckdb.connect()
+    con.register("embeddings_c", clustered.toArrow())
     a = sorted(map(tuple, topk.collect()))
-    b = sorted(map(tuple, oracle.collect()))
+    b = sorted(con.execute(pq.trained_ivfpq_topk_oracle_sql(k=32)).fetchall())
     assert a == b
