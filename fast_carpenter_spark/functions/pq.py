@@ -759,17 +759,29 @@ def trained_codebook_table(emb: DataFrame, **kw) -> DataFrame:
     )
 
 
-def store_trained_codebook(emb: DataFrame, table_path: str, **kw):
-    """Train once, commit the codebook as a snapshot table.  Returns the
-    Snapshot.  At scale this is the index-build job: the recurrence runs
-    over ``train_filter``'s sample, the commit is k*M_SUB rows."""
+def _store_codebook(table: DataFrame, table_path: str) -> list[tuple[int, int, list[int]]]:
+    """Run the training recurrence ``table`` once, collect its k*M_SUB
+    rows and commit them as a snapshot table through a local relation (the
+    recurrence is not run again for the write).  Returns the rows, sorted
+    as ``load_codebook_rows`` reads them back."""
+    from ..session import local_frame
     from ..sources.snapshot import write_snapshot
 
-    return write_snapshot(
-        trained_codebook_table(emb, **kw).coalesce(1),
+    rows = sorted((r["m"], r["code"], list(r["cent"])) for r in table.collect())
+    write_snapshot(
+        local_frame(table.sparkSession, rows, table.schema).coalesce(1),
         table_path,
         bounds_cols=["m"],
     )
+    return rows
+
+
+def store_trained_codebook(emb: DataFrame, table_path: str, **kw):
+    """Train once, commit the codebook as a snapshot table.  Returns the
+    stored (m, code, cent) rows.  At scale this is the index-build job:
+    the recurrence runs over ``train_filter``'s sample, the commit is
+    k*M_SUB rows."""
+    return _store_codebook(trained_codebook_table(emb, **kw), table_path)
 
 
 def load_codebook_rows(spark, table_path: str) -> list[tuple[int, int, list[int]]]:
@@ -942,14 +954,9 @@ rtbl AS (SELECT vec_id, list_id, {_resid_sql('spark')} AS embedding FROM assigne
 
 
 def store_trained_ivfpq_codebook(emb: DataFrame, table_path: str, **kw):
-    """Train the residual codebook once, commit it as a snapshot table."""
-    from ..sources.snapshot import write_snapshot
-
-    return write_snapshot(
-        trained_ivfpq_codebook_table(emb, **kw).coalesce(1),
-        table_path,
-        bounds_cols=["m"],
-    )
+    """Train the residual codebook once, commit it as a snapshot table.
+    Returns the stored (m, code, cent) rows."""
+    return _store_codebook(trained_ivfpq_codebook_table(emb, **kw), table_path)
 
 
 def trained_ivfpq_topk_from_rows(

@@ -115,6 +115,29 @@ def qdigest_rank_query(
     return u - 1
 
 
+QUANTILE_SCHEMA = "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
+
+
+def quantile_rows(hist) -> list[tuple[int, int, int, int, int]]:
+    """The answer to the standard percentiles ``QD_QS`` from a value
+    histogram of (value, count) pairs: per percentile, the digest's
+    estimate beside the exact quantile, the digest size and n — rows of
+    ``QUANTILE_SCHEMA``."""
+    hist = sorted(hist)
+    digest, n, _t = qdigest_compress({QD_U + v: c for v, c in hist})
+    rows = []
+    for q in QD_QS:
+        target = (q * n + 99) // 100
+        cum, exact = 0, QD_U - 1
+        for v, c in hist:
+            cum += c
+            if cum >= target:
+                exact = v
+                break
+        rows.append((q, qdigest_rank_query(digest, n, q), exact, len(digest), n))
+    return rows
+
+
 def _level_ctes(u: int, dialect_div: str) -> str:
     """The per-level family rule unrolled as chained CTEs (DuckDB
     materializes multiply-referenced CTEs, so no recompute blow-up)."""

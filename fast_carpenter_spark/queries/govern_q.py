@@ -574,24 +574,8 @@ def q_qdigest_quantiles(spark, sf_dir):
         .count()
         .collect()  # bounded: <= QD_U rows — sketch state, not data
     )
-    counts = {_qd.QD_U + r["v"]: r["count"] for r in hist_rows}
-    digest, n, _t = _qd.qdigest_compress(counts)
-    hist = sorted((r["v"], r["count"]) for r in hist_rows)
-    rows = []
-    for q in _qd.QD_QS:
-        target = (q * n + 99) // 100
-        cum, exact = 0, _qd.QD_U - 1
-        for v, c in hist:
-            cum += c
-            if cum >= target:
-                exact = v
-                break
-        rows.append(
-            (q, _qd.qdigest_rank_query(digest, n, q), exact, len(digest), n)
-        )
-    return local_frame(
-        spark, rows, "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
-    )
+    hist = [(r["v"], r["count"]) for r in hist_rows]
+    return local_frame(spark, _qd.quantile_rows(hist), _qd.QUANTILE_SCHEMA)
 
 
 def _o_qdigest_quantiles() -> str:

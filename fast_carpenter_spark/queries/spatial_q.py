@@ -526,7 +526,7 @@ FROM r GROUP BY 1
 
 
 def q_knn_local(spark, sf_dir):
-    """Scale-path kNN (per-cell local search via applyInPandas) — same
+    """Scale-path kNN (per-block local search via mapInArrow) — same
     semantics and oracle as q_knn."""
     from ..spatial.knn import knn_local
 

@@ -16,10 +16,12 @@ deterministic tie-break so the DuckDB oracle reproduces the exact rows
   geodesic): one shared implementation, ``_halo_knn``.  Points shuffle once
   to parent blocks of grid cells (plus a ghost copy to each block their
   ring reaches, enumerated by ``grid.explode_cells`` at the block
-  resolution), and one numpy function per block, ``_knn_block``, ranks
-  the ring candidates of every query cell in two vectorized paths: the
-  block's sparse cells as one flat batch of (query, candidate) pairs with
-  a segmented sort, its point-mass cells as dense 2-D distance blocks.
+  resolution).  Each shuffle partition of blocks crosses into Python once,
+  as Arrow (``mapInArrow``), and one numpy function per block,
+  ``_knn_block``, ranks the ring candidates of every query cell in two
+  vectorized paths: the block's sparse cells as one flat batch of (query,
+  candidate) pairs with a segmented sort, its point-mass cells as dense
+  2-D distance blocks.
   Planar and geodesic differ only in the point embedding (2-D (lon, lat)
   or the unit-sphere chord space), the ring enumeration (constant and
   clamped, or latitude-dependent and wrapped at the antimeridian) and an
@@ -30,7 +32,8 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Callable
+from functools import partial
+from typing import Callable, Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
@@ -276,10 +279,11 @@ def _ragged(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
 def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None,
                k: int) -> tuple:
     """Top-k of every query point of ONE halo block — the numpy body of the
-    halo kernel, a plain function of a pandas group.
+    halo kernel, a plain function of the block's columns.
 
-    ``pdf`` holds the block's members (``_id, _lon, _lat, _cell, _core``):
-    every member is a candidate, ``_core`` marks the queries.  Per query,
+    ``pdf`` maps the block's member columns (``_id, _lon, _lat, _cell,
+    _core``) to arrays — a dict of numpy slices or a pandas frame: every
+    member is a candidate, ``_core`` marks the queries.  Per query,
     the k nearest ring candidates other than itself by (squared distance
     in the ``embed`` space, neighbour id), minus those beyond ``cut2``
     when given.  Returns (query id, neighbour id, rank, squared distance)
@@ -303,14 +307,14 @@ def _knn_block(pdf, ring: _Ring, embed: Callable[..., tuple], cut2: float | None
     32 to 1024 measured the same time on the benchmark's groups."""
     # rows sorted by (cell, id): packed cells order by x then y, so each
     # ring column's y-window is one contiguous slice
-    cell = pdf["_cell"].to_numpy()
-    order = np.lexsort((pdf["_id"].to_numpy(), cell))
+    cell = np.asarray(pdf["_cell"])
+    order = np.lexsort((np.asarray(pdf["_id"]), cell))
     cell = cell[order]
-    ids = pdf["_id"].to_numpy()[order]
-    core = pdf["_core"].to_numpy()[order]
+    ids = np.asarray(pdf["_id"])[order]
+    core = np.asarray(pdf["_core"])[order]
     if not core.any() or len(ids) < 2:
         return (np.empty(0, np.int64),) * 3 + (np.empty(0),)
-    xyz = embed(pdf["_lon"].to_numpy()[order], pdf["_lat"].to_numpy()[order])
+    xyz = embed(np.asarray(pdf["_lon"])[order], np.asarray(pdf["_lat"])[order])
     res, n = ring.res, 1 << ring.res
     # query rows grouped by cell: the queries of qcells[ci] are
     # qrows[qoff[ci]:qoff[ci] + nq[ci]]
@@ -432,6 +436,37 @@ def _topk_pairs(q_rows, pq, pc, ids, xyz, cut2, k) -> tuple:
     return ids[q_rows[pq[m]]], ids[pc[m]], rank[m], d2[m]
 
 
+def _rank_partition(batches: Iterator, *, ring: _Ring, embed: Callable[..., tuple],
+                    cut2: float | None, k: int, schema) -> Iterator:
+    """The halo kernel's Python side: every block of ONE shuffle partition
+    of members, ranked by ``_knn_block``.
+
+    The partition's Arrow batches arrive in shuffle order; they are
+    concatenated, ordered by one ``lexsort`` on (``_gcell``, ``_salt``) and
+    cut where the key changes, so each block's columns are numpy slices.
+    Yields one Arrow batch per block that ranks any pair, typed as the
+    pyarrow ``schema`` (its fields name the first 3 or 4 of the block's
+    (id, neighbor_id, rank, dist2) outputs); an empty partition yields
+    nothing.  Python holds one whole shuffle partition of members at a
+    time (~70k rows x 7 columns at the benchmark grain), not one block."""
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    cols = {c: table.column(c).to_numpy() for c in table.column_names}
+    order = np.lexsort((cols["_salt"], cols["_gcell"]))
+    cols = {c: a[order] for c, a in cols.items()}
+    cut = np.nonzero((np.diff(cols["_gcell"]) != 0) | (np.diff(cols["_salt"]) != 0))[0] + 1
+    for s, e in zip(np.concatenate(([0], cut)), np.append(cut, len(order))):
+        out = _knn_block({c: a[s:e] for c, a in cols.items()}, ring, embed, cut2, k)
+        if len(out[0]):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a, type=f.type) for a, f in zip(out, schema)], schema=schema
+            )
+
+
 def _halo_knn(
     points: DataFrame,
     *,
@@ -454,7 +489,14 @@ def _halo_knn(
     touches (where it is only a candidate).  Interior points — the vast
     majority — land in one block; the shuffle + Arrow transfer is the cost
     at scale, so that replication factor is the number that matters.
-    Inside each block ``_knn_block`` ranks the ring candidates.
+    Members are hash-partitioned on (block, salt), so no block spans two
+    partitions, and each partition enters Python once as Arrow batches
+    (``mapInArrow``, ``_rank_partition``), where ``_knn_block`` ranks the
+    ring candidates block by block.  A per-group ``applyInPandas`` paid a
+    pandas round trip and a Python call per block: on the benchmark's
+    ``knn_geo_halo`` op (local[4]) the kernel's tasks took 0.93-1.30 s
+    that way and take 0.46-0.87 s this way.  No JVM sort precedes the
+    kernel; ``_rank_partition`` orders each partition by block in numpy.
 
     Hot-block skew: a block with > ``hot_threshold`` home points would be
     one straggler task, so hot blocks are SALTED — their queries split
@@ -462,7 +504,8 @@ def _halo_knn(
     candidate is replicated to all salts.  Same results, nsalt-way
     parallel.  ``schema`` names the first 3 or 4 of the block's
     (id, neighbor_id, rank, dist2) outputs."""
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
     res = ring.res
     shift = min(res, group_offset)
@@ -522,13 +565,9 @@ def _halo_knn(
         .drop("_hot", "_my_salt")
     )
 
-    names = [f.split()[0] for f in schema.split(",")]
-
-    def local_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Arrow casts to the declared schema types (rank int / long)
-        return pd.DataFrame(dict(zip(names, _knn_block(pdf, ring, embed, cut2, k))))
-
-    return members.groupBy("_gcell", "_salt").applyInPandas(local_topk, schema=schema)
+    rank = partial(_rank_partition, ring=ring, embed=embed, cut2=cut2, k=k,
+                   schema=to_arrow_schema(_parse_datatype_string(schema)))
+    return members.repartition("_gcell", "_salt").mapInArrow(rank, schema)
 
 
 def knn_local(
@@ -889,7 +928,7 @@ def knn_geo_local(
     within-radius pairs (measured 56M true / 61M candidates at the bench
     grain), so the ring JOIN's cost floor is materializing every pair as
     a shuffled join row.  The kernel evaluates the same pairs as SIMD
-    matrix blocks inside ``applyInPandas`` — the only shuffle is the
+    matrix blocks inside ``mapInArrow`` — the only shuffle is the
     ~1.1x halo replication of the points themselves.
 
     The geodesic metric is the planar kernel's squared-Euclidean form in

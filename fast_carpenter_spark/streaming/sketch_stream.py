@@ -291,30 +291,11 @@ class StreamingQdigest:
     def result(self, spark: SparkSession) -> DataFrame:
         """Sum-merge the histogram deltas, compress once, answer the
         standard percentiles — schema-identical to qdigest_quantiles."""
-        from ..functions.qdigest import (
-            QD_QS,
-            QD_U,
-            qdigest_compress,
-            qdigest_rank_query,
-        )
+        from ..functions.qdigest import QUANTILE_SCHEMA, quantile_rows
 
         deltas = spark.read.option("recursiveFileLookup", "true").parquet(
             self.deltas_dir
         )
         hist_rows = deltas.groupBy("v").agg(F.sum("cnt").alias("cnt")).collect()
-        counts = {QD_U + r["v"]: r["cnt"] for r in hist_rows}
-        digest, n, _t = qdigest_compress(counts)
-        hist = sorted((r["v"], r["cnt"]) for r in hist_rows)
-        rows = []
-        for q in QD_QS:
-            target = (q * n + 99) // 100
-            cum, exact = 0, QD_U - 1
-            for v, c in hist:
-                cum += c
-                if cum >= target:
-                    exact = v
-                    break
-            rows.append((q, qdigest_rank_query(digest, n, q), exact, len(digest), n))
-        return local_frame(
-            spark, rows, "q_pct int, est bigint, exact bigint, digest_size int, n bigint"
-        )
+        hist = [(r["v"], r["cnt"]) for r in hist_rows]
+        return local_frame(spark, quantile_rows(hist), QUANTILE_SCHEMA)

@@ -148,7 +148,9 @@ def summarize(name: str, text: str) -> list[str]:
     n_smj = len(re.findall(r"SortMergeJoin", text))
     n_ex = len(re.findall(r"Exchange", text)) - len(re.findall(r"ReusedExchange", text))
     n_wsc = len(set(re.findall(r"codegen id : (\d+)", text)))
-    n_py = len(re.findall(r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas", text))
+    n_py = len(re.findall(
+        r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsIn(?:Pandas|Arrow)|MapIn(?:Pandas|Arrow)", text
+    ))
     partial = "partial" in text.lower() or re.search(r"HashAggregate.*keys", text)
     notes.append(
         f"{n_bc} broadcast join(s), {n_smj} sort-merge join(s), "

@@ -1,8 +1,10 @@
-"""The halo kernel's numpy block function as a plain function — no Spark.
+"""The halo kernel's Python side as plain functions — no Spark.
 
 ``_knn_block`` is the body ``knn_local`` and ``knn_geo_local`` run per
-(block, salt) group inside ``applyInPandas``.  Here it gets a pandas group
-directly and is compared with a brute-force numpy reference: every query
+(block, salt) group; ``_rank_partition`` is the ``mapInArrow`` function
+that cuts one shuffle partition's Arrow batches into those groups.  Here
+``_knn_block`` gets a pandas group directly and is compared with a
+brute-force numpy reference: every query
 (``_core``) row against every other member inside its ring, ranked by
 (squared distance in the embedding, neighbour id), radius cutoff applied
 when given.  Covers both embeddings, with and without the cutoff, a
@@ -14,12 +16,17 @@ and a spread one, where most cells hold 0-3 points next to one point-mass
 cell.  The spread group runs both of the kernel's paths in one call: the
 flat pair batch for the sparse cells and the 2-D block for the cells whose
 ring reaches the mass (more than ``_DENSE_CANDIDATES`` candidates).
+
+``_rank_partition`` is fed several such groups as one shuffled Arrow
+table and must return the rows ``_knn_block`` gives each group, typed as
+the declared schema.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from fast_carpenter_spark import grid
@@ -30,6 +37,7 @@ from fast_carpenter_spark.spatial.knn import (
     _knn_block,
     _planar_ring,
     _plane,
+    _rank_partition,
     _sphere,
     hav_threshold,
 )
@@ -148,3 +156,55 @@ def test_block_without_queries_is_empty():
     pdf["_core"] = False
     out = _knn_block(pdf, _planar_ring(RES, 1), _plane, None, 3)
     assert [len(a) for a in out] == [0, 0, 0, 0]
+
+
+# Arrow forms of the declared output schemas: knn_local's
+# "doc_id long, neighbor_id long, rank int, dist2 double" and
+# knn_geo_local's "doc_id long, neighbor_id long, rank long"
+SCHEMAS = {
+    False: pa.schema([("doc_id", pa.int64()), ("neighbor_id", pa.int64()),
+                      ("rank", pa.int32()), ("dist2", pa.float64())]),
+    True: pa.schema([("doc_id", pa.int64()), ("neighbor_id", pa.int64()),
+                     ("rank", pa.int64())]),
+}
+
+
+@pytest.mark.parametrize("cutoff", [False, True])
+@pytest.mark.parametrize("geo", [False, True])
+def test_rank_partition_matches_per_block(geo, cutoff):
+    """Several (block, salt) groups, salted and not, sparse and dense, in
+    one partition whose rows arrive shuffled over several batches: the
+    same rows as ``_knn_block`` per group, typed as the declared schema."""
+    ring, embed, cut2 = _case(geo, cutoff)
+    groups = {
+        (7, 0): _group(geo, salted=False, seed=3),
+        (7, 2): _group(geo, salted=True, seed=4),
+        (-2, 0): _group(geo, salted=False, seed=5, spread=True),
+        (40, 1): _group(geo, salted=True, seed=6, spread=True),
+    }
+    want = []
+    for pdf in groups.values():
+        want += list(zip(*_knn_block(pdf, ring, embed, cut2, 5)))
+    members = pd.concat(
+        [pdf.assign(_gcell=g, _salt=np.int32(s)) for (g, s), pdf in groups.items()],
+        ignore_index=True,
+    )
+    members = members.sample(frac=1.0, random_state=0)
+    schema = SCHEMAS[geo]
+    batches = pa.Table.from_pandas(members, preserve_index=False).to_batches(max_chunksize=97)
+    assert len(batches) > 1
+    out = list(_rank_partition(iter(batches), ring=ring, embed=embed, cut2=cut2, k=5,
+                               schema=schema))
+    assert out and all(b.schema == schema for b in out)
+    got = pa.Table.from_batches(out, schema=schema).to_pylist()
+    width = len(schema)
+    assert sorted(tuple(r.values()) for r in got) == sorted(
+        tuple(x.item() for x in row[:width]) for row in want
+    )
+
+
+@pytest.mark.parametrize("geo", [False, True])
+def test_rank_partition_of_empty_partition_yields_nothing(geo):
+    ring, embed, cut2 = _case(geo, cutoff=True)
+    assert list(_rank_partition(iter([]), ring=ring, embed=embed, cut2=cut2, k=3,
+                                schema=SCHEMAS[geo])) == []

@@ -77,3 +77,20 @@ def test_driver_built_tables_start_no_python_worker(spark, docs):
     for name, df in frames.items():
         assert "Scan ExistingRDD" not in _explain(df), name
         assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString(), name
+
+
+def test_halo_knn_crosses_into_python_once_per_partition(spark):
+    """The halo kNN kernel's one Python node is a ``mapInArrow`` straight
+    over the (block, salt) exchange: a per-group ``applyInPandas``
+    (``FlatMapGroupsInPandas``) pays a pandas round trip and a Python call
+    per block, and a sort in front of the kernel keeps the JVM sorter's
+    pages alive."""
+    python_node = re.compile(
+        r"^\(\d+\) (ArrowEvalPython|BatchEvalPython|FlatMapGroupsIn\w+|MapIn\w+"
+        r"|FlatMapCoGroupsIn\w+|WindowInPandas|AggregateInPandas)\b", re.M)
+    for name in ("knn_local", "knn_geo_local"):
+        df = QUERIES[name][0](spark, SF_DIR)
+        assert python_node.findall(_explain(df)) == ["MapInArrow"], name
+        tree = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"MapInArrow [^\n]*\n\W*Exchange hashpartitioning\("
+                         r"_gcell#\d+L, _salt#\d+, \d+\), REPARTITION_BY_COL", tree), name

@@ -18,10 +18,13 @@ def clustered(spark):
 
 @pytest.fixture(scope="module")
 def cb32_rows(clustered, tmp_path_factory):
-    """The k=32 codebook committed through the snapshot writer, read back."""
+    """The k=32 codebook committed through the snapshot writer, read back:
+    the stored artifact equals the recurrence's own output."""
     path = str(tmp_path_factory.mktemp("cb") / "cb")
-    pq.store_trained_codebook(clustered, path, k=32)
-    return pq.load_codebook_rows(clustered.sparkSession, path)
+    trained = pq.store_trained_codebook(clustered, path, k=32)
+    rows = pq.load_codebook_rows(clustered.sparkSession, path)
+    assert rows == trained
+    return rows
 
 
 def _recall(exact, approx) -> dict:
@@ -117,12 +120,6 @@ def test_materialized_codebook_roundtrip_and_plan(clustered, cb32_rows):
     rows = cb32_rows
     assert len(rows) == 32 * pq.M_SUB
     assert all(len(cent) == pq.SUB_DIM for _, _, cent in rows)
-    # stored artifact == the recurrence's own output (same fixed point)
-    direct = sorted(
-        (r["m"], r["code"], list(r["cent"]))
-        for r in pq.trained_codebook_table(clustered, k=32).collect()
-    )
-    assert rows == direct
 
     topk = pq.trained_adc_topk_from_rows(clustered, rows)
     plan = topk._jdf.queryExecution().executedPlan().toString()
@@ -141,16 +138,11 @@ def test_materialized_ivfpq_codebook_roundtrip_and_plan(clustered, tmp_path):
     bounded exchanges) while agreeing value for value with the DuckDB
     recurrence oracle."""
     path = str(tmp_path / "ivfpqcb")
-    pq.store_trained_ivfpq_codebook(clustered, path, k=32)
-    spark = clustered.sparkSession
-    rows = pq.load_codebook_rows(spark, path)
+    trained = pq.store_trained_ivfpq_codebook(clustered, path, k=32)
+    rows = pq.load_codebook_rows(clustered.sparkSession, path)
     assert len(rows) == 32 * pq.M_SUB
-    # stored artifact == the recurrence's own output (same fixed point)
-    direct = sorted(
-        (r["m"], r["code"], list(r["cent"]))
-        for r in pq.trained_ivfpq_codebook_table(clustered, k=32).collect()
-    )
-    assert rows == direct
+    # stored artifact == the recurrence's own output (collected once)
+    assert rows == trained
 
     topk = pq.trained_ivfpq_topk_from_rows(clustered, rows)
     plan = topk._jdf.queryExecution().executedPlan().toString()
