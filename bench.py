@@ -188,8 +188,8 @@ def make_factories(spark: SparkSession, n_docs: int):
         # point-mass denser than the radius — 576M join rows, 85 s),
         # while the kernel's salted hot blocks evaluate it as SIMD chord
         # blocks with stable-argsort tie handling (~1 s of the total).
-        # The ring-join variant stays oracle-checked in the registry
-        # (knn_geo, radius_join_geo) as the sparse-regime building block.
+        # The kernel is the only geodesic kNN; the registry checks it
+        # (knn_geo, knn_geo_local) against the brute-force DuckDB oracle.
         from fast_carpenter_spark.spatial.knn import knn_geo_local
 
         return knn_geo_local(

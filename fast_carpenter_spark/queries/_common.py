@@ -25,7 +25,7 @@ from ..operators.selection import (
 )
 from ..operators.systematics import SystematicWeightsStage
 from ..spatial.join import SpatialJoinStage
-from ..spatial.knn import knn_bounded, knn_oracle_sql, radius_join, radius_join_oracle_sql
+from ..spatial.knn import knn_oracle_sql, radius_join, radius_join_oracle_sql
 from ..spatial.pip import pip_oracle_sql
 from ..spatial.raster import raster_vector_join
 

@@ -11,7 +11,6 @@ from ._common import (
     _load_events,
     flat_spans,
     grid,
-    knn_bounded,
     knn_oracle_sql,
     load_documents,
     pip_oracle_sql,
@@ -153,22 +152,24 @@ def _geo_oracle():
 O_RADIUS_JOIN_GEO = _geo_oracle()
 
 
-def q_knn_geo(spark, sf_dir):
-    """Geodesic bounded kNN: k nearest by great-circle distance within
-    GEO_RADIUS_KM, rank-only output (trig-ulp-safe; see knn_geo)."""
-    from ..spatial.knn import knn_geo
+def q_knn_geo(spark, sf_dir, k=3):
+    """Geodesic bounded kNN through the halo-exchange chord kernel
+    (spatial/knn.py knn_geo_local): the k nearest by great-circle distance
+    within GEO_RADIUS_KM, (distance, id) ties, rank-only output
+    (trig-ulp-safe; see haversine_sql)."""
+    from ..spatial.knn import knn_geo_local
 
     pts = flat_spans(spark, sf_dir).filter("span_idx = 0").select("doc_id", "lon", "lat")
-    return knn_geo(pts, radius_km=GEO_RADIUS_KM, k=3)
+    return knn_geo_local(pts, radius_km=GEO_RADIUS_KM, k=k)
 
 
-def _knn_geo_oracle():
+def _knn_geo_oracle(k=3):
     from ..spatial.knn import knn_geo_oracle_sql
 
     return knn_geo_oracle_sql(
         f"SELECT doc_id, lon, lat FROM ({O_SPANS_FLAT}) WHERE span_idx = 0",
         radius_km=GEO_RADIUS_KM,
-        k=3,
+        k=k,
     )
 
 
@@ -176,29 +177,12 @@ O_KNN_GEO = _knn_geo_oracle()
 
 
 def q_knn_geo_local(spark, sf_dir):
-    """Geodesic bounded kNN through the halo-exchange chord kernel
-    (spatial/knn.py knn_geo_local): same contract as knn_geo — k nearest
-    by great-circle distance within GEO_RADIUS_KM, (distance, id) ties,
-    rank-only output — but executed as blocked SIMD chord math instead of
-    a corpus-sized candidate join.  k=5 to distinguish the row from
-    knn_geo's k=3."""
-    from ..spatial.knn import knn_geo_local
-
-    pts = flat_spans(spark, sf_dir).filter("span_idx = 0").select("doc_id", "lon", "lat")
-    return knn_geo_local(pts, radius_km=GEO_RADIUS_KM, k=5)
+    """q_knn_geo with k=5: the same kernel and contract, a deeper top-k
+    per point."""
+    return q_knn_geo(spark, sf_dir, k=5)
 
 
-def _knn_geo_local_oracle():
-    from ..spatial.knn import knn_geo_oracle_sql
-
-    return knn_geo_oracle_sql(
-        f"SELECT doc_id, lon, lat FROM ({O_SPANS_FLAT}) WHERE span_idx = 0",
-        radius_km=GEO_RADIUS_KM,
-        k=5,
-    )
-
-
-O_KNN_GEO_LOCAL = _knn_geo_local_oracle()
+O_KNN_GEO_LOCAL = _knn_geo_oracle(k=5)
 
 
 def q_poly_overlap(spark, sf_dir):
@@ -431,9 +415,15 @@ KNN_RES, KNN_RING, KNN_K = 5, 1, 3
 
 
 def q_knn(spark, sf_dir):
-    """Bounded-ring kNN over doc representative points (first span)."""
+    """Bounded-ring kNN over doc representative points (first span),
+    through the planar halo-exchange kernel (spatial/knn.py knn_local):
+    the k nearest within KNN_RING cells at KNN_RES by squared (lon, lat)
+    distance, (distance, id) ties, ``dist2`` exact.  Registered twice, as
+    ``knn`` and ``knn_local``."""
+    from ..spatial.knn import knn_local
+
     pts = flat_spans(spark, sf_dir).filter("span_idx = 0").select("doc_id", "lon", "lat")
-    return knn_bounded(pts, res=KNN_RES, ring=KNN_RING, k=KNN_K)
+    return knn_local(pts, res=KNN_RES, ring=KNN_RING, k=KNN_K)
 
 
 O_KNN = knn_oracle_sql(
@@ -523,15 +513,6 @@ SELECT (rn - 1) * 10 // n_pts AS decile, count(*) AS n,
        min(dist2) AS d2_min, max(dist2) AS d2_max
 FROM r GROUP BY 1
 """
-
-
-def q_knn_local(spark, sf_dir):
-    """Scale-path kNN (per-block local search via mapInArrow) — same
-    semantics and oracle as q_knn."""
-    from ..spatial.knn import knn_local
-
-    pts = flat_spans(spark, sf_dir).filter("span_idx = 0").select("doc_id", "lon", "lat")
-    return knn_local(pts, res=KNN_RES, ring=KNN_RING, k=KNN_K)
 
 
 def q_raster_focal(spark, sf_dir):

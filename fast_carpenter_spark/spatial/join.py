@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import grid
 from ..session import local_frame
-from .knn import _ragged
+from .knn import _ragged, check_nsalt
 from .pip import edges_sql, pip_edges_condition_sql
 
 COVER_RESOLUTIONS = (2, 4, 6, 8)
@@ -219,6 +219,13 @@ def polygons_frame(spark, polys: list[dict]) -> DataFrame:
     return local_frame(spark, rows, schema)
 
 
+def _check_strategy(strategy: str) -> None:
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown spatial join strategy {strategy!r}; use one of {STRATEGIES}"
+        )
+
+
 def spatial_join(
     points: DataFrame,
     polys_df: DataFrame,
@@ -251,10 +258,7 @@ def spatial_join(
     ``ValueError``.  The refine is the ray-casting parity test as a
     codegen'd SQL expression.
     """
-    if strategy not in STRATEGIES:
-        raise ValueError(
-            f"unknown spatial join strategy {strategy!r}; use one of {STRATEGIES}"
-        )
+    _check_strategy(strategy)
     if not resolutions:
         raise ValueError("empty polygon cover set")
 
@@ -325,8 +329,11 @@ class SpatialJoinStage:
     max_cells: int = 64
 
     def __post_init__(self) -> None:
-        # the cover classifier trusts the rings: reject bad ones here, not
-        # as mis-tagged cells or a JVM trace at the first action
+        # the cover classifier trusts the rings and pmod trusts the salt
+        # count: reject bad ones here, not as mis-tagged cells or a JVM
+        # trace at the first action
+        _check_strategy(self.strategy)
+        check_nsalt(self.nsalt)
         seen = set()
         for d in self.polygons:
             pid = d["poly_id"]

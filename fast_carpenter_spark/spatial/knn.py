@@ -1,31 +1,31 @@
-"""kNN neighbour lists: cell-ring join forms and the halo-exchange kernel.
+"""kNN neighbour lists and distance self-joins on the cell grid.
 
 Per-document nearest neighbours: each document is represented by its first
 span's point; the top-k win by (distance, neighbour doc_id) — a
 deterministic tie-break so the DuckDB oracle reproduces the exact rows
-(SURVEY.md §7 risk 5).  Two executions of the same contract:
+(SURVEY.md §7 risk 5).  Each kNN contract has one execution, the
+**halo-exchange kernel** (``knn_local`` planar, ``knn_geo_local``
+geodesic), and one reference, a brute-force DuckDB oracle over all pairs
+(``knn_oracle_sql``, ``knn_geo_oracle_sql``).
 
-* **join forms** (``knn_bounded`` planar, ``knn_geo`` geodesic): pure
-  DataFrame algebra — explode each point over its ring cells
-  (``grid.explode_cells``), hash equi-join them against the points-by-cell
-  table (the only shuffle, keyed by BIGINT cell), window ``row_number()``
-  <= k.  The bounded ring makes this a single join round (vs. iterative
-  expansion, SURVEY.md §2.4), but every candidate pair is a shuffled join
-  row: quadratic in any point mass.
-* **halo-exchange kernel** (``knn_local`` planar, ``knn_geo_local``
-  geodesic): one shared implementation, ``_halo_knn``.  Points shuffle once
-  to parent blocks of grid cells (plus a ghost copy to each block their
-  ring reaches, enumerated by ``grid.explode_cells`` at the block
-  resolution).  Each shuffle partition of blocks crosses into Python once,
-  as Arrow (``mapInArrow``), and one numpy function per block,
-  ``_knn_block``, ranks the ring candidates of every query cell in two
-  vectorized paths: the block's sparse cells as one flat batch of (query,
-  candidate) pairs with a segmented sort, its point-mass cells as dense
-  2-D distance blocks.
-  Planar and geodesic differ only in the point embedding (2-D (lon, lat)
-  or the unit-sphere chord space), the ring enumeration (constant and
-  clamped, or latitude-dependent and wrapped at the antimeridian) and an
-  optional radius cutoff.
+Both kernels share one implementation, ``_halo_knn``.  Points shuffle once
+to parent blocks of grid cells (plus a ghost copy to each block their ring
+reaches, enumerated by ``grid.explode_cells`` at the block resolution).
+Each shuffle partition of blocks crosses into Python once, as Arrow
+(``mapInArrow``), and one numpy function per block, ``_knn_block``, ranks
+the ring candidates of every query cell in two vectorized paths: the
+block's sparse cells as one flat batch of (query, candidate) pairs with a
+segmented sort, its point-mass cells as dense 2-D distance blocks.
+Planar and geodesic differ only in the point embedding (2-D (lon, lat) or
+the unit-sphere chord space), the ring enumeration (constant and clamped,
+or latitude-dependent and wrapped at the antimeridian) and an optional
+radius cutoff.  No candidate pair becomes a shuffled row, so a point mass
+costs SIMD distance blocks, not a quadratic join.
+
+The distance self-joins (``radius_join`` planar, ``radius_join_geo``
+geodesic) emit every pair within the radius, so they are cell-ring equi
+joins: each point explodes over its ring cells, one BIGINT-keyed hash join
+against the points by cell, then the exact distance refine.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from functools import partial
 from typing import Callable, Iterator
 
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import grid
 
@@ -49,6 +49,12 @@ def auto_res(n_points: int, target_per_cell: float = 5.0, lo: int = 3, hi: int =
     cells_needed = max(1.0, n_points / target_per_cell)
     res = math.ceil(math.log(cells_needed, 4))
     return max(lo, min(hi, res))
+
+
+def _radius_res(radius_deg: float) -> int:
+    """Grid resolution whose cells are about one radius tall, so a radius
+    ring stays ~3x3 cells."""
+    return max(1, min(20, int(math.floor(math.log2(180.0 / radius_deg)))))
 
 
 def _topk_row_idx(d2, kk):
@@ -129,55 +135,12 @@ def check_k(k: int) -> None:
         raise ValueError(f"k must be >= 1, got {k}")
 
 
-def knn_bounded(
-    points: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = 5,
-    ring: int = 1,
-    k: int = 3,
-) -> DataFrame:
-    """(id, nbr_id, rank, dist2) top-k rows per point."""
-    check_k(k)
-    pts = points.select(
-        F.col(id_col).alias("_id"),
-        F.col(lon_col).alias("_lon"),
-        F.col(lat_col).alias("_lat"),
-        F.expr(grid.cell_x_sql(lon_col, res, "spark")).alias("_cx"),
-        F.expr(grid.cell_y_sql(lat_col, res, "spark")).alias("_cy"),
-    )
-
-    ring_cells = grid.explode_cells(
-        pts, res, f"_cx - {ring}", f"_cx + {ring}", f"_cy - {ring}", f"_cy + {ring}"
-    ).select("_id", "_lon", "_lat", "_cell")
-
-    others = pts.select(
-        F.col("_id").alias("_nbr"),
-        F.col("_lon").alias("_nlon"),
-        F.col("_lat").alias("_nlat"),
-        F.expr(grid.pack_sql(res, "_cx", "_cy")).alias("_cell"),
-    )
-
-    cand = ring_cells.join(others, "_cell").filter(F.col("_id") != F.col("_nbr"))
-    cand = cand.withColumn(
-        "dist2",
-        (F.col("_lon") - F.col("_nlon")) * (F.col("_lon") - F.col("_nlon"))
-        + (F.col("_lat") - F.col("_nlat")) * (F.col("_lat") - F.col("_nlat")),
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("dist2").asc(), F.col("_nbr").asc())
-    out = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_id").alias(id_col),
-            F.col("_nbr").alias("neighbor_id"),
-            "rank",
-            "dist2",
-        )
-    )
-    return out
+def check_nsalt(nsalt: int) -> None:
+    """Reject a salt count below 1 before any plan is built: the salt is
+    ``pmod(hash, nsalt)``, which fails at the first action for 0 and
+    silently yields negative salts below it."""
+    if nsalt < 1:
+        raise ValueError(f"nsalt must be >= 1, got {nsalt}")
 
 
 # --- halo-exchange kernel (shared by knn_local and knn_geo_local) -----------
@@ -583,15 +546,19 @@ def knn_local(
     nsalt: int = 16,
     group_offset: int = 5,
 ) -> DataFrame:
-    """Scale-path kNN: identical semantics to ``knn_bounded`` (ring
-    candidates, (dist2, id) tie-break) executed as the halo-exchange
-    kernel (``_halo_knn``) on the planar (lon, lat) embedding.  The ring
-    clamps at the grid edge (no antimeridian wrap), like the join form.
-    With ``ring`` below the block size a point replicates to at most 4
-    blocks (measured ~1.2x total vs the 9x of replicating every point to
-    all (2R+1)^2 ring cells); wider rings are enumerated in full.  Hot
-    blocks (> ``hot_threshold`` points) salt over ``nsalt`` tasks."""
+    """Planar bounded-ring kNN: (id, neighbor_id, rank, dist2), the k
+    nearest other points among those whose cell at grid ``res`` lies
+    within ``ring`` cells (Chebyshev) of the query's, by squared (lon, lat)
+    distance, ties by neighbour id — the rows of :func:`knn_oracle_sql`,
+    ``dist2`` bit for bit.  Executed as the halo-exchange kernel
+    (``_halo_knn``) on the planar embedding; the ring clamps at the grid
+    edge (no antimeridian wrap).  With ``ring`` below the block size a
+    point replicates to at most 4 blocks (measured ~1.2x total vs the 9x
+    of replicating every point to all (2R+1)^2 ring cells); wider rings
+    are enumerated in full.  Hot blocks (> ``hot_threshold`` points) salt
+    over ``nsalt`` tasks."""
     check_k(k)
+    check_nsalt(nsalt)
     return _halo_knn(
         points, id_col=id_col, lon_col=lon_col, lat_col=lat_col,
         ring=_planar_ring(res, ring), embed=_plane, cut2=None, k=k,
@@ -640,7 +607,7 @@ def radius_join(
     refines.  One BIGINT-keyed shuffle join; resolution defaults to cells
     about one radius tall so the ring stays ~3x3."""
     if res is None:
-        res = max(1, min(20, int(math.floor(math.log2(180.0 / radius)))))
+        res = _radius_res(radius)
     n = 1 << res
     rx = max(1, math.ceil(radius / (360.0 / n)))
     ry = max(1, math.ceil(radius / (180.0 / n)))
@@ -731,7 +698,7 @@ def hav_threshold(radius_km: float) -> float:
     return math.sin(radius_km / (2.0 * EARTH_KM)) ** 2
 
 
-def _geo_ring_candidates(
+def radius_join_geo(
     points: DataFrame,
     *,
     radius_km: float,
@@ -740,19 +707,18 @@ def _geo_ring_candidates(
     lat_col: str = "lat",
     res: int | None = None,
 ) -> DataFrame:
-    """Directed candidate pairs (_id, _nbr != _id, coords) whose cells can
-    contain a point within ``radius_km`` great-circle km.  Candidate cells
-    come from the TRUE bounding box of a geodesic circle (Matuschek's
-    formulation): the latitude extent is the constant radius/EARTH arc,
-    but the longitude extent widens with latitude —
-    delta_lon = asin(sin(r)/cos(lat)) — and a disk crossing a pole spans
-    ALL longitudes.  Longitude offsets wrap modulo the grid (antimeridian
-    pairs are real neighbours), latitude clamps.  One BIGINT-keyed shuffle
-    join, exact refine left to the caller."""
+    """Geodesic DWithin self-join: all pairs (a < b) within ``radius_km``
+    great-circle km.  Candidate cells come from the TRUE bounding box of a
+    geodesic circle (Matuschek's formulation): the latitude extent is the
+    constant radius/EARTH arc, but the longitude extent widens with
+    latitude — delta_lon = asin(sin(r)/cos(lat)) — and a disk crossing a
+    pole spans ALL longitudes.  Longitude offsets wrap modulo the grid
+    (antimeridian pairs are real neighbours), latitude clamps.  One
+    BIGINT-keyed shuffle join, then the exact haversine refine."""
     r_ang = radius_km / EARTH_KM  # radians of arc
     deg_lat = math.degrees(r_ang)
     if res is None:
-        res = max(1, min(20, int(math.floor(math.log2(180.0 / deg_lat)))))
+        res = _radius_res(deg_lat)
     n = 1 << res
     cell_w, cell_h = 360.0 / n, 180.0 / n
     ry = max(1, math.ceil(deg_lat / cell_h))
@@ -788,32 +754,10 @@ def _geo_ring_candidates(
     # hash join BUILT on the compact per-cell point table and STREAM the
     # exploded ring past it — hash beats sort-merge on a BIGINT equi-key
     # and the build side is the smaller one by construction
-    return (
-        ring.join(others.hint("shuffle_hash"), "_cell")
-        .filter(F.col("_id") != F.col("_nbr"))
-    )
-
-
-def radius_join_geo(
-    points: DataFrame,
-    *,
-    radius_km: float,
-    id_col: str = "doc_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-) -> DataFrame:
-    """Geodesic DWithin self-join: all pairs (a < b) within ``radius_km``
-    great-circle km — cell-ring candidates (see _geo_ring_candidates) +
-    exact haversine refine, like the planar variant."""
-    cand = _geo_ring_candidates(
-        points, radius_km=radius_km, id_col=id_col,
-        lon_col=lon_col, lat_col=lat_col, res=res,
-    ).filter(F.col("_id") < F.col("_nbr"))
+    cand = ring.join(others.hint("shuffle_hash"), "_cell").filter(F.col("_id") < F.col("_nbr"))
     # refine in h-space (haversine_hav_sql): the latitude band is a free
     # compare that drops most ring candidates before any trig, and the h
     # threshold is the exact radius image without asin/sqrt per pair
-    deg_lat = math.degrees(radius_km / EARTH_KM)
     hav = haversine_hav_sql("_lon", "_lat", "_nlon", "_nlat")
     return (
         cand.filter(F.expr(f"ABS(_lat - _nlat) <= {deg_lat!r}"))
@@ -822,73 +766,9 @@ def radius_join_geo(
     )
 
 
-def knn_geo(
-    points: DataFrame,
-    *,
-    radius_km: float,
-    k: int = 3,
-    id_col: str = "doc_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-) -> DataFrame:
-    """Geodesic bounded kNN: for each point, its k nearest neighbours by
-    great-circle distance among those within ``radius_km`` (the bounded
-    form every production kNN service ships — an unbounded geodesic kNN
-    would need adaptive ring growth for isolated points, while the radius
-    bound keeps the candidate set one cell-ring join).  Rank ties break on
-    neighbour id.  Distances are NOT emitted: trig builtins differ between
-    engines in the last ulp (haversine_sql note), so the output exposes
-    only (id, neighbor_id, rank) — stable because random-data distance
-    gaps are astronomically larger than 1e-15 rel.
-
-    Density assumption (the 100 TB caveat): the candidate set is built as
-    exploded JOIN ROWS, so its size is Theta(sum over cells of
-    n_cell * n_ring) — a point-mass denser than ``radius_km`` makes this
-    quadratic in the mass (h points within the radius -> h^2 join rows,
-    at ANY radius).  That regime belongs to the halo-exchange kernel
-    (``knn_geo_local``, same contract), whose per-block distance
-    evaluations are SIMD matrix ops and whose hot blocks salt across
-    tasks; bench.py q7 runs it on the full table, point mass included.
-    This join form stays the registered reference the kernel is tested
-    against."""
-    check_k(k)
-    cand = _geo_ring_candidates(
-        points, radius_km=radius_km, id_col=id_col,
-        lon_col=lon_col, lat_col=lat_col, res=res,
-    )
-    return _rank_geo_candidates(cand, radius_km=radius_km, k=k, id_col=id_col)
-
-
-def _rank_geo_candidates(cand: DataFrame, *, radius_km: float, k: int,
-                         id_col: str) -> DataFrame:
-    """Refine + rank directed candidate pairs in h-space
-    (haversine_hav_sql): |dlat| <= r-arc is a free compare that drops the
-    ring-height overshoot before any trig; h <= sin^2(r/2R) is the exact
-    radius filter and ORDER BY h the exact distance order, both without
-    asin/sqrt per candidate pair."""
-    deg_lat = math.degrees(radius_km / EARTH_KM)
-    hav = haversine_hav_sql("_lon", "_lat", "_nlon", "_nlat")
-    cand = (
-        cand.filter(F.expr(f"ABS(_lat - _nlat) <= {deg_lat!r}"))
-        .filter(F.expr(f"{hav} <= {hav_threshold(radius_km)!r}"))
-        .withColumn("_h", F.expr(hav))
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("_h").asc(), F.col("_nbr").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_id").alias(id_col),
-            F.col("_nbr").alias("neighbor_id"),
-            "rank",
-        )
-    )
-
-
 def knn_geo_oracle_sql(points_sql: str, *, radius_km: float, k: int) -> str:
     """DuckDB ground truth: brute-force directed pairs, haversine filter,
-    row_number rank (rank-only output — see knn_geo on trig ulps)."""
+    row_number rank (rank-only output — see haversine_sql on trig ulps)."""
     dist = haversine_sql("a.lon", "a.lat", "b.lon", "b.lat")
     return f"""
 WITH cand AS (
@@ -918,17 +798,18 @@ def knn_geo_local(
     nsalt: int = 16,
     group_offset: int = 5,
 ) -> DataFrame:
-    """Scale-path geodesic bounded kNN: identical output contract to
-    :func:`knn_geo` ((id, neighbor_id, rank), k nearest by great-circle
-    distance within ``radius_km``, ties by neighbour id) executed as the
-    halo-exchange kernel (``_halo_knn``) instead of a corpus-sized
-    candidate join.
+    """Geodesic bounded kNN: (id, neighbor_id, rank), the k nearest other
+    points by great-circle distance within ``radius_km``, ties by
+    neighbour id — the rows of :func:`knn_geo_oracle_sql`.  The radius
+    bound is the form production kNN services ship: an unbounded geodesic
+    kNN would need adaptive ring growth for isolated points.
 
-    Why: at realistic densities most ring candidates are genuine
-    within-radius pairs (measured 56M true / 61M candidates at the bench
-    grain), so the ring JOIN's cost floor is materializing every pair as
-    a shuffled join row.  The kernel evaluates the same pairs as SIMD
-    matrix blocks inside ``mapInArrow`` — the only shuffle is the
+    Executed as the halo-exchange kernel (``_halo_knn``): at realistic
+    densities most ring candidates are genuine within-radius pairs
+    (measured 56M true / 61M candidates at the bench grain), so a ring
+    join's cost floor is a shuffled row per pair, quadratic in any point
+    mass denser than the radius.  The kernel evaluates the same pairs as
+    SIMD matrix blocks inside ``mapInArrow``; the only shuffle is the
     ~1.1x halo replication of the points themselves.
 
     The geodesic metric is the planar kernel's squared-Euclidean form in
@@ -946,10 +827,12 @@ def knn_geo_local(
     cells; the radius cutoff drops pairs beyond it from both.  Hot-block
     skew is salted as in knn_local.
 
-    Like knn_geo, chord^2 values never reach the output (trig ulps differ
-    between numpy / Spark / DuckDB): (id, neighbor_id, rank) only.
+    chord^2 values never reach the output (trig ulps differ between
+    numpy / Spark / DuckDB, see haversine_sql): (id, neighbor_id, rank)
+    only.
     """
     check_k(k)
+    check_nsalt(nsalt)
     if res is None:
         # radius-derived res makes the cell ~ the radius (rings stay 3x3);
         # when the caller supplies the point count, coarsen toward the
@@ -966,8 +849,7 @@ def knn_geo_local(
         # the policy is the fastest grid measured.
         # Capped at 2 levels.  Never finer than the radius res: rings must
         # still span the radius, so finer cells only widen rx.
-        deg_lat = math.degrees(radius_km / EARTH_KM)
-        r_res = max(1, min(20, int(math.floor(math.log2(180.0 / deg_lat)))))
+        r_res = _radius_res(math.degrees(radius_km / EARTH_KM))
         if n_points is None:
             res = r_res
         else:

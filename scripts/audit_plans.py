@@ -17,6 +17,7 @@ import io
 import os
 import re
 import sys
+from collections import Counter
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,7 +33,7 @@ AUDITED = [
     "pip_tile_agg",   # flagship: join + refine + agg
     "tile_agg",       # pure agg
     "cutflow",        # single-pass counters
-    "knn",            # ring-expansion join + top-k
+    "knn",            # planar halo kernel: one (block, salt) exchange, one MapInArrow
     "tile_rollup",    # parent-cell re-aggregation
     "dedup_minhash_lsh",
     "radius_join",
@@ -43,7 +44,7 @@ AUDITED = [
     "events_sessionize",  # two window passes over ONE user_id shuffle
     "tile_quantiles",   # exact percentile agg, partial-before-shuffle
     "radius_join_geo",  # geodesic ring explode + ONE cell-keyed hash join
-    "knn_geo",          # same ring + WindowGroupLimit top-k, no extra shuffle
+    "knn_geo",          # geodesic halo chord kernel at k=3, the plan of knn_geo_local
     "knn_geo_local",    # halo-exchange chord kernel: blocked SIMD, salted hot cells
     "sample_stratified",  # map-side scoring + one stratum-keyed window w/ group-limit
     "poly_overlap",     # band equi join + bbox prefilter + codegen refine (no BNLJ)
@@ -139,18 +140,24 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+# `explain("formatted")` prints each node twice, as a tree line and as a
+# numbered `(N) Node` detail entry: count the detail entries only
+_DETAIL = re.compile(r"^\(\d+\) (\w+)", re.M)
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas",
+                "FlatMapGroupsInArrow", "MapInPandas", "MapInArrow")
+
+
 def summarize(name: str, text: str) -> list[str]:
     notes = []
     reads = sorted(set(re.findall(r"ReadSchema: (struct<[^\n]*)", text)))
     for r in reads:
         notes.append(f"scan reads `{r[:110]}`")
-    n_bc = len(re.findall(r"BroadcastHashJoin", text))
-    n_smj = len(re.findall(r"SortMergeJoin", text))
-    n_ex = len(re.findall(r"Exchange", text)) - len(re.findall(r"ReusedExchange", text))
+    nodes = Counter(_DETAIL.findall(text))
+    n_bc = nodes["BroadcastHashJoin"]
+    n_smj = nodes["SortMergeJoin"]
+    n_ex = nodes["Exchange"] + nodes["BroadcastExchange"]
     n_wsc = len(set(re.findall(r"codegen id : (\d+)", text)))
-    n_py = len(re.findall(
-        r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsIn(?:Pandas|Arrow)|MapIn(?:Pandas|Arrow)", text
-    ))
+    n_py = sum(nodes[n] for n in PYTHON_NODES)
     partial = "partial" in text.lower() or re.search(r"HashAggregate.*keys", text)
     notes.append(
         f"{n_bc} broadcast join(s), {n_smj} sort-merge join(s), "
@@ -220,9 +227,7 @@ def check_scale_killers(name: str, text: str) -> None:
             f"plan audit FAILED: a Python RDD scan in `{name}` (build driver-side "
             "tables with session.local_frame)"
         )
-    # count detail entries only — `explain("formatted")` prints each node
-    # twice (tree line + numbered detail section)
-    n_bnlj = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", text))
+    n_bnlj = Counter(_DETAIL.findall(text))["BroadcastNestedLoopJoin"]
     if not n_bnlj:
         return
     if name in ALLOW_BNLJ_GRIDSYNTH:

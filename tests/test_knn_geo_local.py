@@ -1,13 +1,14 @@
-"""knn_geo_local == knn_geo on adversarial geometry.
+"""knn_geo_local == the DuckDB oracle on adversarial geometry.
 
-The local kernel (halo-exchange blocks + unit-sphere chord SIMD) must be
-output-identical to the ring-join reference implementation — same bounded
-kNN contract, same (distance, neighbor_id) tie order — across the shapes
-that break naive grid kernels: antimeridian-straddling clusters (wrapped
-block columns), polar clusters (full-circle rings), exact duplicate
-positions (deep tie classes broken by neighbour id), hot-cell salting,
-multi-block-column rings (the >2-column replication case), and over-fine
-resolutions whose rings span several block rows.
+The halo kernel (blocks + unit-sphere chord SIMD) must give exactly the
+rows of ``knn_geo_oracle_sql`` — brute-force haversine over all pairs,
+same bounded kNN contract, same (distance, neighbor_id) tie order — over
+the same points, across the shapes that break naive grid kernels:
+antimeridian-straddling clusters (wrapped block columns), polar clusters
+(full-circle rings), exact duplicate positions (deep tie classes broken by
+neighbour id), hot-cell salting, multi-block-column rings (the >2-column
+replication case), and over-fine resolutions whose rings span several
+block rows.
 """
 
 import sys
@@ -17,7 +18,7 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
-from fast_carpenter_spark.spatial.knn import knn_geo, knn_geo_local
+from fast_carpenter_spark.spatial.knn import knn_geo_local, knn_geo_oracle_sql
 
 
 def _points(spark):
@@ -50,16 +51,23 @@ def _pairs(df):
 
 
 @pytest.fixture(scope="module")
-def pts(spark):
+def pts(spark, duck):
     df = _points(spark)
     df.cache().count()
+    duck.register("knn_geo_pts", df.toPandas())
     yield df
+    duck.unregister("knn_geo_pts")
     df.unpersist()
 
 
+def _oracle(duck, radius_km, k):
+    sql = knn_geo_oracle_sql("SELECT * FROM knn_geo_pts", radius_km=radius_km, k=k)
+    return sorted(duck.execute(sql).fetchall())
+
+
 @pytest.fixture(scope="module")
-def ring_300(pts):
-    return _pairs(knn_geo(pts, radius_km=300.0, k=3))
+def ring_300(pts, duck):
+    return _oracle(duck, 300.0, 3)
 
 
 def test_default_res(pts, ring_300):
@@ -94,14 +102,14 @@ def test_small_blocks(pts, ring_300):
     assert got == ring_300
 
 
-def test_overfine_res(pts):
+def test_overfine_res(pts, duck):
     # res 10 at 800 km: ry = 41 spans multiple block ROWS and polar rings
     # span every block column — the enumeration must cover both
     got = _pairs(knn_geo_local(pts, radius_km=800.0, k=5, res=10))
-    assert got == _pairs(knn_geo(pts, radius_km=800.0, k=5))
+    assert got == _oracle(duck, 800.0, 5)
 
 
-def test_large_radius_small_grid(pts):
+def test_large_radius_small_grid(pts, duck):
     # 800 km at res 7: wide rings, pole-crossing disks, coarse blocks
-    want = _pairs(knn_geo(pts, radius_km=800.0, k=5))
+    want = _oracle(duck, 800.0, 5)
     assert _pairs(knn_geo_local(pts, radius_km=800.0, k=5, res=7)) == want

@@ -182,20 +182,24 @@ def test_hilbert_layout_key_is_codegen_sql_equal_to_numpy(spark):
 
 def test_knn_rejects_k_below_one(spark, spans):
     from fast_carpenter_spark.plans.pipeline import KnnStage
-    from fast_carpenter_spark.spatial.knn import (
-        knn_bounded, knn_geo, knn_geo_local, knn_local,
-    )
+    from fast_carpenter_spark.spatial.knn import knn_geo_local, knn_local
 
     pts = spans.select("doc_id", "lon", "lat")
     for k in (0, -1):
         for call in (
-            lambda: knn_bounded(pts, k=k),
             lambda: knn_local(pts, k=k),
-            lambda: knn_geo(pts, radius_km=50.0, k=k),
             lambda: knn_geo_local(pts, radius_km=50.0, k=k),
             lambda: KnnStage(name="knn", k=k),
         ):
             with pytest.raises(ValueError, match="k must be >= 1"):
+                call()
+    # a salt count below 1 fails before any plan, not as a JVM pmod error
+    for nsalt in (0, -3):
+        for call in (
+            lambda: knn_local(pts, hot_threshold=1, nsalt=nsalt),
+            lambda: knn_geo_local(pts, radius_km=50.0, hot_threshold=1, nsalt=nsalt),
+        ):
+            with pytest.raises(ValueError, match=f"nsalt must be >= 1, got {nsalt}"):
                 call()
 
 

@@ -27,9 +27,13 @@ GUARDED = ["pip_tile_agg", "knn", "tile_agg", "radius_join", "sessions_overlap",
            # the other two join strategies' queries: the refine (_inside OR
            # ray-cast) must stay a condition of the polygon hash join
            "pip_join_salted", "pip_anti",
-           # the join forms and tile smoothers on the shared cell enumerator
+           # the geodesic kNN at k=3, and the join forms and tile smoothers
+           # on the shared cell enumerator
            "knn_geo", "radius_join_geo", "segment_join", "dbscan",
            "tile_smooth", "tile_gauss"]
+# exchanges (hash and broadcast) of the iterative dedup_cluster's final plan
+# at sf0.001: 2 measured, counted by detail entry
+DEDUP_CLUSTER_MAX_EXCHANGES = 2
 
 
 def _explain(df):
@@ -50,6 +54,10 @@ def test_no_scale_killers_in_cornerstone_plans(spark):
         assert not re.search(r"\(\d+\) BroadcastNestedLoopJoin", text), name
         # no row-at-a-time Python in any guarded plan
         assert "BatchEvalPython" not in text, name
+        if name == "dedup_cluster":
+            # one detail entry per node; the tree line would count it twice
+            n_ex = len(re.findall(r"^\(\d+\) (?:Broadcast)?Exchange\b", text, re.M))
+            assert n_ex <= DEDUP_CLUSTER_MAX_EXCHANGES, n_ex
 
 
 def test_flagship_scan_stays_pruned(spark):
@@ -88,7 +96,7 @@ def test_halo_knn_crosses_into_python_once_per_partition(spark):
     python_node = re.compile(
         r"^\(\d+\) (ArrowEvalPython|BatchEvalPython|FlatMapGroupsIn\w+|MapIn\w+"
         r"|FlatMapCoGroupsIn\w+|WindowInPandas|AggregateInPandas)\b", re.M)
-    for name in ("knn_local", "knn_geo_local"):
+    for name in ("knn", "knn_local", "knn_geo", "knn_geo_local"):
         df = QUERIES[name][0](spark, SF_DIR)
         assert python_node.findall(_explain(df)) == ["MapInArrow"], name
         tree = df._jdf.queryExecution().executedPlan().toString()

@@ -11,7 +11,7 @@ from fast_carpenter_spark import synth
 from fast_carpenter_spark.spatial.join import (
     STRATEGIES, SpatialJoinStage, polygon_covers_local, polygons_frame, spatial_join,
 )
-from fast_carpenter_spark.spatial.knn import knn_bounded, knn_local
+from fast_carpenter_spark.spatial.knn import knn_local, knn_oracle_sql
 
 
 @pytest.fixture(scope="module")
@@ -54,15 +54,19 @@ EDGE_POINTS = [
 ]
 
 
-def test_knn_hot_cell_salting_identical(spark, spans):
+def test_knn_hot_cell_salting_identical(spark, spans, duck):
     pts = spans.filter("span_idx = 0").select("doc_id", "lon", "lat").unionByName(
         spark.createDataFrame(EDGE_POINTS, "doc_id long, lon double, lat double")
     )
+    duck.register("knn_pts", pts.toPandas())
     cols = ["doc_id", "neighbor_id", "rank", "dist2"]
     # (ring, group_offset): the default; a wider ring; 1-cell blocks
     # narrower than the ring, so a ring spans several block columns/rows
     for ring, group_offset in [(1, 5), (2, 5), (2, 0)]:
-        base = rows_sorted(knn_bounded(pts, res=5, ring=ring, k=3), cols)
+        # the brute-force oracle: dist2 bit-equal, not just the ranks
+        base = sorted(duck.execute(
+            knn_oracle_sql("SELECT * FROM knn_pts", res=5, ring=ring, k=3)
+        ).fetchall())
         # hot_threshold=1 forces EVERY populated cell through the salted path
         forced = rows_sorted(
             knn_local(pts, res=5, ring=ring, k=3, hot_threshold=1, nsalt=5,
@@ -189,8 +193,16 @@ _SQUARE = {"poly_id": "ok", "region": "r", "weight": 1,
     ({"poly_id": "inf", "ring_lon": [0.0, 1.0, 1.0], "ring_lat": [0.0, 1.0, -float("inf")]},
      "'inf'.*non-finite"),
     ({"poly_id": "ok"}, "duplicate poly_id 'ok'"),
+    # stage settings, checked at construction too: pmod by a zero salt
+    # count is a JVM error at the first action, a negative one is silent
+    ({"strategy": "salted", "nsalt": 0}, "nsalt must be >= 1, got 0"),
+    ({"strategy": "salted", "nsalt": -3}, "nsalt must be >= 1, got -3"),
+    ({"strategy": "salt"}, "unknown spatial join strategy 'salt'"),
 ])
 def test_join_stage_rejects_bad_rings(bad, message):
     SpatialJoinStage(name="v", polygons=[_SQUARE])  # integer coordinates pass
+    stage = {f: bad[f] for f in ("strategy", "nsalt") if f in bad}
+    ring = {f: v for f, v in bad.items() if f not in stage}
+    polygons = [_SQUARE, {**_SQUARE, **ring}] if ring else [_SQUARE]
     with pytest.raises(ValueError, match=message):
-        SpatialJoinStage(name="v", polygons=[_SQUARE, {**_SQUARE, **bad}])
+        SpatialJoinStage(name="v", polygons=polygons, **stage)
